@@ -67,11 +67,26 @@ def schedule_wave(
     may use (beyond ``salt_n * fanin * budget`` candidates, phase-1
     shard size grows past ``fanin * budget`` but exactness holds).
     """
+    return schedule_counted(with_host_counts(frontier), budget, salt_n, fanin)
+
+
+def with_host_counts(frontier: DataFrame, where=None) -> DataFrame:
+    """``frontier`` plus ``_host_n``: the number of rows of the row's host
+    (only rows matching ``where`` count, when given; a host with no
+    matching row gets null)."""
+    counted = frontier if where is None else frontier.filter(where)
     # no broadcast hint: at 10^8 hosts the counts side is too big to ship;
     # AQE broadcasts it automatically when it is small
-    counts = frontier.groupBy("host").agg(F.count("*").alias("_host_n"))
-    tagged = frontier.join(counts, on="host", how="left")
+    counts = counted.groupBy("host").agg(F.count("*").alias("_host_n"))
+    return frontier.join(counts, on="host", how="left")
 
+
+def schedule_counted(
+    tagged: DataFrame, budget: int, salt_n: int = 16, fanin: int = 4
+) -> tuple[DataFrame, DataFrame]:
+    """``schedule_wave`` over rows that already carry their host's row
+    count as ``_host_n`` (see ``with_host_counts``), so a caller that has
+    materialized the counts does not recompute them per output branch."""
     under = tagged.filter(F.col("_host_n") <= budget).drop("_host_n")
     over = tagged.filter(F.col("_host_n") > budget)
 
