@@ -169,7 +169,6 @@ def crawl_run(spark, corpus_path: str, waves: int = 2) -> tuple[float, int]:
         # MLS_TAIL_RANK implies lazy_deferred — frontier/tail.py)
         lazy_deferred=os.environ.get("MLS_LAZY_DEFERRED") == "1"
         or os.environ.get("MLS_TAIL_RANK") == "1",
-        tail_rank=os.environ.get("MLS_TAIL_RANK") == "1",
     )
     engine = CrawlEngine(spark, pages, cfg)
     t0 = time.time()

@@ -193,8 +193,7 @@ class CrawlConfig:
     # bucketed corpus + per-wave schedules live there). The one-time
     # corpus write is the ingest cost a warehouse pays anyway.
     bucketed_fetch: bool = False
-    # deep-frontier mode: keep the standing DEFERRED tail in its own
-    # per-wave state snapshot instead of re-routing it through the wave
+    # deep-frontier mode: keep the standing DEFERRED tail out of the wave
     # plan. At a 4:1 frontier:budget ratio the default path sends the
     # whole tail through the seen anti-join, robots filter, route
     # localCheckpoint, rediscovery groupBy, and the frontier_next write
@@ -202,23 +201,18 @@ class CrawlConfig:
     # lazy_deferred the wave routes only (new candidates + each host's
     # head rows): per-host ``top-B(tail ∪ new) == top-B(top-B(tail) ∪
     # new)`` — a row outside the tail's head has ≥ B tail rows above it,
-    # so it can never be scheduled — and the tail update is MERGE-shaped
-    # (delete the ≤ hosts*budget scheduled keys, insert the unscheduled
-    # new candidates; at warehouse scale an Iceberg MERGE touching only
-    # matched files). Output (trace/seen/chunks) is EXACTLY the default
-    # path's — deferred rows never appear in any of them. With a
-    # checkpoint_dir the tail snapshot is persisted per wave (resume
-    # restores it); without one it lives in a localCheckpoint, still out
-    # of the per-wave route/state plans.
+    # so it can never be scheduled. The tail is a rank-materialized
+    # component set (frontier/tail.py, which has the exactness proof):
+    # rows carry a sharded per-host queue rank in a sorted parquet
+    # layout, deletes are wave-scoped tombstones, inserts are ranked
+    # delta appends, and a compaction every tail_compact_every waves
+    # absorbs both — so the per-wave tail cost is a row-group-pruned
+    # heads read plus two small appends, O(hosts*budget + new
+    # candidates), independent of how deep the standing tail is. Output
+    # (trace/seen/chunks) is EXACTLY the default path's. With a
+    # checkpoint_dir the components are persisted per wave (resume
+    # restores them); without one they live in localCheckpoints.
     lazy_deferred: bool = False
-    # rank-materialized tail (requires lazy_deferred): tail rows carry a
-    # sharded per-host queue rank and sorted parquet layout, deletes are
-    # wave-scoped tombstones, inserts are ranked delta appends, and a
-    # compaction every tail_compact_every waves absorbs both — so the
-    # per-wave tail cost is a row-group-pruned heads read plus two small
-    # appends, O(hosts*budget + new candidates), independent of how deep
-    # the standing tail is (frontier/tail.py has the exactness proof).
-    tail_rank: bool = False
     # 0 disables in-band compaction (run it as a maintenance job — at
     # 10^10 tail rows the rewrite does not belong on the wave critical
     # path; see the 16x deep-tail drill in BENCH.md)
@@ -641,8 +635,6 @@ class CrawlEngine:
                 "bucketed_fetch writes the bucketed corpus and per-wave "
                 "schedules under a checkpoint_dir"
             )
-        if self.config.tail_rank and not self.config.lazy_deferred:
-            raise ValueError("tail_rank is a refinement of lazy_deferred")
         # formatted plan of each wave's state anti-join (bucketed mode):
         # lets tests pin the exchange-free property on the REAL wave join
         self.antijoin_plans: List[str] = []
@@ -700,24 +692,6 @@ class CrawlEngine:
                 ),
             )
         return self._snap_tables
-
-    def _deferred_table(self):
-        """Third snapshot table of bucketed-state + lazy_deferred mode:
-        the standing tail, canon_url-bucketed like frontier/seen so the
-        per-wave tail joins (head extraction scan, tail-minus-scheduled,
-        rediscovery anti-join) read a co-located layout instead of
-        re-shuffling the tail every wave."""
-        if getattr(self, "_deferred_snap", None) is None:
-            from ..state.iceberg_standin import SnapshotTable  # noqa: PLC0415
-
-            assert self.checkpoint_dir is not None
-            self._deferred_snap = SnapshotTable(
-                self.spark,
-                os.path.join(self.checkpoint_dir, "state", "deferred"),
-                f"{self._tbl_prefix}_deferred",
-                buckets=self.config.state_buckets,
-            )
-        return self._deferred_snap
 
     def _frontier_from_seeds(self, seeds) -> DataFrame:
         """seeds: list[str] or a DataFrame with a ``url`` column (the
@@ -875,13 +849,13 @@ class CrawlEngine:
         cfg = self.config
         frontier: Optional[DataFrame]
         seen: Optional[DataFrame]
-        # standing deferred tail (lazy_deferred mode); None = empty
-        deferred_state: Optional[DataFrame] = None
         start_wave = 0
-        ranked_tail = None
-        if cfg.lazy_deferred and cfg.tail_rank:
-            from .tail import RankedTail  # noqa: PLC0415
+        # tail.py imports this module's FRONTIER_SCHEMA
+        from .tail import RankedTail  # noqa: PLC0415
 
+        # standing deferred tail (lazy_deferred mode)
+        ranked_tail: Optional[RankedTail] = None
+        if cfg.lazy_deferred:
             ranked_tail = RankedTail(
                 self.spark,
                 cfg.budget,
@@ -892,48 +866,43 @@ class CrawlEngine:
         if resume:
             frontier, seen, start_wave = self.resume_state(from_wave)
             if start_wave > 0:
-                # restore the resumed wave's deferred tail from whichever
-                # layout the checkpoint holds (v1 flat snapshot or the
-                # ranked component set). A mode-switch resume stays
-                # correct in every direction: the tail set is rebuilt and
-                # folded into whatever representation THIS config uses
-                # (default mode folds it back into the frontier, where it
-                # re-routes once and rides the default path).
-                waves = [
-                    w for w in self.complete_waves() if w < start_wave
-                ]
-                tail_rows = None
-                dpath = self._ckpt_path(start_wave - 1, "deferred")
-                if os.path.exists(os.path.join(dpath, "_SUCCESS")):
-                    tail_rows = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-                        dpath
+                if os.path.exists(
+                    os.path.join(
+                        self._ckpt_path(start_wave - 1, "deferred"), "_SUCCESS"
                     )
-                else:
-                    from .tail import RankedTail  # noqa: PLC0415
-
-                    restored = RankedTail.restore(
-                        self.spark,
-                        self.checkpoint_dir,
-                        waves,
-                        cfg.budget,
-                        salt_n=cfg.salt_n,
-                        compact_every=cfg.tail_compact_every,
+                ):
+                    # nothing reads the flat per-wave tail snapshot any
+                    # more: resuming past it would drop its URLs silently
+                    raise ValueError(
+                        f"wave={start_wave - 1} holds a flat 'deferred' tail "
+                        "snapshot, a checkpoint layout this engine no longer "
+                        "reads; resume it with the version that wrote it"
                     )
-                    if not restored.is_empty():
-                        # always fold to rows and re-seed rather than
-                        # adopting the components: stored ranks bound
-                        # the superset via the budget/salt/compact
-                        # config in effect WHEN WRITTEN, which a resume
-                        # can change (e.g. a smaller budget would make
-                        # _rk <= B*(age+1) under-read). One re-rank
-                        # pass per resume event buys config-proof
-                        # exactness (tail.py "Crash safety").
-                        tail_rows = restored.all_rows()
+                # restore the resumed wave's ranked tail components. A
+                # mode-switch resume stays correct in either direction:
+                # the tail set is rebuilt and folded into whatever
+                # representation THIS config uses (default mode folds it
+                # back into the frontier, where it re-routes once and
+                # rides the default path). Always fold to rows and
+                # re-seed rather than adopting the components: stored
+                # ranks bound the superset via the budget/salt/compact
+                # config in effect WHEN WRITTEN, which a resume can
+                # change (e.g. a smaller budget would make
+                # _rk <= B*(age+1) under-read). One re-rank pass per
+                # resume event buys config-proof exactness (tail.py
+                # "Crash safety").
+                restored = RankedTail.restore(
+                    self.spark,
+                    self.checkpoint_dir,
+                    [w for w in self.complete_waves() if w < start_wave],
+                    cfg.budget,
+                    salt_n=cfg.salt_n,
+                    compact_every=cfg.tail_compact_every,
+                )
+                tail_rows = restored.all_rows()
                 if tail_rows is not None:
                     if ranked_tail is not None:
                         ranked_tail.seed(start_wave - 1, tail_rows)
-                    elif cfg.lazy_deferred:
-                        deferred_state = tail_rows
                     elif frontier is not None:
                         frontier = frontier.unionByName(tail_rows)
         else:
@@ -987,12 +956,6 @@ class CrawlEngine:
                 sn_snap.overwrite(seen, op_id=f"rebase-wave={start_wave}")
                 seen = sn_snap.read()
             frontier = fr_snap.read()
-            if cfg.lazy_deferred and deferred_state is not None:
-                d_snap = self._deferred_table()
-                d_snap.overwrite(
-                    deferred_state, op_id=f"rebase-wave={start_wave}"
-                )
-                deferred_state = d_snap.read()
 
         all_records: List[DataFrame] = []
         all_chunks: List[DataFrame] = []
@@ -1006,11 +969,7 @@ class CrawlEngine:
 
         for wave in range(start_wave, cfg.max_waves):
             _t = _time.time()
-            tail_live = (
-                not ranked_tail.is_empty()
-                if ranked_tail is not None
-                else deferred_state is not None and not deferred_state.isEmpty()
-            )
+            tail_live = ranked_tail is not None and not ranked_tail.is_empty()
             if frontier.isEmpty() and not tail_live:
                 break
             _t = _tick(f"w{wave} isEmpty", _t)
@@ -1076,7 +1035,7 @@ class CrawlEngine:
             # sequential count() jobs; tagging every candidate with its
             # route and localCheckpointing once gives the same
             # recompute-safety for a single job's fixed cost.
-            if cfg.lazy_deferred:
+            if ranked_tail is not None:
                 allowed = candidates.filter(F.col("_allowed")).drop("_allowed")
                 denied = candidates.filter(~F.col("_allowed")).drop("_allowed")
                 # route only (new candidates + per-host tail heads): the
@@ -1085,20 +1044,10 @@ class CrawlEngine:
                 # is fixed for the crawl; they are never in seen (only
                 # fetched/denied URLs are), so skipping both is exact.
                 sched_in = allowed.withColumn("_src", F.lit("new"))
-                if ranked_tail is not None:
-                    # rank-pruned heads superset: a row-group-pruned
-                    # filter read, no tail window (frontier/tail.py)
-                    heads = ranked_tail.heads_superset(wave)
-                    if heads is not None:
-                        sched_in = sched_in.unionByName(
-                            heads.withColumn("_src", F.lit("head"))
-                        )
-                elif deferred_state is not None:
-                    heads, _rest = schedule_wave(
-                        deferred_state, cfg.budget, cfg.salt_n
-                    )
-                    # one tail scan; heads is <= hosts*budget rows
-                    heads = heads.localCheckpoint(eager=True)
+                # rank-pruned heads superset: a row-group-pruned filter
+                # read, no tail window (frontier/tail.py)
+                heads = ranked_tail.heads_superset(wave)
+                if heads is not None:
                     sched_in = sched_in.unionByName(
                         heads.withColumn("_src", F.lit("head"))
                     )
@@ -1135,7 +1084,7 @@ class CrawlEngine:
                 )
                 scheduled = kept
                 deferred = deferred.unionByName(over_cap)
-            if cfg.lazy_deferred and ranked_tail is not None:
+            if ranked_tail is not None:
                 # one materialization carries everything the wave and the
                 # tail commit need: the schedule, the denials, and the
                 # unscheduled-new inserts, with _src preserved so the
@@ -1179,57 +1128,6 @@ class CrawlEngine:
                     if tail_all is not None
                     else self.spark.createDataFrame([], FRONTIER_SCHEMA)
                 )
-                _t = _tick(f"w{wave} deferred merge", _t)
-            elif cfg.lazy_deferred:
-                # unscheduled NEW candidates are the tail's inserts;
-                # unscheduled head rows are already in the tail snapshot
-                new_inserts = deferred.filter(F.col("_src") == "new").drop("_src")
-                routed = (
-                    scheduled.drop("_src")
-                    .withColumn("_route", F.lit("scheduled"))
-                    .unionByName(denied.withColumn("_route", F.lit("denied")))
-                ).localCheckpoint(eager=True)
-                _t = _tick(f"w{wave} route lc", _t)
-                scheduled = routed.filter(
-                    F.col("_route") == "scheduled"
-                ).drop("_route")
-                denied = routed.filter(F.col("_route") == "denied").drop("_route")
-                # MERGE-shaped tail update: delete this wave's scheduled
-                # keys (<= hosts*budget, broadcast by AQE), insert the
-                # unscheduled new candidates, snapshot per wave. At
-                # warehouse scale this is an Iceberg MERGE whose delete
-                # touches only the files holding scheduled keys; the
-                # standin rewrites the snapshot (one tail scan).
-                if deferred_state is not None:
-                    new_def = deferred_state.join(
-                        scheduled.select("canon_url"),
-                        on="canon_url",
-                        how="left_anti",
-                    ).unionByName(new_inserts)
-                else:
-                    new_def = new_inserts
-                if self.checkpoint_dir is not None:
-                    # the flat per-wave snapshot is the authoritative
-                    # checkpoint (resume/time travel reads it, like
-                    # frontier_next); bucketed_state ALSO commits it to
-                    # the bucketed snapshot table so next wave's tail
-                    # scans read the co-located layout
-                    dpath = self._ckpt_path(wave, "deferred")
-                    new_def.select(FRONTIER_SCHEMA.fieldNames()).write.mode(
-                        "overwrite"
-                    ).parquet(dpath)
-                    deferred_state = self.spark.read.schema(
-                        FRONTIER_SCHEMA
-                    ).parquet(dpath)
-                    if cfg.bucketed_state:
-                        d_snap = self._deferred_table()
-                        d_snap.overwrite(deferred_state, op_id=f"wave={wave}")
-                        deferred_state = d_snap.read()
-                        d_snap.expire_snapshots(keep_last=2)
-                else:
-                    deferred_state = new_def.localCheckpoint(eager=True)
-                # downstream (rediscovery anti-join) sees the full tail
-                deferred = deferred_state
                 _t = _tick(f"w{wave} deferred merge", _t)
             else:
                 routed = (
@@ -1460,7 +1358,7 @@ class CrawlEngine:
                 dedup_seen, on="canon_url", how="left_anti"
             )
             if cfg.lazy_deferred:
-                # lazy modes: the tail side of the rediscovery dedup is
+                # lazy mode: the tail side of the rediscovery dedup is
                 # the FULL standing tail — a direct left_anti would
                 # shuffle it every wave. Invert: stream the tail once
                 # through an inner join against this wave's (small)
@@ -1468,8 +1366,7 @@ class CrawlEngine:
                 # tail is scanned but never exchanged — then anti-join
                 # the (tiny) hit set. Exact: hits = discovered ∩ tail.
                 # At warehouse scale the scan itself prunes via parquet
-                # bloom/column stats on canon_url; with bucketed tail
-                # storage it is the co-located form.
+                # bloom/column stats on canon_url.
                 tail_hits = deferred.select("canon_url").join(
                     disc_new.select("canon_url").distinct(),
                     on="canon_url",

@@ -1,10 +1,10 @@
 """Rank-materialized deferred tail with tombstoned deletes.
 
-The v1 ``lazy_deferred`` tail (crawler.py) already keeps the standing
-frontier out of the per-wave route/state plans, but still pays two
-full-tail passes per wave: a window scan to extract per-host heads and a
-full rewrite for the MERGE. This module removes both — the design a
-10^10-row frontier table needs:
+The ``lazy_deferred`` crawl mode (crawler.py) keeps the standing
+frontier out of the per-wave route/state plans. A flat tail snapshot
+would still pay two full-tail passes per wave: a window scan to extract
+per-host heads and a full rewrite for the MERGE. This module removes
+both — the design a 10^10-row frontier table needs:
 
 - every tail row is written WITH a per-(host, shard) rank ``_rk``
   (row_number in the politeness queue order, sharded so no mega-host
@@ -45,8 +45,8 @@ localCheckpoints (no resume, e.g. bench legs).
 
 Crash safety: ``restore`` consults only waves whose crawl MANIFEST
 committed, so artifacts from a wave that died mid-commit are ignored
-and overwritten by the deterministic replay (drill:
-``test_tail_rank_crash_resume_ignores_unmanifested_wave``). The crawl
+and overwritten by the deterministic replay (the crash drill in
+``tests/test_ranked_tail.py``). The crawl
 resume path deliberately does NOT adopt restored components as-is: the
 stored ranks bound the heads superset through the budget/salt/compact
 config in effect when they were written, which a resume may change
@@ -66,10 +66,18 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .crawler import FRONTIER_SCHEMA
 from .politeness import order_cols
 
 TAIL_COLS = ["canon_url", "host", "depth", "priority", "attempt"]
+# declared schemas of the persisted components: every read-back passes
+# one, so no persist or restore runs a parquet schema-inference job
+RANKED_SCHEMA = T.StructType(
+    FRONTIER_SCHEMA.fields + [T.StructField("_rk", T.IntegerType())]
+)
+TOMBS_SCHEMA = T.StructType([T.StructField("canon_url", T.StringType(), False)])
 
 
 def _ranked(df: DataFrame, salt_n: int) -> DataFrame:
@@ -114,17 +122,15 @@ class RankedTail:
     tombs: List[_Tombs] = field(default_factory=list)
 
     # -- storage ------------------------------------------------------------
-    def _persist(self, df: DataFrame, wave: int, name: str) -> DataFrame:
+    def _persist(
+        self, df: DataFrame, wave: int, name: str, schema: T.StructType
+    ) -> DataFrame:
+        # counted from parquet footers, or from localCheckpoint blocks
         if self.checkpoint_dir is None:
             return df.localCheckpoint(eager=True)
         path = os.path.join(self.checkpoint_dir, f"wave={wave}", name)
         df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
-
-    def _count(self, df: DataFrame) -> int:
-        # parquet-backed: footer-metadata count (no data scan);
-        # localCheckpoint-backed: a cached-block count
-        return df.count()
+        return self.spark.read.schema(schema).parquet(path)
 
     # -- queries ------------------------------------------------------------
     @property
@@ -194,15 +200,15 @@ class RankedTail:
         small jobs (tomb + delta writes), never a full-tail pass except
         at compaction."""
         tomb_df = self._persist(
-            scheduled_heads.select("canon_url"), wave, "tail_tombs"
+            scheduled_heads.select("canon_url"), wave, "tail_tombs", TOMBS_SCHEMA
         )
-        tn = self._count(tomb_df)
+        tn = tomb_df.count()
         if tn:
             self.tombs.append(_Tombs(wave, tn, tomb_df))
         delta_df = self._persist(
-            _ranked(new_inserts, self.salt_n), wave, "tail_delta"
+            _ranked(new_inserts, self.salt_n), wave, "tail_delta", RANKED_SCHEMA
         )
-        dn = self._count(delta_df)
+        dn = delta_df.count()
         if dn:
             self.deltas.append(_Component(wave, dn, delta_df))
         # compact_every=0 disables in-band compaction: at warehouse
@@ -220,16 +226,16 @@ class RankedTail:
         live = self.all_rows()
         if live is None:
             self.base, self.deltas, self.tombs = None, [], []
-            return
-        base_df = self._persist(_ranked(live, self.salt_n), wave, "tail_base")
-        self.base = _Component(wave, self._count(base_df), base_df)
-        self.deltas, self.tombs = [], []
+        else:
+            self.seed(wave, live)
 
     def seed(self, wave: int, rows: DataFrame) -> None:
-        """Initialize the tail from an un-ranked row set (resume from a
-        v1 flat snapshot, or a mode-switch rebase)."""
-        base_df = self._persist(_ranked(rows, self.salt_n), wave, "tail_base")
-        n = self._count(base_df)
+        """Initialize the tail from an un-ranked row set with fresh
+        ranks (the resume re-rank, and compaction)."""
+        base_df = self._persist(
+            _ranked(rows, self.salt_n), wave, "tail_base", RANKED_SCHEMA
+        )
+        n = base_df.count()
         self.base = _Component(wave, n, base_df) if n else None
         self.deltas, self.tombs = [], []
 
@@ -292,7 +298,9 @@ class RankedTail:
                 base_wave = w
                 break
         if base_wave is not None:
-            df = spark.read.parquet(_ok(base_wave, "tail_base"))
+            df = spark.read.schema(RANKED_SCHEMA).parquet(
+                _ok(base_wave, "tail_base")
+            )
             n = df.count()
             if n:
                 tail.base = _Component(base_wave, n, df)
@@ -306,13 +314,13 @@ class RankedTail:
                 continue
             p = _ok(w, "tail_delta")
             if p:
-                df = spark.read.parquet(p)
+                df = spark.read.schema(RANKED_SCHEMA).parquet(p)
                 n = df.count()
                 if n:
                     tail.deltas.append(_Component(w, n, df))
             p = _ok(w, "tail_tombs")
             if p:
-                df = spark.read.parquet(p)
+                df = spark.read.schema(TOMBS_SCHEMA).parquet(p)
                 n = df.count()
                 if n:
                     tail.tombs.append(_Tombs(w, n, df))

@@ -2,11 +2,10 @@
 """Deep-tail wave-cost drill: per-wave wall time vs standing-tail depth.
 
 The claim under test (BENCH.md round-5, frontier/tail.py): with
-``tail_rank`` the per-wave frontier cost is O(hosts*budget + new
-candidates) — independent of how deep the standing tail is — while the
-v1 ``lazy_deferred`` tail pays two full-tail passes per wave (the heads
-window scan and the MERGE rewrite), and the default mode re-routes the
-entire tail through anti-join/robots/politeness every wave.
+``lazy_deferred`` (the ranked tail) the per-wave frontier cost is
+O(hosts*budget + new candidates) — independent of how deep the standing
+tail is — while the default mode re-routes the entire tail through
+anti-join/robots/politeness every wave.
 
 Setup: seed the frontier with EVERY page of an 8-host corpus, then give
 politeness a budget far below the per-host frontier depth, so a deep
@@ -38,7 +37,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-MODES = ("default", "lazy", "rank")
+MODES = ("default", "rank", "rank0")
 RPS = 250.0  # budget = 2500/host/wave vs ~100k/host standing tail
 WAVE_SECONDS = 10
 MAX_WAVES = 6
@@ -87,7 +86,6 @@ def run_leg(mode: str, corpus_path: str) -> None:
     cfg = CrawlConfig(
         rps=RPS, wave_seconds=WAVE_SECONDS, max_waves=MAX_WAVES, salt_n=16,
         lazy_deferred=mode != "default",
-        tail_rank=mode.startswith("rank"),
         # "rank0": compaction off the wave critical path (maintenance-
         # job posture) — the steady-state per-wave cost
         tail_compact_every=0 if mode == "rank0" else 4,

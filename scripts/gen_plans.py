@@ -146,7 +146,7 @@ scan = next(
     (b for b in tail_s.split("\n\n") if "PushedFilters" in b), ""
 )
 out.append(
-    "## ranked-tail heads read (tail_rank mode)\n\n"
+    "## ranked-tail heads read (lazy_deferred mode)\n\n"
     "**Evidence:** the per-wave tail probe is `_rk <= budget*(age+1)` "
     "over rank-sorted parquet components — the bound reaches the scan "
     "as a PushedFilter (row-group min/max pruning), and NO Window "

@@ -47,13 +47,10 @@ def main() -> int:
                     help="persist frontier/seen as bucketed tables "
                     "(exchange-free anti-join; needs --checkpoint)")
     ap.add_argument("--lazy-deferred", action="store_true",
-                    help="keep the standing deferred tail in its own "
-                    "state snapshot; route only new candidates + per-host "
-                    "heads each wave (deep frontiers)")
-    ap.add_argument("--tail-rank", action="store_true",
-                    help="rank-materialized deferred tail (implies "
-                    "--lazy-deferred): tombstoned deletes + ranked delta "
-                    "appends; per-wave tail cost independent of tail depth")
+                    help="keep the standing deferred tail out of the wave "
+                    "plan as a rank-materialized component set; route only "
+                    "new candidates + per-host heads each wave (deep "
+                    "frontiers; per-wave tail cost independent of tail depth)")
     ap.add_argument("--tail-compact-every", type=int, default=4,
                     help="ranked-tail compaction cadence in waves; 0 keeps "
                     "compaction off the wave critical path (run it as a "
@@ -175,8 +172,7 @@ def main() -> int:
         wave_fetch_cap=args.wave_fetch_cap,
         honor_crawl_delay=args.honor_crawl_delay,
         bucketed_state=args.bucketed_state,
-        lazy_deferred=args.lazy_deferred or args.tail_rank,
-        tail_rank=args.tail_rank,
+        lazy_deferred=args.lazy_deferred,
         tail_compact_every=args.tail_compact_every,
     )
     engine = CrawlEngine(spark, pages, cfg, checkpoint_dir=args.checkpoint)

@@ -1,9 +1,12 @@
-"""tail_rank mode (frontier/tail.py): the deferred tail becomes a
-rank-materialized component set — per-wave cost is a row-group-pruned
-heads read plus two small appends (tombstones + ranked delta), never a
-full-tail window or rewrite. Output must stay EXACTLY equal to the
+"""lazy_deferred mode (frontier/tail.py): the standing deferred tail
+leaves the per-wave route/state plans as a rank-materialized component
+set — per-wave cost is a row-group-pruned heads read plus two small
+appends (tombstones + ranked delta), never a full-tail window or
+rewrite. Output must stay EXACTLY equal to the
 default path: heads_superset returns a superset of the tail's true
-per-host top-B, which schedule_wave then reduces exactly.
+per-host top-B, which schedule_wave then reduces exactly — including
+under a global wave_fetch_cap and across checkpoint resume / mode
+switches.
 """
 
 import pytest
@@ -25,8 +28,9 @@ def _page(title, links):
 
 @pytest.fixture(scope="module")
 def deep_pages(spark):
-    """Same shape as test_lazy_deferred: one mega host far deeper than
-    the per-wave budget, two small hosts, cross links."""
+    """A corpus whose frontier is much deeper than the per-wave budget:
+    one mega host with a 60-page hub fanout (budget will be 2), two
+    small hosts, and cross links so discovery keeps feeding the tail."""
     rows = {}
     hub_links = [f"https://mega.test/p{i}" for i in range(60)]
     rows["https://mega.test/hub"] = _page("hub", hub_links)
@@ -187,7 +191,7 @@ def test_ranked_tail_heads_read_pushes_rank_filter(spark, tmp_path):
 def test_tail_rank_trace_equals_default(spark, deep_pages, base_trace, tmp_path):
     out = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "rk"),
-        lazy_deferred=True, tail_rank=True,
+        lazy_deferred=True,
     )
     assert _trace_set(out) == base_trace
 
@@ -197,7 +201,7 @@ def test_tail_rank_compact_every_wave(spark, deep_pages, base_trace):
     no-checkpoint localCheckpoint storage); output unchanged."""
     out = _crawl(
         spark, deep_pages,
-        lazy_deferred=True, tail_rank=True, tail_compact_every=1,
+        lazy_deferred=True, tail_compact_every=1,
     )
     assert _trace_set(out) == base_trace
 
@@ -206,66 +210,101 @@ def test_tail_rank_with_wave_fetch_cap(spark, deep_pages, tmp_path):
     base = _crawl(spark, deep_pages, wave_fetch_cap=3)
     out = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "rkc"),
-        lazy_deferred=True, tail_rank=True, wave_fetch_cap=3,
+        lazy_deferred=True, wave_fetch_cap=3,
     )
     assert _trace_set(out) == _trace_set(base)
+
+
+def _split_crawl(spark, pages, ckpt, first, then):
+    """Crawl waves 0-2 under config ``first``, then resume the same
+    checkpoint for waves 3-5 under config ``then``; returns the resumed
+    crawl's output."""
+    CrawlEngine(
+        spark, pages,
+        CrawlConfig(rps=0.4, wave_seconds=5, max_waves=3, **first),
+        checkpoint_dir=ckpt,
+    ).crawl(SEEDS)
+    return CrawlEngine(
+        spark, pages,
+        CrawlConfig(rps=0.4, wave_seconds=5, max_waves=6, **then),
+        checkpoint_dir=ckpt,
+    ).crawl(SEEDS, resume=True)
+
+
+def _stitched(full_trace, resumed):
+    """The uninterrupted crawl's waves 0-2 plus the resumed waves."""
+    return sorted([t for t in full_trace if t[1] < 3] + _trace_set(resumed))
 
 
 def test_tail_rank_resume_identical(spark, deep_pages, tmp_path):
     full = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "rf"),
-        lazy_deferred=True, tail_rank=True,
+        lazy_deferred=True,
     )
     full_trace = _trace_set(full)
-
-    part = str(tmp_path / "rp")
-    cfg_short = CrawlConfig(
-        rps=0.4, wave_seconds=5, max_waves=3,
-        lazy_deferred=True, tail_rank=True,
-    )
-    CrawlEngine(spark, deep_pages, cfg_short, checkpoint_dir=part).crawl(SEEDS)
-    eng = CrawlEngine(
-        spark,
-        deep_pages,
-        CrawlConfig(
-            rps=0.4, wave_seconds=5, max_waves=6,
-            lazy_deferred=True, tail_rank=True,
-        ),
-        checkpoint_dir=part,
-    )
-    resumed = eng.crawl(SEEDS, resume=True)
-    early = [t for t in full_trace if t[1] < 3]
-    assert sorted(early + _trace_set(resumed)) == full_trace
+    lazy = {"lazy_deferred": True}
+    resumed = _split_crawl(spark, deep_pages, str(tmp_path / "rp"), lazy, lazy)
+    assert _stitched(full_trace, resumed) == full_trace
 
 
-def test_mode_switch_resume_ranked_to_default(spark, deep_pages, base_trace, tmp_path):
-    """Resuming a ranked checkpoint with default config folds the tail
-    components back into the frontier (RankedTail.restore → all_rows)."""
-    part = str(tmp_path / "rsw")
-    cfg_short = CrawlConfig(
-        rps=0.4, wave_seconds=5, max_waves=3,
-        lazy_deferred=True, tail_rank=True,
-    )
-    CrawlEngine(spark, deep_pages, cfg_short, checkpoint_dir=part).crawl(SEEDS)
-    eng = CrawlEngine(
-        spark, deep_pages,
-        CrawlConfig(rps=0.4, wave_seconds=5, max_waves=6),
-        checkpoint_dir=part,
-    )
-    resumed = eng.crawl(SEEDS, resume=True)
-    early = [t for t in base_trace if t[1] < 3]
-    assert sorted(early + _trace_set(resumed)) == base_trace
+@pytest.mark.parametrize(
+    "first, then",
+    [({"lazy_deferred": True}, {}), ({}, {"lazy_deferred": True})],
+    ids=["ranked_to_default", "default_to_ranked"],
+)
+def test_mode_switch_resume(spark, deep_pages, base_trace, tmp_path, first, then):
+    """Resuming under the other mode equals the uninterrupted crawl.
+    ranked→default folds the tail components back into the frontier
+    (RankedTail.restore → all_rows); default→ranked re-routes the tail
+    riding frontier_next once, and its unscheduled rows become ranked
+    inserts."""
+    resumed = _split_crawl(spark, deep_pages, str(tmp_path / "sw"), first, then)
+    assert _stitched(base_trace, resumed) == base_trace
 
 
-def test_tail_rank_with_bucketed_state(spark, deep_pages, base_trace, tmp_path):
+def test_lazy_deferred_bucketed_state(spark, deep_pages, base_trace, tmp_path):
     """bucketed_state (exchange-free frontier/seen anti-join) composes
-    with tail_rank (component tail): output unchanged."""
-    out = _crawl(
-        spark, deep_pages, ckpt=str(tmp_path / "rb"),
-        lazy_deferred=True, tail_rank=True,
-        bucketed_state=True, state_buckets=4,
+    with the ranked tail: output and resume identity unchanged."""
+    kw = {"lazy_deferred": True, "bucketed_state": True, "state_buckets": 4}
+    full = _crawl(spark, deep_pages, ckpt=str(tmp_path / "bk"), **kw)
+    full_trace = _trace_set(full)
+    assert full_trace == base_trace
+    resumed = _split_crawl(spark, deep_pages, str(tmp_path / "bkp"), kw, kw)
+    assert _stitched(full_trace, resumed) == full_trace
+
+
+def test_lazy_frontier_checkpoint_excludes_tail(spark, deep_pages, tmp_path):
+    """The win being claimed: frontier_next holds only NEW candidates;
+    the ranked tail components hold the rest, and they are disjoint."""
+    ck = str(tmp_path / "lzf")
+    cfg = CrawlConfig(rps=0.4, wave_seconds=5, max_waves=2, lazy_deferred=True)
+    CrawlEngine(spark, deep_pages, cfg, checkpoint_dir=ck).crawl(SEEDS)
+    fr = spark.read.parquet(f"{ck}/wave=1/frontier_next")
+    tail = RankedTail.restore(spark, ck, [0, 1], cfg.budget).all_rows()
+    assert tail is not None and tail.count() > 0, (
+        "deep corpus must produce a standing tail"
     )
-    assert _trace_set(out) == base_trace
+    assert fr.join(tail, on="canon_url", how="inner").count() == 0
+    # deep frontier: the routed checkpoint's frontier is much smaller
+    # than the tail it no longer carries
+    assert fr.count() < tail.count()
+
+
+def test_resume_refuses_flat_deferred_snapshot(spark, deep_pages, tmp_path):
+    """A checkpoint whose last manifested wave holds the old flat
+    ``deferred`` tail snapshot must not resume with that tail dropped."""
+    ck = str(tmp_path / "old")
+    cfg = CrawlConfig(rps=0.4, wave_seconds=5, max_waves=2, lazy_deferred=True)
+    eng = CrawlEngine(spark, deep_pages, cfg, checkpoint_dir=ck)
+    eng.crawl(SEEDS)
+    last = eng.complete_waves()[-1]
+    spark.read.parquet(f"{ck}/wave={last}/frontier_next").write.parquet(
+        f"{ck}/wave={last}/deferred"
+    )
+    with pytest.raises(ValueError, match="'deferred' tail snapshot"):
+        CrawlEngine(spark, deep_pages, cfg, checkpoint_dir=ck).crawl(
+            SEEDS, resume=True
+        )
 
 
 def test_tail_rank_crash_resume_ignores_unmanifested_wave(
@@ -280,14 +319,14 @@ def test_tail_rank_crash_resume_ignores_unmanifested_wave(
 
     full = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "cf"),
-        lazy_deferred=True, tail_rank=True,
+        lazy_deferred=True,
     )
     full_trace = _trace_set(full)
 
     part = str(tmp_path / "cp")
     cfg_short = CrawlConfig(
         rps=0.4, wave_seconds=5, max_waves=3,
-        lazy_deferred=True, tail_rank=True,
+        lazy_deferred=True,
     )
     CrawlEngine(spark, deep_pages, cfg_short, checkpoint_dir=part).crawl(SEEDS)
 
@@ -310,7 +349,7 @@ def test_tail_rank_crash_resume_ignores_unmanifested_wave(
         spark, deep_pages,
         CrawlConfig(
             rps=0.4, wave_seconds=5, max_waves=6,
-            lazy_deferred=True, tail_rank=True,
+            lazy_deferred=True,
         ),
         checkpoint_dir=part,
     )
@@ -331,7 +370,7 @@ def test_tail_rank_with_ttl_recrawl(spark, deep_pages, tmp_path):
     base = _crawl(spark, deep_pages, ttl_waves=3)
     out = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "rt_ttl"),
-        lazy_deferred=True, tail_rank=True, ttl_waves=3,
+        lazy_deferred=True, ttl_waves=3,
     )
     assert _trace_set(out) == _trace_set(base)
 
@@ -358,7 +397,7 @@ def test_tail_rank_with_priorities(spark, deep_pages, tmp_path):
 
     base = run()
     out = run(
-        ckpt=str(tmp_path / "rp2"), lazy_deferred=True, tail_rank=True
+        ckpt=str(tmp_path / "rp2"), lazy_deferred=True
     )
     assert _trace_set(out) == _trace_set(base)
 
@@ -370,7 +409,7 @@ def test_tail_rank_offline_compaction_then_resume(spark, deep_pages, tmp_path):
     the uninterrupted crawl."""
     full = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "mf"),
-        lazy_deferred=True, tail_rank=True, tail_compact_every=0,
+        lazy_deferred=True, tail_compact_every=0,
     )
     full_trace = _trace_set(full)
 
@@ -379,7 +418,7 @@ def test_tail_rank_offline_compaction_then_resume(spark, deep_pages, tmp_path):
         spark, deep_pages,
         CrawlConfig(
             rps=0.4, wave_seconds=5, max_waves=3,
-            lazy_deferred=True, tail_rank=True, tail_compact_every=0,
+            lazy_deferred=True, tail_compact_every=0,
         ),
         checkpoint_dir=part,
     ).crawl(SEEDS)
@@ -388,7 +427,7 @@ def test_tail_rank_offline_compaction_then_resume(spark, deep_pages, tmp_path):
         spark, deep_pages,
         CrawlConfig(
             rps=0.4, wave_seconds=5, max_waves=6,
-            lazy_deferred=True, tail_rank=True, tail_compact_every=0,
+            lazy_deferred=True, tail_compact_every=0,
         ),
         checkpoint_dir=part,
     )
@@ -404,10 +443,3 @@ def test_tail_rank_offline_compaction_then_resume(spark, deep_pages, tmp_path):
     resumed = eng.crawl(SEEDS, resume=True)
     early = [t for t in full_trace if t[1] < 3]
     assert sorted(early + _trace_set(resumed)) == full_trace
-
-
-def test_tail_rank_requires_lazy(spark, deep_pages):
-    with pytest.raises(ValueError, match="tail_rank"):
-        CrawlEngine(
-            spark, deep_pages, CrawlConfig(tail_rank=True)
-        )

@@ -26,6 +26,7 @@ from markdown_lab_spark.frontier.crawler import (
     CrawlConfig,
     CrawlEngine,
 )
+from markdown_lab_spark.frontier.tail import RANKED_SCHEMA, TOMBS_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -204,17 +205,30 @@ def test_written_state_schemas_match_declared(spark, corpus, pages_df, tmp_path)
     CrawlEngine(
         spark,
         pages_df,
-        _cfg(max_waves=3, lazy_deferred=True, seen_compact_every=1),
+        _cfg(
+            lazy_deferred=True,
+            seen_compact_every=1,
+            tail_compact_every=1,  # writes a tail_base within 4 waves
+        ),
         checkpoint_dir=ckpt,
     ).crawl(corpus.seeds)
+    base_wave = min(
+        w
+        for w in range(4)
+        if os.path.exists(os.path.join(ckpt, f"wave={w}", "tail_base"))
+    )
     declared = {
-        "frontier_next": FRONTIER_SCHEMA,
-        "deferred": FRONTIER_SCHEMA,
-        "seen_delta": SEEN_SCHEMA,
-        "seen_compact": SEEN_SCHEMA,
+        "frontier_next": (1, FRONTIER_SCHEMA),
+        "seen_delta": (1, SEEN_SCHEMA),
+        "seen_compact": (1, SEEN_SCHEMA),
+        # the compacting wave's delta and tombstones hold rows
+        "tail_delta": (base_wave, RANKED_SCHEMA),
+        "tail_tombs": (base_wave, TOMBS_SCHEMA),
+        "tail_base": (base_wave, RANKED_SCHEMA),
     }
-    for name, schema in declared.items():
-        written = spark.read.parquet(os.path.join(ckpt, "wave=1", name)).schema
+    for name, (wave, schema) in declared.items():
+        path = os.path.join(ckpt, f"wave={wave}", name)
+        written = spark.read.parquet(path).schema
         assert [(f.name, f.dataType) for f in written] == [
             (f.name, f.dataType) for f in schema
         ], name
