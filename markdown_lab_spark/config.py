@@ -6,7 +6,9 @@ MARKDOWN_LAB_* env overrides, from_dict). Knobs that configured the
 reference's single-process machinery (connection pools, thread counts,
 cache byte quotas) map onto their cluster equivalents — shuffle
 partitioning, Arrow batch sizing, bloom/cuckoo sharding, wave politeness
-— or are intentionally absent because Spark owns that concern.
+— or are intentionally absent because Spark owns that concern. Chunk
+sizes (the crawl's chunk UDF is fixed at 1000/200) and the output format
+(the CLI's ``--format`` flag) are not knobs here either.
 """
 
 from __future__ import annotations
@@ -35,17 +37,8 @@ class EngineConfig:
     # TTL re-crawl (reference cache_ttl=3600 s, config.py:51)
     ttl_waves: Optional[int] = None
 
-    # chunking (reference chunk_size=1000 / chunk_overlap=200)
-    chunk_size: int = 1000
-    chunk_overlap: int = 200
-
     # document limits (reference max_file_size=10MB, config.py:44)
     max_file_size: int = 10_000_000
-
-    # output (reference default_output_format / include_metadata)
-    default_output_format: str = "markdown"
-    include_metadata: bool = True
-    user_agent: str = "MarkdownLabSpark/1.0 (PySpark)"
 
     # URL-seen state (cluster equivalents of the two-level cache)
     bloom_shards: int = 8
@@ -81,7 +74,7 @@ class EngineConfig:
                 )
 
         for name in (
-            "rps", "wave_seconds", "max_waves", "chunk_size", "max_file_size",
+            "rps", "wave_seconds", "max_waves", "max_file_size",
             "bloom_shards", "bloom_capacity_per_shard", "cuckoo_capacity",
             "salt_n", "shuffle_partitions", "arrow_batch_size",
             "max_partition_bytes", "state_buckets",
@@ -95,15 +88,6 @@ class EngineConfig:
         if self.max_retries < 0:
             raise ConfigurationError(
                 "max_retries cannot be negative", error_code="CONFIG_INVALID"
-            )
-        if self.chunk_overlap < 0:
-            raise ConfigurationError(
-                "chunk_overlap cannot be negative", error_code="CONFIG_INVALID"
-            )
-        if self.chunk_overlap >= self.chunk_size:
-            raise ConfigurationError(
-                "chunk_overlap must be less than chunk_size",
-                error_code="CONFIG_INVALID",
             )
         if not (0.0 < self.bloom_fpr < 1.0):
             raise ConfigurationError(
@@ -120,19 +104,12 @@ class EngineConfig:
                 "the bucketed state tables",
                 error_code="CONFIG_INVALID",
             )
-        if self.default_output_format not in ("markdown", "json", "xml"):
-            raise ConfigurationError(
-                "default_output_format must be 'markdown', 'json', or 'xml'",
-                error_code="CONFIG_INVALID",
-            )
 
     # -- env overrides (reference config.py:119-151) ---------------------------
     def _apply_environment_overrides(self) -> None:
         casts = {
             "rps": float, "bloom_fpr": float,
-            "include_metadata": _bool, "bucketed_state": _bool,
-            "default_output_format": str, "user_agent": str,
-            "checkpoint_dir": str,
+            "bucketed_state": _bool, "checkpoint_dir": str,
         }
         for f in fields(self):
             env_var = _ENV_PREFIX + f.name.upper()
@@ -173,8 +150,6 @@ class EngineConfig:
             bloom_capacity_per_shard=self.bloom_capacity_per_shard,
             bloom_fpr=self.bloom_fpr,
             salt_n=self.salt_n,
-            chunk_size=self.chunk_size,
-            chunk_overlap=self.chunk_overlap,
             max_retries=self.max_retries,
             ttl_waves=self.ttl_waves,
             cuckoo_capacity=self.cuckoo_capacity,

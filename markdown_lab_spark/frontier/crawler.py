@@ -46,7 +46,7 @@ from .politeness import (
     cap_schedule_by_delay,
     politeness_budget,
     schedule_counted,
-    schedule_wave,
+    schedule_wave,  # noqa: F401 - perfbench/layers.py traces crawler.schedule_wave
     with_host_counts,
 )
 
@@ -123,8 +123,6 @@ class CrawlConfig:
     bloom_capacity_per_shard: int = 1 << 17
     bloom_fpr: float = 0.01
     salt_n: int = 16
-    chunk_size: int = 1000
-    chunk_overlap: int = 200
     # P2 retry semantics (markdown_lab/core/client.py:160-217): a failed
     # fetch re-enters the next wave with attempt+1 instead of sleeping
     # 2**attempt — wave cadence IS the backoff. attempts = max_retries + 1
@@ -1035,39 +1033,36 @@ class CrawlEngine:
             # sequential count() jobs; tagging every candidate with its
             # route and localCheckpointing once gives the same
             # recompute-safety for a single job's fixed cost.
+            sched_in = candidates
             if ranked_tail is not None:
-                allowed = candidates.filter(F.col("_allowed")).drop("_allowed")
-                denied = candidates.filter(~F.col("_allowed")).drop("_allowed")
                 # route only (new candidates + per-host tail heads): the
                 # tail never re-enters the anti-join/robots/route plan.
                 # Tail rows passed robots when first routed and host_rules
                 # is fixed for the crawl; they are never in seen (only
                 # fetched/denied URLs are), so skipping both is exact.
-                sched_in = allowed.withColumn("_src", F.lit("new"))
+                sched_in = sched_in.withColumn("_src", F.lit("new"))
                 # rank-pruned heads superset: a row-group-pruned filter
                 # read, no tail window (frontier/tail.py)
                 heads = ranked_tail.heads_superset(wave)
                 if heads is not None:
                     sched_in = sched_in.unionByName(
-                        heads.withColumn("_src", F.lit("head"))
+                        heads.withColumn("_allowed", F.lit(True)).withColumn(
+                            "_src", F.lit("head")
+                        )
                     )
-                scheduled, deferred = schedule_wave(
-                    sched_in, cfg.budget, cfg.salt_n
-                )
-            else:
-                # each host's allowed count, materialized once: the
-                # under-budget, over-budget and deferred branches below
-                # push different filters into the count aggregate, so
-                # Spark would recompute it (and its join) per branch
-                tags = with_host_counts(
-                    candidates, where=F.col("_allowed")
-                ).localCheckpoint(eager=True)
-                denied = tags.filter(~F.col("_allowed")).drop("_allowed", "_host_n")
-                scheduled, deferred = schedule_counted(
-                    tags.filter(F.col("_allowed")).drop("_allowed"),
-                    cfg.budget,
-                    cfg.salt_n,
-                )
+            # each host's allowed count, materialized once: the
+            # under-budget, over-budget and deferred branches below
+            # push different filters into the count aggregate, so
+            # Spark would recompute it (and its join) per branch
+            tags = with_host_counts(
+                sched_in, where=F.col("_allowed")
+            ).localCheckpoint(eager=True)
+            denied = tags.filter(~F.col("_allowed")).drop("_allowed", "_host_n")
+            scheduled, deferred = schedule_counted(
+                tags.filter(F.col("_allowed")).drop("_allowed"),
+                cfg.budget,
+                cfg.salt_n,
+            )
             if self.host_delays is not None:
                 scheduled, cut = cap_schedule_by_delay(
                     scheduled, self.host_delays, cfg.wave_seconds, cfg.budget
@@ -1084,43 +1079,27 @@ class CrawlEngine:
                 )
                 scheduled = kept
                 deferred = deferred.unionByName(over_cap)
+            routed = (
+                scheduled.withColumn("_route", F.lit("scheduled"))
+                .unionByName(deferred.withColumn("_route", F.lit("deferred")))
+                .unionByName(denied.withColumn("_route", F.lit("denied")))
+            ).localCheckpoint(eager=True)
+            _t = _tick(f"w{wave} route lc", _t)
+            scheduled = routed.filter(F.col("_route") == "scheduled").drop("_route")
+            deferred = routed.filter(F.col("_route") == "deferred").drop("_route")
+            denied = routed.filter(F.col("_route") == "denied").drop("_route")
             if ranked_tail is not None:
-                # one materialization carries everything the wave and the
-                # tail commit need: the schedule, the denials, and the
-                # unscheduled-new inserts, with _src preserved so the
-                # tombstone set (scheduled rows drawn FROM the tail) is a
-                # cheap filter over local blocks. Unscheduled head-
-                # superset rows are simply dropped — they stay live in
-                # the tail components untouched.
-                routed = (
-                    scheduled.withColumn("_route", F.lit("scheduled"))
-                    .unionByName(
-                        denied.withColumn("_src", F.lit("new")).withColumn(
-                            "_route", F.lit("denied")
-                        )
-                    )
-                    .unionByName(
-                        deferred.filter(F.col("_src") == "new").withColumn(
-                            "_route", F.lit("insert")
-                        )
-                    )
-                ).localCheckpoint(eager=True)
-                _t = _tick(f"w{wave} route lc", _t)
-                sched_tagged = routed.filter(
-                    F.col("_route") == "scheduled"
-                ).drop("_route")
-                denied = routed.filter(F.col("_route") == "denied").drop(
-                    "_route", "_src"
-                )
-                new_inserts = routed.filter(F.col("_route") == "insert").drop(
-                    "_route", "_src"
-                )
+                # tail commit: tombstone the scheduled rows drawn FROM the
+                # tail, insert the unscheduled new ones. Unscheduled head-
+                # superset rows are simply dropped — they stay live in the
+                # tail components untouched.
                 ranked_tail.apply_wave(
                     wave,
-                    sched_tagged.filter(F.col("_src") == "head"),
-                    new_inserts,
+                    scheduled.filter(F.col("_src") == "head"),
+                    deferred.filter(F.col("_src") == "new").drop("_src"),
                 )
-                scheduled = sched_tagged.drop("_src")
+                scheduled = scheduled.drop("_src")
+                denied = denied.drop("_src")
                 # downstream rediscovery anti-join sees the live tail
                 tail_all = ranked_tail.all_rows()
                 deferred = (
@@ -1129,20 +1108,6 @@ class CrawlEngine:
                     else self.spark.createDataFrame([], FRONTIER_SCHEMA)
                 )
                 _t = _tick(f"w{wave} deferred merge", _t)
-            else:
-                routed = (
-                    scheduled.withColumn("_route", F.lit("scheduled"))
-                    .unionByName(deferred.withColumn("_route", F.lit("deferred")))
-                    .unionByName(denied.withColumn("_route", F.lit("denied")))
-                ).localCheckpoint(eager=True)
-                _t = _tick(f"w{wave} route lc", _t)
-                scheduled = routed.filter(
-                    F.col("_route") == "scheduled"
-                ).drop("_route")
-                deferred = routed.filter(
-                    F.col("_route") == "deferred"
-                ).drop("_route")
-                denied = routed.filter(F.col("_route") == "denied").drop("_route")
 
             # 4. fetch = broadcast join against the corpus (stream side =
             # corpus, build side = the small schedule: the corpus is never

@@ -3,7 +3,7 @@
 Wikipedia publishes its dumps as ``.xml.bz2`` multistream archives —
 the largest public webtext corpus outside Common Crawl — so bzip2
 completes the engine's owned archive-format family (gzip/zstd/LZ4/
-Snappy/bzip2). Verification posture matches the rest of the family:
+bzip2). Verification posture matches the rest of the family:
 the decoder is exercised against genuinely foreign streams produced by
 the real library (stdlib ``bz2``) at every level, with multi-block and
 concatenated-stream drills (``tests/test_compression.py``); the hot

@@ -199,7 +199,7 @@ def encode_lz4_frame_store(
 
 
 def _chain_matches(data: bytes, max_offset: int, chain: int = 16):
-    """Greedy longest-match hash chains for the LZ4/Snappy encoders.
+    """Greedy longest-match hash chains for the LZ4 encoders.
     Yields (lit_start, lit_len, offset, match_len) with spec-safe
     margins left to the caller via ``end_margin`` positions."""
     n = len(data)

@@ -3,7 +3,7 @@
 The last archive format public text corpora actually ship in
 (HuggingFace datasets and several CC derivatives publish
 ``.jsonl.xz``); with it the owned decode family covers gzip/zstd/LZ4/
-Snappy/bzip2/xz. Verification posture as always: foreign bitstreams
+bzip2/xz. Verification posture as always: foreign bitstreams
 from the REAL implementations — stdlib ``lzma`` at multiple presets
 and both containers (.xz with CRC32/CRC64/SHA256 checks, and the
 legacy .lzma "alone" format with its end-marker path), plus the xz

@@ -2,7 +2,7 @@
 
 Unlike the mirrored-pair media codecs, every decoder here is verified
 against genuinely foreign bitstreams: pyarrow bundles the reference
-zstd / LZ4 / Snappy compressors, and Spark's JVM ``xxhash64`` anchors
+zstd / LZ4 compressors, and Spark's JVM ``xxhash64`` anchors
 the hash. The store-mode encoders are verified in the other direction —
 the real decompressors must decode our frames.
 """
@@ -22,11 +22,6 @@ from markdown_lab_spark.functions.lz4_codec import (
     decode_lz4_frame,
     encode_lz4_frame_store,
     is_lz4_frame,
-)
-from markdown_lab_spark.functions.snappy_codec import (
-    SnappyError,
-    decode_snappy,
-    encode_snappy_store,
 )
 from markdown_lab_spark.functions.xxhash import xxh32, xxh64
 from markdown_lab_spark.functions.zstd_codec import (
@@ -243,46 +238,6 @@ def test_lz4_content_checksum_tamper_raises():
     frame[-6] ^= 1
     with pytest.raises(Lz4Error):
         decode_lz4_frame(bytes(frame))
-
-
-# ---------------------------------------------------------------------------
-# Snappy
-
-
-@pytest.mark.parametrize("kind", KINDS)
-def test_snappy_decodes_real_streams(kind):
-    for n in SIZES:
-        data = _payload(kind, n, seed=4)
-        assert decode_snappy(
-            pa.compress(data, codec="snappy", asbytes=True)
-        ) == data
-
-
-@given(st.binary(max_size=3000))
-@settings(max_examples=60, deadline=None)
-def test_snappy_fuzz_roundtrip_vs_pyarrow(data):
-    assert decode_snappy(
-        pa.compress(data, codec="snappy", asbytes=True)
-    ) == data
-
-
-def test_snappy_store_encoder_decoded_by_real_snappy():
-    for n in [0, 1, 60, 61, 100, 300000]:
-        data = _payload("text", n, seed=6)
-        enc = encode_snappy_store(data)
-        assert (
-            pa.Codec("snappy").decompress(
-                enc, decompressed_size=len(data), asbytes=True
-            )
-            == data
-        )
-        assert decode_snappy(enc) == data
-
-
-def test_snappy_truncation_raises():
-    comp = pa.compress(_payload("text", 5000), codec="snappy", asbytes=True)
-    with pytest.raises(SnappyError):
-        decode_snappy(comp[: len(comp) // 2])
 
 
 # ---------------------------------------------------------------------------
@@ -554,7 +509,7 @@ def test_zstd_package_merge_lengths_kraft_complete():
 
 
 # ---------------------------------------------------------------------------
-# real LZ4 / Snappy COMPRESSION encoders
+# real LZ4 COMPRESSION encoder
 
 
 @pytest.mark.parametrize("kind", KINDS)
@@ -584,48 +539,23 @@ def test_lz4_real_encoder_decoded_by_real_lz4(kind):
         assert bytes(decode_lz4_block(b)) == data
 
 
-@pytest.mark.parametrize("kind", KINDS)
-def test_snappy_real_encoder_decoded_by_real_snappy(kind):
-    from markdown_lab_spark.functions.snappy_codec import encode_snappy
-
-    for n in [0, 1, 4, 11, 64, 65, 100, 1000, 200000]:
-        data = _payload(kind, n, seed=33)
-        s = encode_snappy(data)
-        assert (
-            pa.Codec("snappy").decompress(
-                s, decompressed_size=n, asbytes=True
-            )
-            == data
-        )
-        assert decode_snappy(s) == data
-
-
-def test_lz4_snappy_encoders_actually_compress():
+def test_lz4_encoder_actually_compresses():
     from markdown_lab_spark.functions.lz4_codec import encode_lz4_frame
-    from markdown_lab_spark.functions.snappy_codec import encode_snappy
 
     data = _payload("text", 200000, seed=33)
-    # 16-deep chains measured BELOW the reference defaults (0.25 vs
-    # 0.40 lz4, 0.21 vs 0.30 snappy) — assert a conservative bound
+    # 16-deep chains measured BELOW the reference default (0.25 vs
+    # 0.40) — assert a conservative bound
     assert len(encode_lz4_frame(data)) < int(len(data) * 0.35)
-    assert len(encode_snappy(data)) < int(len(data) * 0.30)
 
 
 @given(st.binary(max_size=4000))
 @settings(max_examples=50, deadline=None)
-def test_lz4_snappy_real_encoder_fuzz(data):
+def test_lz4_real_encoder_fuzz(data):
     from markdown_lab_spark.functions.lz4_codec import encode_lz4_frame
-    from markdown_lab_spark.functions.snappy_codec import encode_snappy
 
     assert (
         pa.Codec("lz4").decompress(
             encode_lz4_frame(data), decompressed_size=len(data), asbytes=True
-        )
-        == data
-    )
-    assert (
-        pa.Codec("snappy").decompress(
-            encode_snappy(data), decompressed_size=len(data), asbytes=True
         )
         == data
     )

@@ -21,7 +21,7 @@ from markdown_lab_spark.errors import (
 
 def test_defaults_valid():
     cfg = EngineConfig()
-    assert cfg.rps == 1.0 and cfg.chunk_size == 1000
+    assert cfg.rps == 1.0 and cfg.max_retries == 3
 
 
 @pytest.mark.parametrize(
@@ -29,14 +29,18 @@ def test_defaults_valid():
     [
         {"rps": 0},
         {"rps": -1.0},
-        {"chunk_size": 0},
-        {"chunk_overlap": -1},
-        {"chunk_size": 100, "chunk_overlap": 100},
         {"max_retries": -1},
         {"bloom_fpr": 1.5},
         {"ttl_waves": 0},
         {"ttl_waves": 2, "bucketed_state": True},
-        {"default_output_format": "yaml"},
+    ],
+    ids=[
+        "rps_zero",
+        "rps_negative",
+        "max_retries_negative",
+        "bloom_fpr_above_one",
+        "ttl_waves_zero",
+        "ttl_waves_with_bucketed_state",
     ],
 )
 def test_validation_rejects(kw):
@@ -47,11 +51,12 @@ def test_validation_rejects(kw):
 
 def test_env_overrides(monkeypatch):
     monkeypatch.setenv("MARKDOWN_LAB_SPARK_RPS", "2.5")
-    monkeypatch.setenv("MARKDOWN_LAB_SPARK_CHUNK_SIZE", "512")
-    monkeypatch.setenv("MARKDOWN_LAB_SPARK_INCLUDE_METADATA", "false")
+    monkeypatch.setenv("MARKDOWN_LAB_SPARK_MAX_RETRIES", "5")
+    monkeypatch.setenv("MARKDOWN_LAB_SPARK_BUCKETED_STATE", "true")
+    monkeypatch.setenv("MARKDOWN_LAB_SPARK_CHECKPOINT_DIR", "/ckpt")
     cfg = EngineConfig()
-    assert cfg.rps == 2.5 and cfg.chunk_size == 512
-    assert cfg.include_metadata is False
+    assert cfg.rps == 2.5 and cfg.max_retries == 5
+    assert cfg.bucketed_state is True and cfg.checkpoint_dir == "/ckpt"
 
 
 def test_env_override_invalid(monkeypatch):
@@ -64,6 +69,14 @@ def test_env_override_invalid(monkeypatch):
 def test_from_dict_rejects_unknown():
     with pytest.raises(ConfigurationError):
         EngineConfig.from_dict({"no_such_knob": 1})
+
+
+def test_from_dict_rejects_unread_chunk_size():
+    # chunking is fixed at 1000/200 by the crawl's chunk UDF; a chunk_size
+    # setting would be silently ignored, so it is refused instead
+    with pytest.raises(ConfigurationError) as e:
+        EngineConfig.from_dict({"chunk_size": 512})
+    assert e.value.error_code == "CONFIG_INVALID"
 
 
 def test_to_crawl_config_roundtrip():

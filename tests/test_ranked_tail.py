@@ -188,7 +188,7 @@ def test_ranked_tail_heads_read_pushes_rank_filter(spark, tmp_path):
 # -------------------------------------------------------------- engine
 
 
-def test_tail_rank_trace_equals_default(spark, deep_pages, base_trace, tmp_path):
+def test_ranked_tail_trace_equals_default(spark, deep_pages, base_trace, tmp_path):
     out = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "rk"),
         lazy_deferred=True,
@@ -196,7 +196,7 @@ def test_tail_rank_trace_equals_default(spark, deep_pages, base_trace, tmp_path)
     assert _trace_set(out) == base_trace
 
 
-def test_tail_rank_compact_every_wave(spark, deep_pages, base_trace):
+def test_ranked_tail_compact_every_wave(spark, deep_pages, base_trace):
     """compact_every=1 exercises the rewrite path each wave (and the
     no-checkpoint localCheckpoint storage); output unchanged."""
     out = _crawl(
@@ -206,7 +206,7 @@ def test_tail_rank_compact_every_wave(spark, deep_pages, base_trace):
     assert _trace_set(out) == base_trace
 
 
-def test_tail_rank_with_wave_fetch_cap(spark, deep_pages, tmp_path):
+def test_ranked_tail_with_wave_fetch_cap(spark, deep_pages, tmp_path):
     base = _crawl(spark, deep_pages, wave_fetch_cap=3)
     out = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "rkc"),
@@ -236,7 +236,7 @@ def _stitched(full_trace, resumed):
     return sorted([t for t in full_trace if t[1] < 3] + _trace_set(resumed))
 
 
-def test_tail_rank_resume_identical(spark, deep_pages, tmp_path):
+def test_ranked_tail_resume_identical(spark, deep_pages, tmp_path):
     full = _crawl(
         spark, deep_pages, ckpt=str(tmp_path / "rf"),
         lazy_deferred=True,
@@ -307,7 +307,7 @@ def test_resume_refuses_flat_deferred_snapshot(spark, deep_pages, tmp_path):
         )
 
 
-def test_tail_rank_crash_resume_ignores_unmanifested_wave(
+def test_ranked_tail_crash_resume_ignores_unmanifested_wave(
     spark, deep_pages, tmp_path
 ):
     """Crash drill: tail components written by a wave that died before
@@ -361,7 +361,7 @@ def test_tail_rank_crash_resume_ignores_unmanifested_wave(
     shutil.rmtree(part, ignore_errors=True)
 
 
-def test_tail_rank_with_ttl_recrawl(spark, deep_pages, tmp_path):
+def test_ranked_tail_with_ttl_recrawl(spark, deep_pages, tmp_path):
     """TTL re-crawl composes with the ranked tail: an expired URL is
     never IN the tail (only unfetched rows are), so re-admission rides
     the normal new-candidate route; wave-scoped tombstones keep any
@@ -375,7 +375,7 @@ def test_tail_rank_with_ttl_recrawl(spark, deep_pages, tmp_path):
     assert _trace_set(out) == _trace_set(base)
 
 
-def test_tail_rank_with_priorities(spark, deep_pages, tmp_path):
+def test_ranked_tail_with_priorities(spark, deep_pages, tmp_path):
     """PageRank-style host/url priority tables compose with the ranked
     tail: priorities are applied to discovered rows BEFORE insert, so
     the stored per-host queue ranks order by the final priority. Trace
@@ -402,7 +402,7 @@ def test_tail_rank_with_priorities(spark, deep_pages, tmp_path):
     assert _trace_set(out) == _trace_set(base)
 
 
-def test_tail_rank_offline_compaction_then_resume(spark, deep_pages, tmp_path):
+def test_ranked_tail_offline_compaction_then_resume(spark, deep_pages, tmp_path):
     """Maintenance-job compaction (run_crawl --compact-tail posture):
     crawl with in-band compaction disabled, fold the accumulated
     components offline via compact_checkpoint, resume — output equals

@@ -1,11 +1,12 @@
 """Plan pin for a real crawl wave's routing (beside test_plan_guards.py).
 
-Default-mode routing splits a wave's candidates into denied, scheduled
-and deferred branches. Those branches push different filters into the
-robots join and the per-host count aggregate, so Spark shares neither
-between them: unless both are materialized once, each branch recomputes
-them, one Spark job per exchange. Across everything a wave materializes,
-each must appear once.
+Routing splits a wave's candidates into denied, scheduled and deferred
+branches. Those branches push different filters into the robots join and
+the per-host count aggregate, so Spark shares neither between them:
+unless both are materialized once, each branch recomputes them, one
+Spark job per exchange. Across everything a wave materializes, each must
+appear once, with either deferred tail (the ranked tail routes new
+candidates plus tail heads through the same block).
 """
 
 import re
@@ -36,9 +37,13 @@ ROBOTS_SCAN = re.compile(r"^\(\d+\) InMemoryTableScan", re.M)  # cached host_rul
 HOST_COUNT = re.compile(r"^Functions \[1\]: \[count\(1\)\]$", re.M)  # final count
 
 
-@pytest.mark.parametrize("ttl_waves", [None, 2], ids=["bloom", "ttl"])
+@pytest.mark.parametrize(
+    "ttl_waves, lazy_deferred",
+    [(None, False), (2, False), (None, True), (2, True)],
+    ids=["bloom", "ttl", "bloom-ranked", "ttl-ranked"],
+)
 def test_wave_routing_runs_robots_join_and_host_count_once(
-    spark, corpus, pages_df, monkeypatch, ttl_waves
+    spark, corpus, pages_df, monkeypatch, ttl_waves, lazy_deferred
 ):
     frame_cls = type(spark.range(1))
     orig = frame_cls.localCheckpoint
@@ -52,7 +57,13 @@ def test_wave_routing_runs_robots_join_and_host_count_once(
     out = CrawlEngine(
         spark,
         pages_df,
-        CrawlConfig(rps=1.0, wave_seconds=5, max_waves=2, ttl_waves=ttl_waves),
+        CrawlConfig(
+            rps=1.0,
+            wave_seconds=5,
+            max_waves=2,
+            ttl_waves=ttl_waves,
+            lazy_deferred=lazy_deferred,
+        ),
     ).crawl(corpus.seeds)
     assert {r["wave"] for r in out["trace"].select("wave").collect()} == {0, 1}
     robots = sum(len(ROBOTS_SCAN.findall(p)) for p in plans)

@@ -1,5 +1,5 @@
-"""Sources (seed discovery), sinks, format decoration, streaming ingest,
-and physical-plan assertions."""
+"""Sources (seed discovery), sinks, streaming ingest, and physical-plan
+assertions."""
 
 import json
 import os
@@ -12,13 +12,6 @@ from markdown_lab_spark.corpus.generator import (
     generate_corpus,
     write_corpus_parquet,
 )
-from markdown_lab_spark.oracle.formats import (
-    convert_with_metadata,
-    decorate_json,
-    decorate_markdown,
-    decorate_xml,
-)
-from markdown_lab_spark.oracle.markdown_converter import parse_html_to_document
 
 
 @pytest.fixture(scope="module")
@@ -100,27 +93,6 @@ def test_export_urls_csv(spark, tmp_path):
             lines |= set(open(os.path.join(out, fn)).read().splitlines())
     assert "https://e.com/,1.0,2023-01-01" in lines
     assert "https://e.com/x" in lines  # nulls dropped
-
-
-# --- M4 decoration --------------------------------------------------------------
-def test_format_decoration():
-    doc = parse_html_to_document(
-        "<html><head><title>T</title></head><body><p>x</p></body></html>",
-        "https://e.com/p",
-    )
-    md = convert_with_metadata(doc, "markdown", "https://e.com/p", "TS")
-    assert md.startswith("# T\n\n*Source: https://e.com/p*\n*Generated: TS*\n\n")
-    js = convert_with_metadata(doc, "json", "https://e.com/p", "TS")
-    obj = json.loads(js)
-    assert obj["metadata"] == {"source_url": "https://e.com/p", "generated_at": "TS"}
-    xml = convert_with_metadata(doc, "xml", "https://e.com/p", "TS")
-    assert xml.endswith(
-        "<metadata><source_url>https://e.com/p</source_url>"
-        "<generated_at>TS</generated_at></metadata></Document>"
-    )
-    assert decorate_markdown("m", "T", "u", "g")
-    assert decorate_json('{"a":1}', "u", "g")
-    assert decorate_xml("<Document></Document>", "u", "g")
 
 
 # --- streaming ingest ---------------------------------------------------------------
