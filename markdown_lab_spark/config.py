@@ -22,10 +22,6 @@ from .errors import ConfigurationError
 _ENV_PREFIX = "MARKDOWN_LAB_SPARK_"
 
 
-def _bool(x: str) -> bool:
-    return x.lower() in ("true", "1", "yes")
-
-
 @dataclass
 class EngineConfig:
     # politeness / crawl control (reference: requests_per_second=1.0,
@@ -54,10 +50,6 @@ class EngineConfig:
 
     # state
     checkpoint_dir: Optional[str] = None
-    # co-located state joins (exchange-free per-wave anti-join; needs
-    # checkpoint_dir — the bucketed tables are the checkpoint format)
-    bucketed_state: bool = False
-    state_buckets: int = 16
     # seen-delta compaction cadence (None disables); see CrawlConfig
     seen_compact_every: Optional[int] = 8
 
@@ -77,7 +69,7 @@ class EngineConfig:
             "rps", "wave_seconds", "max_waves", "max_file_size",
             "bloom_shards", "bloom_capacity_per_shard", "cuckoo_capacity",
             "salt_n", "shuffle_partitions", "arrow_batch_size",
-            "max_partition_bytes", "state_buckets",
+            "max_partition_bytes",
         ):
             positive(name)
         if self.seen_compact_every is not None and self.seen_compact_every <= 0:
@@ -97,20 +89,10 @@ class EngineConfig:
             raise ConfigurationError(
                 "ttl_waves must be positive when set", error_code="CONFIG_INVALID"
             )
-        if self.ttl_waves is not None and self.bucketed_state:
-            raise ConfigurationError(
-                "bucketed_state and ttl_waves are mutually exclusive: the "
-                "TTL path uses the cuckoo-filter seen set and never reads "
-                "the bucketed state tables",
-                error_code="CONFIG_INVALID",
-            )
 
     # -- env overrides (reference config.py:119-151) ---------------------------
     def _apply_environment_overrides(self) -> None:
-        casts = {
-            "rps": float, "bloom_fpr": float,
-            "bucketed_state": _bool, "checkpoint_dir": str,
-        }
+        casts = {"rps": float, "bloom_fpr": float, "checkpoint_dir": str}
         for f in fields(self):
             env_var = _ENV_PREFIX + f.name.upper()
             raw = os.getenv(env_var)
@@ -154,8 +136,6 @@ class EngineConfig:
             ttl_waves=self.ttl_waves,
             cuckoo_capacity=self.cuckoo_capacity,
             max_file_size=self.max_file_size,
-            bucketed_state=self.bucketed_state,
-            state_buckets=self.state_buckets,
             seen_compact_every=self.seen_compact_every,
         )
 

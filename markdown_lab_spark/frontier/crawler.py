@@ -146,15 +146,6 @@ class CrawlConfig:
     # excluded AT THE SCAN — never shipped through Arrow to the convert
     # UDF — and surface as fetch misses in the trace
     max_file_size: int = 10_000_000
-    # co-located state joins: persist frontier/seen as canon_url-bucketed
-    # tables (same bucket count on both sides) so the per-wave exact
-    # anti-join is an exchange-free sort-merge join — the physical layout
-    # for 10^10-row state, where re-shuffling the seen set every wave
-    # would dominate. Replaces the bloom prefilter (the join is already
-    # co-located; a prefilter would only save local probes). Requires a
-    # checkpoint_dir (the tables ARE the checkpoint format).
-    bucketed_state: bool = False
-    state_buckets: int = 16
     # seen-delta compaction cadence (default checkpoint mode): the flat
     # per-wave rebuild reads every seen_delta dir, which is O(W) dirs per
     # wave and O(W^2) over a long crawl. Every ``seen_compact_every``
@@ -162,8 +153,7 @@ class CrawlConfig:
     # deltas are kept, so time travel to any wave still works) and
     # rebuilds read latest-compact + later deltas: <= compact_every + 1
     # dirs per wave. None disables. (At warehouse scale this is the
-    # Iceberg MERGE/compaction maintenance job; bucketed_state mode
-    # already persists fully-compacted state per wave.)
+    # Iceberg MERGE/compaction maintenance job.)
     seen_compact_every: Optional[int] = 8
     # OPTIONAL global per-wave fetch cap (None = reference behavior:
     # every politeness-scheduled URL fetches). When set, the wave fetches
@@ -181,16 +171,6 @@ class CrawlConfig:
     # reference fetches with a global throttle only (throttle.py), and
     # every pinned trace/gate hash predates this knob.
     honor_crawl_delay: bool = False
-    # co-located fetch join: at cluster scale the default broadcast of
-    # the per-wave schedule ships hosts*budget rows to EVERY executor
-    # (100 MB x 1000 executors); with bucketed_fetch the corpus is
-    # written ONCE as a canon_url-bucketed table (the Iceberg-ingest
-    # analogue) and each wave's schedule is written bucketed too, so the
-    # fetch join is an exchange-free bucket-to-bucket SMJ — no schedule
-    # broadcast, no corpus shuffle. Requires a checkpoint_dir (the
-    # bucketed corpus + per-wave schedules live there). The one-time
-    # corpus write is the ingest cost a warehouse pays anyway.
-    bucketed_fetch: bool = False
     # deep-frontier mode: keep the standing DEFERRED tail out of the wave
     # plan. At a 4:1 frontier:budget ratio the default path sends the
     # whole tail through the seen anti-join, robots filter, route
@@ -600,8 +580,6 @@ def evict_checkpoints(checkpoint_dir: str, max_bytes: int) -> List[int]:
 
 
 class CrawlEngine:
-    _instances = 0  # unique catalog-table prefix per engine (bucketed mode)
-
     def __init__(
         self,
         spark: SparkSession,
@@ -612,34 +590,6 @@ class CrawlEngine:
         self.spark = spark
         self.config = config or CrawlConfig()
         self.checkpoint_dir = checkpoint_dir
-        if self.config.bucketed_state and checkpoint_dir is None:
-            raise ValueError(
-                "bucketed_state persists frontier/seen as bucketed tables "
-                "and needs a checkpoint_dir to put them in"
-            )
-        if self.config.bucketed_state and self.config.ttl_waves is not None:
-            # the TTL re-crawl path routes the anti-join through the
-            # cuckoo filter, so the bucketed tables' exchange-free join
-            # never happens — but their per-wave write cost would still
-            # be paid. Refuse the combination instead of silently paying
-            # for nothing (round-3 ADVICE).
-            raise ValueError(
-                "bucketed_state and ttl_waves are mutually exclusive: "
-                "TTL re-crawl uses the cuckoo-filter seen path, which "
-                "never reads the bucketed state tables"
-            )
-        if self.config.bucketed_fetch and checkpoint_dir is None:
-            raise ValueError(
-                "bucketed_fetch writes the bucketed corpus and per-wave "
-                "schedules under a checkpoint_dir"
-            )
-        # formatted plan of each wave's state anti-join (bucketed mode):
-        # lets tests pin the exchange-free property on the REAL wave join
-        self.antijoin_plans: List[str] = []
-        # formatted plan of each wave's fetch join (bucketed_fetch mode)
-        self.fetch_plans: List[str] = []
-        CrawlEngine._instances += 1
-        self._tbl_prefix = f"mls_e{CrawlEngine._instances}"
         # canonicalize the corpus once; keep html out of any shuffle by
         # projecting it only at the join
         self.pages = pages.withColumn("canon_url", normalize_url_col(F.col("url")))
@@ -651,46 +601,8 @@ class CrawlEngine:
         if self.config.honor_crawl_delay:
             self.host_delays = robots_crawl_delays(pages).cache()
             self.host_delays.count()
-        self._corpus_tbl: Optional[str] = None
-        if self.config.bucketed_fetch:
-            # one-time ingest: the corpus as a canon_url-bucketed table,
-            # the layout every wave's co-located fetch SMJ reads
-            from ..sinks import write_bucketed  # noqa: PLC0415
-
-            self._corpus_tbl = f"{self._tbl_prefix}_corpus_bkt"
-            write_bucketed(
-                self.pages.select("canon_url", "url", "html"),
-                self._corpus_tbl,
-                os.path.join(self.checkpoint_dir, "corpus_bkt"),
-                buckets=self.config.state_buckets,
-            )
 
     # -- state ----------------------------------------------------------------
-    def _state_tables(self):
-        """The two Iceberg-standin snapshot tables of bucketed-state mode
-        (frontier = per-wave overwrite snapshots, seen = per-wave MERGE
-        of the delta), rooted under the checkpoint dir so they persist
-        across engine instances and resumes."""
-        if getattr(self, "_snap_tables", None) is None:
-            from ..state.iceberg_standin import SnapshotTable  # noqa: PLC0415
-
-            assert self.checkpoint_dir is not None
-            self._snap_tables = (
-                SnapshotTable(
-                    self.spark,
-                    os.path.join(self.checkpoint_dir, "state", "frontier"),
-                    f"{self._tbl_prefix}_frontier",
-                    buckets=self.config.state_buckets,
-                ),
-                SnapshotTable(
-                    self.spark,
-                    os.path.join(self.checkpoint_dir, "state", "seen"),
-                    f"{self._tbl_prefix}_seen",
-                    buckets=self.config.state_buckets,
-                ),
-            )
-        return self._snap_tables
-
     def _frontier_from_seeds(self, seeds) -> DataFrame:
         """seeds: list[str] or a DataFrame with a ``url`` column (the
         DataFrame form avoids a driver round-trip for huge seed sets)."""
@@ -720,10 +632,10 @@ class CrawlEngine:
         docs: DataFrame,
         chunks: DataFrame,
         metrics: DataFrame,
-        delta_keys: Optional[DataFrame] = None,
-    ) -> Optional[list]:
+        delta_keys: DataFrame,
+    ) -> list:
         """Commit wave ``wave`` and return the collected ``delta_keys``
-        rows (the seen delta's prefilter keys, None if not given).
+        rows (the seen delta's prefilter keys).
 
         The five parquet writes and the ``delta_keys`` collect are
         independent Spark jobs, so they are submitted together, one
@@ -732,7 +644,7 @@ class CrawlEngine:
         point: it is written last and only when every write succeeded, so
         a crash or a failed write leaves the wave without one and resume
         replays it from the previous wave's state."""
-        actions = [] if delta_keys is None else [delta_keys.collect]
+        actions: List[Callable[[], object]] = [delta_keys.collect]
         if self.checkpoint_dir is not None:
             outputs = {
                 "frontier_next": frontier_next,
@@ -754,7 +666,7 @@ class CrawlEngine:
                 "w",
             ) as f:
                 json.dump({"wave": wave}, f)
-        return None if delta_keys is None else results[0]
+        return results[0]
 
     def _seen_sources(self, upto_wave: int) -> List[str]:
         """Parquet dirs whose union compacts to the seen set as of
@@ -938,22 +850,9 @@ class CrawlEngine:
                 # driver insert loop; now each task builds whole shards
                 # and the driver adopts num_shards fixed-size tables
                 self._build_cuckoo(fresh, cuckoo)
-        elif seen is not None and not cfg.bucketed_state:
+        elif seen is not None:
             # full build only on resume
             bloom = self._build_bloom(self._bloom_partials(seen).collect())
-
-        if cfg.bucketed_state and start_wave > 0:
-            # resume/time-travel rebase: the standin snapshot tables may
-            # hold state from waves AFTER the flat checkpoint being
-            # resumed (or from a crash mid-commit); overwrite both to the
-            # resumed state so wave replay starts from a consistent
-            # snapshot, then serve state from the bucketed tables
-            fr_snap, sn_snap = self._state_tables()
-            fr_snap.overwrite(frontier, op_id=f"rebase-wave={start_wave}")
-            if seen is not None:
-                sn_snap.overwrite(seen, op_id=f"rebase-wave={start_wave}")
-                seen = sn_snap.read()
-            frontier = fr_snap.read()
 
         all_records: List[DataFrame] = []
         all_chunks: List[DataFrame] = []
@@ -975,20 +874,7 @@ class CrawlEngine:
             probe_bcs: list = []
             # 1. seen anti-join (bloom prefilter + exact); in TTL mode the
             # deletable cuckoo prefilter + anti-join against FRESH rows only.
-            # In bucketed-state mode both sides are canon_url-bucketed
-            # tables, so the exact left_anti is an exchange-free co-located
-            # SMJ and needs no prefilter at all.
-            if cfg.bucketed_state and not use_ttl:
-                if seen is None:
-                    candidates = frontier
-                else:
-                    candidates = frontier.join(
-                        seen, on="canon_url", how="left_anti"
-                    )
-                    from ..plans.checks import formatted_plan  # noqa: PLC0415
-
-                    self.antijoin_plans.append(formatted_plan(candidates))
-            elif use_ttl:
+            if use_ttl:
                 fresh_seen = None
                 if seen is not None:
                     if wave - cfg.ttl_waves >= 0 and cuckoo is not None:
@@ -1117,37 +1003,9 @@ class CrawlEngine:
             # seen set with status 'too_large' instead of burning
             # politeness-budget slots as retries — but their bytes never
             # cross Arrow (the convert UDF sees null html for them).
-            if cfg.bucketed_fetch:
-                # co-located form: write this wave's schedule bucketed by
-                # the same key/count as the corpus table, then join the
-                # two catalog tables — bucket-to-bucket SMJ, zero
-                # exchanges, no broadcast (plan recorded in fetch_plans;
-                # pinned by tests/test_bucketed_join.py)
-                from ..plans.checks import formatted_plan  # noqa: PLC0415
-                from ..sinks import write_bucketed  # noqa: PLC0415
-
-                sch_tbl = f"{self._tbl_prefix}_sched_w{wave}"
-                write_bucketed(
-                    scheduled,
-                    sch_tbl,
-                    self._ckpt_path(wave, "sched_bkt"),
-                    buckets=cfg.state_buckets,
-                )
-                fetched = self.spark.table(self._corpus_tbl).join(
-                    self.spark.table(sch_tbl), on="canon_url", how="inner"
-                )
-                self.fetch_plans.append(formatted_plan(fetched))
-                if wave > 0:
-                    self.spark.sql(
-                        f"DROP TABLE IF EXISTS {self._tbl_prefix}_sched_w{wave - 1}"
-                    )
-            else:
-                fetched = pages_slim.join(
-                    F.broadcast(scheduled), on="canon_url", how="inner"
-                )
-            fetched = fetched.withColumn(
-                "_too_large", F.length("html") > cfg.max_file_size
-            )
+            fetched = pages_slim.join(
+                F.broadcast(scheduled), on="canon_url", how="inner"
+            ).withColumn("_too_large", F.length("html") > cfg.max_file_size)
 
             # 5. convert + chunk (Arrow-vectorized)
             docs = (
@@ -1369,10 +1227,8 @@ class CrawlEngine:
             # the filter itself is updated after it, on this thread.
             if use_ttl:
                 delta_keys = self._cuckoo_keys(seen_delta)
-            elif not cfg.bucketed_state:  # co-located join needs no prefilter
-                delta_keys = self._bloom_partials(seen_delta)
             else:
-                delta_keys = None
+                delta_keys = self._bloom_partials(seen_delta)
 
             _t = _tick(f"w{wave} plan build", _t)
             delta_rows = self._write_wave(
@@ -1388,7 +1244,7 @@ class CrawlEngine:
                 # through W nested aggregations at wave W (O(W^2) over a
                 # crawl); the flat form is O(W) cheap delta scans with
                 # constant plan depth. (At warehouse scale seen is an
-                # Iceberg table MERGEd per wave — or bucketed_state.)
+                # Iceberg table MERGEd per wave.)
                 frontier = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
                     self._ckpt_path(wave, "frontier_next")
                 )
@@ -1407,35 +1263,6 @@ class CrawlEngine:
                     cpath = self._ckpt_path(wave, "seen_compact")
                     seen.write.mode("overwrite").parquet(cpath)
                     seen = self.spark.read.schema(SEEN_SCHEMA).parquet(cpath)
-                if cfg.bucketed_state:
-                    # persist both state sides as Iceberg-standin snapshot
-                    # tables, bucketed by canon_url so the NEXT wave's
-                    # anti-join is exchange-free on both scans. The wave
-                    # commit is MERGE-shaped and idempotent (op_id =
-                    # "wave=N"): frontier is an overwrite snapshot, seen
-                    # MERGEs only this wave's delta (upsert via
-                    # _compact_seen — latest status_wave wins, exactly
-                    # the flat rebuild's semantics), and each commit becomes
-                    # visible only at an atomic pointer swap, so a crash
-                    # mid-commit leaves the previous snapshot intact and a
-                    # replayed wave is detected and skipped
-                    # (state/iceberg_standin.py; crash drill in
-                    # tests/test_iceberg_standin.py).
-                    fr_snap, sn_snap = self._state_tables()
-                    fr_snap.overwrite(frontier, op_id=f"wave={wave}")
-                    sn_snap.merge_upsert(
-                        self.spark.read.schema(SEEN_SCHEMA).parquet(
-                            self._ckpt_path(wave, "seen_delta")
-                        ),
-                        _compact_seen,
-                        op_id=f"wave={wave}",
-                    )
-                    frontier = fr_snap.read()
-                    seen = sn_snap.read()
-                    # Iceberg maintenance analogue: keep a short snapshot
-                    # tail for time travel, GC the rest
-                    fr_snap.expire_snapshots(keep_last=2)
-                    sn_snap.expire_snapshots(keep_last=2)
             else:
                 # fuse next-wave frontier + seen into ONE materialization:
                 # harmonize schemas, tag, localCheckpoint once, split back
@@ -1458,7 +1285,7 @@ class CrawlEngine:
 
             if use_ttl:
                 cuckoo.add_sharded_pairs(*_unpack_cuckoo_pairs(delta_rows))
-            elif delta_rows is not None:
+            else:
                 bloom = self._build_bloom(delta_rows, into=bloom)
             _t = _tick(f"w{wave} bloom build", _t)
 

@@ -19,9 +19,8 @@ strategy:
 - iterations are bounded and each materializes nothing driver-side.
 
 At 10^10 edges the join is the dominant shuffle; pre-partitioning both
-``ranks`` and ``edges`` by src (bucketed tables at warehouse scale, the
-same layout ``bucketed_state`` uses for the seen set) makes every
-iteration's join exchange-free on the static edge side.
+``ranks`` and ``edges`` by src (bucketed tables at warehouse scale) makes
+every iteration's join exchange-free on the static edge side.
 """
 
 from __future__ import annotations
@@ -197,9 +196,8 @@ def url_pagerank_priorities(docs: DataFrame, iters: int = 5) -> DataFrame:
 
     Scale note: the priorities table is |URLs| rows; the per-wave join
     against discovered links re-shuffles it unless it is bucketed by
-    canon_url — at warehouse scale persist it with the same bucket
-    layout the seen set uses (sinks.write_bucketed) so the join is
-    co-located."""
+    canon_url — at warehouse scale persist it as a canon_url-bucketed
+    table so the join is co-located."""
     pr = pagerank(url_edges_from_docs(docs), iters=iters, src_col="src", dst_col="dst")
     lohi = pr.agg(F.min("rank").alias("lo"), F.max("rank").alias("hi")).collect()[0]
     if lohi["hi"] is None:  # empty graph

@@ -63,32 +63,6 @@ def export_content_files(
     return n
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    key: str = "canon_url",
-    buckets: int = 16,
-) -> None:
-    """Bucketed + sorted table for CO-LOCATED joins.
-
-    Two tables bucketed by the same key into the same bucket count join
-    with NO Exchange on either side (asserted in
-    tests/test_bucketed_join.py) — the physical layout for the recurring
-    frontier ⋈ seen / frontier ⋈ pages equi-joins at warehouse scale,
-    where re-shuffling 10^10 rows per wave would dominate the job. The
-    Iceberg analogue is a bucket partition transform on the same key.
-    """
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .option("path", path)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def export_urls_csv(urls: DataFrame, path: str) -> None:
     """K3: loc[,priority][,lastmod] lines (nulls dropped right-to-left)."""
     line = F.concat_ws(

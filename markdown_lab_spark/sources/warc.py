@@ -17,8 +17,8 @@ Spark shape — built for the Common-Crawl layout:
   1000-executor cluster is embarrassingly parallel.
 - the output schema is exactly the engine's page-table input hint
   (url, warc_ts, html) + (http_status, mime), so
-  ``warc_pages_table(...)`` feeds ``CrawlEngine(pages=...)`` or an
-  Iceberg-standin snapshot commit directly.
+  ``warc_pages_table(...)`` feeds ``CrawlEngine(pages=...)`` or a
+  pages-table write directly.
 - ``encode_warc`` writes the member-per-record ``.warc.gz`` form (the
   egress twin; also what the round-trip tests pin).
 

@@ -35,9 +35,9 @@ out = ["""# PLANS — frozen physical-plan evidence (regenerate: `python scripts
 Snapshots of `formatted_plan(...)` at sf0.001 for the load-bearing entry
 queries, with what each plan is evidence OF. The plan-shape assertions
 live in `tests/test_plan_guards.py` (no partition-less Window anywhere,
-TakeOrderedAndProject for top-k) and `tests/test_crawler.py` /
-`tests/test_bucketed_join.py` (broadcast fetch join; exchange-free
-co-located state SMJ); this file is the human-auditable artifact.
+TakeOrderedAndProject for top-k) and `tests/test_route_plan.py`
+(broadcast fetch join streaming the pages scan, no shuffle exchange);
+this file is the human-auditable artifact.
 """]
 for name, why in PICK.items():
     plan = formatted_plan(qs[name](spark, SF))

@@ -43,9 +43,6 @@ def main() -> int:
                          "wave budget cap (exact post-schedule prefix cut)")
     ap.add_argument("--wave-fetch-cap", type=int, default=None,
                     help="global per-wave fetch budget (priority DESC wins)")
-    ap.add_argument("--bucketed-state", action="store_true",
-                    help="persist frontier/seen as bucketed tables "
-                    "(exchange-free anti-join; needs --checkpoint)")
     ap.add_argument("--lazy-deferred", action="store_true",
                     help="keep the standing deferred tail out of the wave "
                     "plan as a rank-materialized component set; route only "
@@ -171,7 +168,6 @@ def main() -> int:
         ttl_waves=args.ttl_waves,
         wave_fetch_cap=args.wave_fetch_cap,
         honor_crawl_delay=args.honor_crawl_delay,
-        bucketed_state=args.bucketed_state,
         lazy_deferred=args.lazy_deferred,
         tail_compact_every=args.tail_compact_every,
     )

@@ -32,7 +32,6 @@ def test_defaults_valid():
         {"max_retries": -1},
         {"bloom_fpr": 1.5},
         {"ttl_waves": 0},
-        {"ttl_waves": 2, "bucketed_state": True},
     ],
     ids=[
         "rps_zero",
@@ -40,7 +39,6 @@ def test_defaults_valid():
         "max_retries_negative",
         "bloom_fpr_above_one",
         "ttl_waves_zero",
-        "ttl_waves_with_bucketed_state",
     ],
 )
 def test_validation_rejects(kw):
@@ -52,11 +50,10 @@ def test_validation_rejects(kw):
 def test_env_overrides(monkeypatch):
     monkeypatch.setenv("MARKDOWN_LAB_SPARK_RPS", "2.5")
     monkeypatch.setenv("MARKDOWN_LAB_SPARK_MAX_RETRIES", "5")
-    monkeypatch.setenv("MARKDOWN_LAB_SPARK_BUCKETED_STATE", "true")
     monkeypatch.setenv("MARKDOWN_LAB_SPARK_CHECKPOINT_DIR", "/ckpt")
     cfg = EngineConfig()
     assert cfg.rps == 2.5 and cfg.max_retries == 5
-    assert cfg.bucketed_state is True and cfg.checkpoint_dir == "/ckpt"
+    assert cfg.checkpoint_dir == "/ckpt"
 
 
 def test_env_override_invalid(monkeypatch):
@@ -76,6 +73,14 @@ def test_from_dict_rejects_unread_chunk_size():
     # setting would be silently ignored, so it is refused instead
     with pytest.raises(ConfigurationError) as e:
         EngineConfig.from_dict({"chunk_size": 512})
+    assert e.value.error_code == "CONFIG_INVALID"
+
+
+@pytest.mark.parametrize("key", ["bucketed_state", "state_buckets"])
+def test_from_dict_rejects_deleted_bucketed_keys(key):
+    # the flat per-wave checkpoint is the only state layout
+    with pytest.raises(ConfigurationError) as e:
+        EngineConfig.from_dict({key: 1})
     assert e.value.error_code == "CONFIG_INVALID"
 
 

@@ -226,45 +226,6 @@ def test_oversized_page_terminal_not_retried(spark):
     )
 
 
-def test_bucketed_state_wave_join_exchange_free(spark, corpus, pages_df, tmp_path):
-    """bucketed_state: the per-wave frontier-minus-seen anti-join runs on
-    two canon_url-bucketed scans with NO Exchange on either side (the
-    co-located layout for 10^10-row state), and the crawl's trace/seen
-    stay identical to the default mode."""
-    baseline = CrawlEngine(spark, pages_df, CrawlConfig(**CFG)).crawl(corpus.seeds)
-    base_trace = {
-        (r["canon_url"], r["wave"], r["depth"], r["status"])
-        for r in baseline["trace"].collect()
-    }
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        engine = CrawlEngine(
-            spark,
-            pages_df,
-            CrawlConfig(**CFG, bucketed_state=True, state_buckets=8),
-            checkpoint_dir=str(tmp_path / "bkt"),
-        )
-        out = engine.crawl(corpus.seeds)
-        trace = {
-            (r["canon_url"], r["wave"], r["depth"], r["status"])
-            for r in out["trace"].collect()
-        }
-        assert trace == base_trace
-        assert engine.antijoin_plans, "bucketed waves must record join plans"
-        for plan in engine.antijoin_plans:
-            assert "Exchange" not in plan, plan[:3000]
-            assert "SortMergeJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_bucketed_state_requires_checkpoint_dir(spark, pages_df):
-    with pytest.raises(ValueError):
-        CrawlEngine(spark, pages_df, CrawlConfig(bucketed_state=True))
-
-
 def test_oversized_trace_matches_simulator(spark):
     """too_large parity: engine trace == simulator trace when the corpus
     contains a page over max_file_size (discovered, scheduled once,

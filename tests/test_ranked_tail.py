@@ -262,17 +262,6 @@ def test_mode_switch_resume(spark, deep_pages, base_trace, tmp_path, first, then
     assert _stitched(base_trace, resumed) == base_trace
 
 
-def test_lazy_deferred_bucketed_state(spark, deep_pages, base_trace, tmp_path):
-    """bucketed_state (exchange-free frontier/seen anti-join) composes
-    with the ranked tail: output and resume identity unchanged."""
-    kw = {"lazy_deferred": True, "bucketed_state": True, "state_buckets": 4}
-    full = _crawl(spark, deep_pages, ckpt=str(tmp_path / "bk"), **kw)
-    full_trace = _trace_set(full)
-    assert full_trace == base_trace
-    resumed = _split_crawl(spark, deep_pages, str(tmp_path / "bkp"), kw, kw)
-    assert _stitched(full_trace, resumed) == full_trace
-
-
 def test_lazy_frontier_checkpoint_excludes_tail(spark, deep_pages, tmp_path):
     """The win being claimed: frontier_next holds only NEW candidates;
     the ranked tail components hold the rest, and they are disjoint."""
