@@ -1,23 +1,29 @@
 """Deduplication operators for training-data pipelines.
 
-All operators are DataFrame compositions (shuffle-conscious, no Python in
-the hot path). Hash functions are md5-based so every operator has an exact
-DuckDB oracle twin (portable across engines; lexicographic min of fixed-
-width hex == numeric min, which makes min-hashing expressible in both).
+All operators are DataFrame compositions (shuffle-conscious; per-doc
+hashing runs in Arrow-batched UDFs). Hash functions are md5-based so
+every operator has an exact DuckDB oracle twin (portable across
+engines; lexicographic min of fixed-width hex == numeric min, which
+makes min-hashing expressible in both).
 
 Scale notes:
 - exact dedup: one shuffle on the content hash (map-side partial distinct
   via AQE); at 100 TB prefer a two-level hash (cheap 64-bit prefilter,
   md5 verify) and bucketed output.
-- MinHash LSH: explode shingles -> ONE groupBy computes all k signature
-  lanes (single shuffle), bands -> self-join only within band buckets, so
-  candidate pairs ~ O(true dups), not O(n^2).
+- MinHash LSH: one Arrow UDF computes all k signature lanes inside each
+  doc's row (no shuffle), bands -> self-join only within band buckets,
+  so candidate pairs ~ O(true dups), not O(n^2).
 - n-gram Jaccard: candidate pairs restricted to pairs sharing >=1 shingle
   (inner self-join on shingle), counts -> |A∩B| / (|A|+|B|-|A∩B|).
+- connected components: star-contraction rounds while the edge set is
+  large; once it has at most ``_LOCAL_EDGES`` edges it is collected
+  through Arrow and finished by a driver-side union-find, so the driver
+  never holds more than that many edges.
 """
 
 from __future__ import annotations
 
+import itertools
 from typing import List
 
 import numpy as np
@@ -67,34 +73,17 @@ def minhash_signatures(
     text_col: str,
     k: int = 16,
     shingle_n: int = 3,
-    impl: str = "arrow",
 ) -> DataFrame:
     """k-lane MinHash signature per doc: lane i = min(md5(shingle || ':' || i)).
 
-    Two implementations with identical output (pinned by
-    tests/test_neardup_scale.py):
-
-    - ``impl="arrow"`` (default): ONE Arrow-batched pandas UDF — a doc's
-      shingles never leave its row, so the explode + k-lane groupBy
-      shuffle disappears (guide §2.4/§4.2) and the per-shingle work is
-      hashlib's C md5; the input is spread to cluster parallelism first
-      (partitioning.spread, a no-op for corpus-scale scans). Hex-string
-      min in Python equals the JVM's UTF8String ordering because both
-      compare lowercase-hex bytewise.
-    - ``impl="expr"``: the original explode + single-shuffle groupBy,
-      the shape the DuckDB oracle mirrors one-to-one.
+    ONE Arrow-batched pandas UDF: a doc's shingles never leave its row,
+    so there is no explode + k-lane groupBy shuffle (guide §2.4/§4.2)
+    and the per-shingle work is hashlib's C md5; the input is spread to
+    cluster parallelism first (partitioning.spread, a no-op for
+    corpus-scale scans). Hex-string min in Python equals the JVM's
+    UTF8String ordering because both compare lowercase-hex bytewise.
+    The DuckDB oracle computes the same lanes as an explode + groupBy.
     """
-    if impl == "expr":
-        exploded = df.select(
-            F.col(id_col),
-            F.explode(shingles(F.col(text_col), shingle_n)).alias("sh"),
-        )
-        aggs = [
-            F.min(F.md5(F.concat(F.col("sh"), F.lit(f":{i}")))).alias(f"mh_{i}")
-            for i in range(k)
-        ]
-        return exploded.groupBy(id_col).agg(*aggs)
-
     from .partitioning import spread  # noqa: PLC0415
 
     @F.pandas_udf("array<string>")
@@ -111,9 +100,9 @@ def minhash_signatures(
         out = []
         for text in texts:
             if text is None:
-                # expr twin: greatest(size(NULL), 0) = 0 and
-                # concat_ws over the null slice is '' — a null text
-                # gets the empty-string pseudo-gram, NOT dropped
+                # as shingles() on a null text: greatest(size(NULL), 0)
+                # = 0 and concat_ws over the null slice is '' — a null
+                # text gets the empty-string pseudo-gram, NOT dropped
                 grams = {""}
                 words = None
             else:
@@ -266,9 +255,7 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return agg.select(F.col(id_col), fp.alias("simhash"))
 
 
-def simhash64(
-    df: DataFrame, id_col: str, text_col: str, impl: str = "arrow"
-) -> DataFrame:
+def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash (the production width; simhash16 is the demo cut).
 
     Bit d of md5(token) = bit (3 - d%4) of hex digit d//4 (big-endian bit
@@ -277,22 +264,14 @@ def simhash64(
     '0'/'1' string — portable to the DuckDB oracle and splittable into
     two 32-bit halves for JVM-side Hamming (bit_count of xor).
 
-    Two implementations with bit-identical output (pinned by
-    tests/test_neardup_scale.py):
-
-    - ``impl="arrow"`` (default): ONE Arrow-batched pandas UDF — tokens
-      never leave their doc's row, so the explode + 64-lane groupBy
-      shuffle of the expression form disappears entirely (guide §2.4/
-      §4.2) and the per-token work is hashlib's C md5 + one vectorized
-      numpy unpackbits/sum per doc instead of 16 conv() calls and 64
-      conditional aggregate lanes (measured ~5x less per-token CPU at
-      sf0.1). Vote comparison is integer-exact: v_d = 2*ones_d - n.
-    - ``impl="expr"``: the original explode + single-shuffle groupBy,
-      kept as the all-JVM twin (it is also the shape the DuckDB oracle
-      mirrors one-to-one).
+    ONE Arrow-batched pandas UDF: tokens never leave their doc's row, so
+    there is no explode + 64-lane groupBy shuffle (guide §2.4/§4.2), and
+    the per-token work is hashlib's C md5 + one vectorized numpy
+    unpackbits/sum per doc instead of 16 conv() calls and 64 conditional
+    aggregate lanes (measured ~5x less per-token CPU at sf0.1). Vote
+    comparison is integer-exact: v_d = 2*ones_d - n. Null-text docs are
+    dropped, as the oracle's explode of a null token array drops them.
     """
-    if impl == "expr":
-        return _simhash64_expr(df, id_col, text_col)
 
     @F.pandas_udf("string")
     def _sim(texts: pd.Series) -> pd.Series:
@@ -320,41 +299,9 @@ def simhash64(
             out.append("".join("1" if x > 0 else "0" for x in v))
         return pd.Series(out, dtype=object)
 
-    # expression twin drops null-text docs (explode of a null array);
-    # mirror that so both impls return the identical row set
     return df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), _sim(F.col(text_col)).alias("simhash")
     )
-
-
-def _simhash64_expr(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Expression-only simhash64 twin: one explode + ONE groupBy
-    (single shuffle) computes all 64 vote lanes in the JVM."""
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    ).withColumn("h", F.md5(F.col("tok")))
-    # hex-digit value of char d//4, tested against bit (3 - d%4)
-    charval = [
-        F.conv(F.substring(F.col("h"), c + 1, 1), 16, 10).cast("int")
-        for c in range(16)
-    ]
-    votes = [
-        F.sum(
-            F.when(
-                charval[d // 4].bitwiseAND(F.lit(1 << (3 - d % 4))) != 0, 1
-            ).otherwise(-1)
-        ).alias(f"v_{d}")
-        for d in range(64)
-    ]
-    agg = toks.groupBy(id_col).agg(*votes)
-    fp = F.concat(
-        *[
-            F.when(F.col(f"v_{d}") > 0, F.lit("1")).otherwise(F.lit("0"))
-            for d in range(64)
-        ]
-    )
-    return agg.select(F.col(id_col), fp.alias("simhash"))
 
 
 def simhash_hamming_pairs(
@@ -737,6 +684,36 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+# Edge sets at or under this size skip the rest of the star-contraction
+# loop: one Arrow collect plus a driver-side union-find is cheaper than a
+# single Spark round (~6 AQE stage-jobs) up to here, and the driver holds
+# only the edge list and one parent map. Measured at 200k clique-shaped
+# edges on local[4]: finish 0.46 s vs one round 0.72 s (long ids), 0.66 s
+# vs 1.36 s (md5-hex ids); driver Python peak 23 MB / 54 MB.
+_LOCAL_EDGES = 200_000
+
+
+def _union_find_labels(u: List, v: List) -> tuple:
+    """(nodes, components) of an edge list by union-find: union by min
+    root (the root IS the member minimum) and path halving."""
+    parent = {x: x for x in itertools.chain(u, v)}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = x = parent[parent[x]]
+        return x
+
+    for a, b in zip(u, v):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if ra < rb:
+                parent[rb] = ra
+            else:
+                parent[ra] = rb
+    nodes = list(parent)
+    return nodes, [find(x) for x in nodes]
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -761,6 +738,16 @@ def connected_components(
     - alternate until the edge set reaches a fixpoint, at which point
       the edges form stars rooted at each component's minimum id.
 
+    The loop has a second exit: once the edge set fits one driver pass
+    (``_LOCAL_EDGES``), it is collected through Arrow and labelled by a
+    union-find, the finish-locally step of Łącki, Mirrokni, Włodarczyk,
+    "Connected Components at Scale via Local Contractions" (2018). The
+    check runs after every signature, the initial one included: edge
+    count never grows and a k-doc duplicate clique of k(k-1)/2 pairs is
+    a (k-1)-edge star after one round, so a graph that starts above the
+    constant usually fits after a round. Both exits give the same rows
+    and schema.
+
     Scale: per half-round the work is one partial-aggregated
     groupBy(min), one join on the node id, and one distinct — edge
     count never grows (each input edge yields at most one output
@@ -769,15 +756,16 @@ def connected_components(
     min-aggregation + AQE skew splits. Each round is localCheckpoint-ed
     (the iterative-lineage discipline pagerank()/kmeans use) and the
     fixpoint test is a count+hash signature over the materialized
-    round — no driver-side edge collection.
+    round; the driver only ever holds an edge set at or under
+    ``_LOCAL_EDGES``. Session conf is never touched.
 
     Ids may be any orderable type (long doc ids, md5 strings);
     the component label is the member minimum. Nodes that appear in
     no pair are absent from the output (isolated singletons are their
     own components — left-join and coalesce(component, id) to label a
     full corpus). Raises if ``max_rounds`` is exhausted before the
-    fixpoint (pathological only: rounds needed grow with log of the
-    longest chain, so 25 covers ~2^25-long chains).
+    fixpoint or the fit (pathological only: rounds needed grow with log
+    of the longest chain, so 25 covers ~2^25-long chains).
     """
     e = (
         pairs.select(
@@ -806,50 +794,37 @@ def connected_components(
         ).collect()[0]
         return row["n"], row["h"]
 
+    def _labels(df: DataFrame) -> DataFrame:
+        # fixpoint edges are stars (member, component_min)
+        stars = df.select(F.col("u").alias("node"), F.col("v").alias("component"))
+        roots = (
+            df.select(F.col("v").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("component"))
+        )
+        return stars.unionByName(roots)
+
     prev = _sig(e)
-    if prev[0] == 0:
-        return e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    # Scale-adaptive round partitioning (guide §2.2): the star rounds
-    # shuffle at most the edge set — ~16 bytes/row — yet inherit the
-    # session's shuffle.partitions, sized for corpus-scale scans. Derive
-    # the loop's partition count from the MEASURED edge count (the
-    # signature gives n for free): ~512k edges per partition, capped at
-    # the session setting, so a cluster-sized session keeps its
-    # parallelism for 10^10-edge graphs while a KB-scale bench graph
-    # stops paying 64-partition scheduling per round (measured 7.5 s ->
-    # ~4 s at sf0.1, where rounds are pure job-cadence overhead).
-    # Restored in the finally — only the loop's own collects run under
-    # it; the returned stars/roots plan executes under the caller's
-    # conf. CAVEAT: shuffle.partitions is session-scoped, so a driver
-    # thread planning OTHER queries on this same session concurrently
-    # with this loop would see the reduced value — run this operator
-    # from its own session (spark.newSession()) in multi-threaded
-    # drivers.
-    spark = pairs.sparkSession
-    sess_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_sp = max(1, min(int(sess_sp), -(-prev[0] // 512_000)))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
-        for _ in range(max_rounds):
-            e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-            cur = _sig(e)
-            if cur == prev:
-                break
-            prev = cur
-        else:
+    rounds = 0
+    while prev[0] > _LOCAL_EDGES:
+        if rounds == max_rounds:
             raise RuntimeError(
                 f"connected_components did not converge in {max_rounds} rounds"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", sess_sp)
-    # fixpoint edges are stars (member, component_min)
-    stars = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = (
-        e.select(F.col("v").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("component"))
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        rounds += 1
+        cur = _sig(e)
+        if cur == prev:
+            return _labels(e)
+        prev = cur
+    edges = e.toArrow()
+    nodes, comps = _union_find_labels(
+        edges.column("u").to_pylist(), edges.column("v").to_pylist()
     )
-    return stars.unionByName(roots)
+    return pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "component": comps}),
+        schema=_labels(e).schema,
+    )
 
 
 def dedup_near_duplicates(

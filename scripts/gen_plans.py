@@ -123,7 +123,12 @@ out.append(
     "and trailing distinct restore set semantics one stage later "
     "(Kiveris et al. 2014 invariant; "
     "convergence + labels asserted against a union-find reference and a "
-    "DuckDB recursive-CTE oracle in tests/test_connected_components.py).\n\n"
+    "DuckDB recursive-CTE oracle in tests/test_connected_components.py). "
+    "These rounds run only while the edge set has more than "
+    "`_LOCAL_EDGES` (200k) edges: at or under it, the operator collects "
+    "the edges through Arrow and finishes with a driver-side union-find, "
+    "so small graphs (q60 at sf0.01, near_dedup) run no round at all; "
+    "the forced-loop tests keep this plan covered.\n\n"
     f"```\n{head.strip()}\n\n" + "\n\n".join("\n".join(b.splitlines()[:12]) for b in aggs[:2]) + "\n```\n"
 )
 

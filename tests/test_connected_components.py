@@ -4,6 +4,10 @@ Reference oracle is a sequential union-find (path compression + union by
 root id keeps the canonical min-id label), cross-checked on hand-built
 topologies, seeded random graphs, and a DuckDB recursive-CTE twin (the
 same formulation the q60 driver gate uses).
+
+Every graph here fits the driver-side finish, so each case also runs in
+``TestForcedLoop`` with ``_LOCAL_EDGES = 0``: the star-contraction loop
+then runs to its fixpoint and must give the same labels.
 """
 
 from __future__ import annotations
@@ -13,10 +17,17 @@ import random
 import duckdb
 import pytest
 
+from markdown_lab_spark.functions import dedup
 from markdown_lab_spark.functions.dedup import (
     connected_components,
     dedup_near_duplicates,
 )
+
+
+@pytest.fixture
+def forced_loop(monkeypatch):
+    """Switch the local finish off: only the round loop labels."""
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES", 0)
 
 
 def uf_components(pairs):
@@ -138,7 +149,9 @@ def test_dedup_keeps_min_id_per_cluster_and_passes_singletons(spark):
     assert kept == [0, 1, 4, 5, 6, 7, 8, 10, 11]
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, forced_loop):
+    # only the round loop can exhaust max_rounds: a graph that fits the
+    # local finish is labelled whatever the round budget
     df = spark.createDataFrame([(i, i + 1) for i in range(40)], ["id_a", "id_b"])
     with pytest.raises(RuntimeError, match="converge"):
         connected_components(df, "id_a", "id_b", max_rounds=1)
@@ -193,3 +206,107 @@ def test_hub_skew_and_long_path_drill(spark):
     assert set(labels.values()) == {0}
     assert len(labels) == 10_501  # nodes 0..10500
     assert uf_components(pairs) == labels
+
+
+@pytest.mark.usefixtures("forced_loop")
+class TestForcedLoop:
+    """The cases above on the round loop alone (test_nonconvergence_raises
+    forces it already)."""
+
+    test_empty_pairs = staticmethod(test_empty_pairs)
+    test_single_pair_and_self_loop = staticmethod(test_single_pair_and_self_loop)
+    test_long_path_converges = staticmethod(test_long_path_converges)
+    test_cliques_bridges_and_isolated_edge = staticmethod(
+        test_cliques_bridges_and_isolated_edge
+    )
+    test_string_ids = staticmethod(test_string_ids)
+    test_random_graphs_match_union_find = staticmethod(
+        test_random_graphs_match_union_find
+    )
+    test_matches_duckdb_recursive_cte = staticmethod(
+        test_matches_duckdb_recursive_cte
+    )
+    test_dedup_keeps_min_id_per_cluster_and_passes_singletons = staticmethod(
+        test_dedup_keeps_min_id_per_cluster_and_passes_singletons
+    )
+    test_near_dedup_keep_collapses_transitive_chain = staticmethod(
+        test_near_dedup_keep_collapses_transitive_chain
+    )
+    test_hub_skew_and_long_path_drill = staticmethod(
+        test_hub_skew_and_long_path_drill
+    )
+
+
+def _count_rounds(monkeypatch, on_round=None):
+    rounds = []
+    large_star = dedup._large_star
+
+    def wrapped(e):
+        rounds.append(on_round() if on_round else None)
+        return large_star(e)
+
+    monkeypatch.setattr(dedup, "_large_star", wrapped)
+    return rounds
+
+
+def test_mid_loop_exit_matches_union_find(spark, monkeypatch):
+    """30 disjoint 6-cliques (450 edges) are 30 5-edge stars (150 edges)
+    after one round: with the constant between the two counts, the loop
+    runs exactly one round and the local finish labels the rest."""
+    pairs = [
+        (c * 10 + a, c * 10 + b)
+        for c in range(30)
+        for a in range(6)
+        for b in range(a + 1, 6)
+    ]
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES", 300)
+    rounds = _count_rounds(monkeypatch)
+    assert spark_components(spark, pairs) == uf_components(pairs)
+    assert len(rounds) == 1
+
+
+def test_loop_leaves_session_conf_alone(spark, monkeypatch, forced_loop):
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    seen = _count_rounds(monkeypatch, lambda: spark.conf.get(key))
+    pairs = [(i, i + 1) for i in range(120)]
+    assert set(spark_components(spark, pairs).values()) == {0}
+    assert len(seen) > 1 and set(seen) == {before}
+    assert spark.conf.get(key) == before
+
+
+@pytest.mark.parametrize(
+    "ddl,pairs",
+    [
+        ("long", [(2, 1), (3, 2), (9, 7)]),
+        ("string", [("b", "a"), ("c", "b"), ("zz", "y")]),
+    ],
+    ids=["long", "string"],
+)
+def test_output_schema_equal_across_paths(spark, monkeypatch, ddl, pairs):
+    df = spark.createDataFrame(pairs, f"id_a {ddl}, id_b {ddl}")
+    local = connected_components(df)
+    monkeypatch.setattr(dedup, "_LOCAL_EDGES", 0)
+    loop = connected_components(df)
+    assert local.schema == loop.schema
+    assert [(f.name, f.dataType.simpleString()) for f in local.schema] == [
+        ("node", ddl if ddl == "string" else "bigint"),
+        ("component", ddl if ddl == "string" else "bigint"),
+    ]
+    assert sorted(local.collect()) == sorted(loop.collect())
+
+
+def test_small_graph_runs_few_jobs(spark):
+    """A graph under the constant costs its signature, one Arrow collect
+    and the output: a silent fall-back to the round loop (~6 jobs per
+    round) fails this pin."""
+    pairs = [(i // 4 * 4, i) for i in range(1, 200) if i % 4]
+    df = spark.createDataFrame(pairs, ["id_a", "id_b"])
+    sc = spark.sparkContext
+    group = "test-cc-local-finish"
+    sc.setJobGroup(group, group)
+    try:
+        assert connected_components(df).count() == 200
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
