@@ -485,9 +485,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["q21_ngram_jaccard"] = q21_ngram_jaccard
 
     # (round-4 note: the 16-bit SimHash demo gate q22 was retired — q36's
-    # 64-bit production cut supersedes it; simhash16 stays covered by
-    # tests/test_functions.py so the driver's 50-query cap fits every
-    # operator family)
+    # 64-bit production cut supersedes it, so the 50-query cap fits
+    # every operator family)
 
     def q37_simhash_hamming(spark, sf):
         # two legs union-aligned under one gate (q36_simhash64 folded

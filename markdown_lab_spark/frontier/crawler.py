@@ -26,7 +26,7 @@ import functools
 import json
 import os
 from dataclasses import dataclass
-from typing import Callable, Dict, List, Optional, Tuple
+from typing import Callable, ClassVar, Dict, List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -140,8 +140,9 @@ class CrawlConfig:
     # per shard — numpy's kernels release the GIL, the 10^6-key drill in
     # test_ttl_recrawl shows near-linear wall scaling — and each shard
     # stays cache-resident. At cluster scale shards map onto the same
-    # host-hash partitioning the politeness scheduler uses.
-    cuckoo_shards: int = 4
+    # host-hash partitioning the politeness scheduler uses. A class
+    # constant, not a setting: no caller ever chose another count.
+    cuckoo_shards: ClassVar[int] = 4
     # oversized documents (reference max_file_size, core/config.py:44) are
     # excluded AT THE SCAN — never shipped through Arrow to the convert
     # UDF — and surface as fetch misses in the trace

@@ -225,38 +225,8 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """16-bit SimHash: per token, md5 hex chars 1..16 are 16 dimensions;
-    dimension d votes +1 if the nibble's top bit is set (hex char >= '8')
-    else -1, weighted by token frequency; fingerprint bit d = sign of the
-    vote sum. Output: 16-char '0'/'1' string (portable to the oracle).
-
-    The production variant extends the same plan to 64 bits; 16 keeps the
-    oracle SQL tractable while exercising the identical dataflow."""
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    ).withColumn("h", F.md5(F.col("tok")))
-    votes = [
-        F.sum(
-            F.when(
-                F.substring(F.col("h"), d + 1, 1).isin(
-                    *"89abcdef"
-                ),
-                1,
-            ).otherwise(-1)
-        ).alias(f"v_{d}")
-        for d in range(16)
-    ]
-    agg = toks.groupBy(id_col).agg(*votes)
-    fp = F.concat(
-        *[F.when(F.col(f"v_{d}") > 0, F.lit("1")).otherwise(F.lit("0")) for d in range(16)]
-    )
-    return agg.select(F.col(id_col), fp.alias("simhash"))
-
-
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash (the production width; simhash16 is the demo cut).
+    """64-bit SimHash.
 
     Bit d of md5(token) = bit (3 - d%4) of hex digit d//4 (big-endian bit
     order of the digest's first 8 bytes); per-doc vote sum per bit (token
@@ -944,8 +914,7 @@ def token_windows(
     (id, int, 32-char hex); the downstream count is a partial-agg
     groupBy, so a boilerplate window duplicated 10^6 times collapses
     map-side before the exchange. The O(L) slice copy per window is the
-    price of the oracle-exact hash; `duplicate_window_starts_fast`
-    is the O(1)-per-window rolling-hash path for the 100 TB run."""
+    price of the oracle-exact hash."""
     toks = _ws_tokens(F.col(text_col))
     return (
         df.select(F.col(id_col).alias("id"), toks.alias("_toks"))
@@ -1075,81 +1044,6 @@ def dedup_substrings(
             F.transform(kept_idx, lambda i: F.element_at("_toks", i + 1)),
         ).alias("kept_text"),
     )
-
-
-def duplicate_window_starts_fast(
-    df: DataFrame, id_col: str, text_col: str, length: int = 50
-) -> DataFrame:
-    """Rolling-hash twin of `duplicate_window_starts` for the at-scale
-    run: each window hash is O(1) amortized (two 64-bit polynomial
-    lanes over blake2b token hashes, no O(L) slice copy), emitted from
-    an Arrow-batched mapInPandas. Downstream plan is identical (partial
-    -agg count on the hash, join back). Collisions need BOTH 64-bit
-    lanes to collide (~2^-128 per pair, same regime as md5); agreement
-    with the exact path is pinned by test on planted corpora."""
-    import hashlib
-
-    L = length
-    schema = "id long, s int, h1 long, h2 long"
-    p1, p2 = 1000003, 999983
-    m = (1 << 64) - 59  # largest 64-bit prime
-
-    def gen(batches):
-        pw1 = pow(p1, L - 1, m)
-        pw2 = pow(p2, L - 1, m)
-        for pdf in batches:
-            out_id, out_s, out_h1, out_h2 = [], [], [], []
-            for did, text in zip(pdf["id"], pdf["text"]):
-                if text is None:
-                    continue  # JVM twin: size(NULL) < L excludes the row
-                toks = text.split()
-                n = len(toks)
-                if n < L:
-                    continue
-                th = np.fromiter(
-                    (
-                        int.from_bytes(
-                            hashlib.blake2b(
-                                t.encode(), digest_size=8
-                            ).digest(),
-                            "big",
-                        )
-                        for t in toks
-                    ),
-                    dtype=np.uint64,
-                    count=n,
-                )
-                h1 = 0
-                h2 = 0
-                for k in range(L):  # first window
-                    h1 = (h1 * p1 + int(th[k])) % m
-                    h2 = (h2 * p2 + int(th[k])) % m
-                for s in range(n - L + 1):
-                    out_id.append(did)
-                    out_s.append(s)
-                    out_h1.append(h1 - (1 << 63))
-                    out_h2.append(h2 - (1 << 63))
-                    if s + L < n:
-                        h1 = (
-                            (h1 - int(th[s]) * pw1) * p1 + int(th[s + L])
-                        ) % m
-                        h2 = (
-                            (h2 - int(th[s]) * pw2) * p2 + int(th[s + L])
-                        ) % m
-            yield pd.DataFrame(
-                {"id": out_id, "s": out_s, "h1": out_h1, "h2": out_h2}
-            )
-
-    w = df.select(
-        F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("text")
-    ).mapInPandas(gen, schema)
-    dup = (
-        w.groupBy("h1", "h2")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") > 1)
-        .select("h1", "h2")
-    )
-    return w.join(dup, ["h1", "h2"]).select("id", "s")
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,7 @@ What is REAL here:
   reconstruction so fixtures pin decoder output == encoder
   reconstruction on every path).
 
-Honesty note (the MPEG-1 / arithmetic-JPEG posture): no reference
+Honesty note (the arithmetic-JPEG posture): no reference
 H.264 decoder exists in this environment, so the coder pair is
 mirrored and self-consistent, with prefix-freeness and Kraft-sum
 structure of every VLC table pinned by tests. The coeff_token tables
@@ -87,7 +87,7 @@ than mis-decode: CABAC (entropy_coding_mode 1), weighted prediction
 ref marking, high profiles, interlace, and multi-slice pictures.
 
 Reference behavior mapped: none — the reference engine has no video
-path; this extends the multimodal column story (functions/video.py)
+path; this extends the multimodal column story (``multimodal.py``)
 to the dominant keyframe codec at the 100 TB posture.
 """
 
@@ -97,7 +97,35 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 
-from .mpeg1 import ycbcr420_to_rgb, rgb_to_ycbcr420, _build_decode_trie, _read_vlc
+# ---------------------------------------------------------------------------
+# VLC decode trie
+# ---------------------------------------------------------------------------
+
+
+def _build_decode_trie(codes: Dict) -> dict:
+    trie: dict = {}
+    for val, code in codes.items():
+        node = trie
+        for ch in code[:-1]:
+            node = node.setdefault(ch, {})
+        if code[-1] in node and isinstance(node[code[-1]], dict):
+            raise ValueError(f"non-prefix-free table at {code}")
+        node[code[-1]] = ("leaf", val)
+    return trie
+
+
+def _read_vlc(r: _Bits, trie: dict, what: str):
+    node = trie
+    for _ in range(24):
+        b = "1" if r.bit() else "0"
+        nxt = node.get(b)
+        if nxt is None:
+            raise ValueError(f"invalid {what} VLC")
+        if isinstance(nxt, tuple):
+            return nxt[1]
+        node = nxt
+    raise ValueError(f"runaway {what} VLC")
+
 
 # ---------------------------------------------------------------------------
 # VLC tables (Table 9-5, 9-7, 9-9, 9-10) — structure pinned by tests
@@ -1519,13 +1547,45 @@ def decode_h264(payload: bytes):
     return out, (w, h, sps.fps)
 
 
+def ycbcr420_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
+    """Full-range BT.601 (the JFIF convention the other codecs use) with
+    nearest-neighbor chroma upsampling — HxWx3 uint8."""
+    cbu = np.repeat(np.repeat(cb, 2, axis=0), 2, axis=1).astype(np.float64)
+    cru = np.repeat(np.repeat(cr, 2, axis=0), 2, axis=1).astype(np.float64)
+    yf = y.astype(np.float64)
+    r = yf + 1.402 * (cru - 128.0)
+    g = yf - 0.344136 * (cbu - 128.0) - 0.714136 * (cru - 128.0)
+    b = yf + 1.772 * (cbu - 128.0)
+    return np.clip(
+        np.stack([r, g, b], axis=2) + 0.5, 0, 255
+    ).astype(np.uint8)
+
+
+def rgb_to_ycbcr420(rgb: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Encoder-side companion (JFIF full-range, 2x2 mean subsampling)."""
+    f = rgb.astype(np.float64)
+    y = 0.299 * f[:, :, 0] + 0.587 * f[:, :, 1] + 0.114 * f[:, :, 2]
+    cb = 128.0 - 0.168736 * f[:, :, 0] - 0.331264 * f[:, :, 1] + 0.5 * f[:, :, 2]
+    cr = 128.0 + 0.5 * f[:, :, 0] - 0.418688 * f[:, :, 1] - 0.081312 * f[:, :, 2]
+
+    def sub(p):
+        h, w = p.shape
+        return p.reshape(h // 2, 2, w // 2, 2).mean(axis=(1, 3))
+
+    return (
+        np.clip(y + 0.5, 0, 255).astype(np.uint8),
+        np.clip(sub(cb) + 0.5, 0, 255).astype(np.uint8),
+        np.clip(sub(cr) + 0.5, 0, 255).astype(np.uint8),
+    )
+
+
 def decode_h264_frames(
     payload: bytes,
     every_n_frames: int = 1,
     max_frames: Optional[int] = None,
 ) -> Tuple[int, int, float, List[Tuple[int, np.ndarray]]]:
-    """(width, height, fps, [(frame_index, HxWx3 RGB uint8), ...]) — the
-    ``decode_avi_frames`` contract for H.264 Annex B streams."""
+    """(width, height, fps, [(frame_index, HxWx3 RGB uint8), ...]) for
+    H.264 Annex B streams."""
     frames, (w, h, fps) = decode_h264(payload)
     out = []
     for i in range(0, len(frames), max(1, every_n_frames)):

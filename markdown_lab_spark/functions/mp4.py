@@ -4,7 +4,7 @@ parsing (ISO/IEC 14496-12) plus the AVC-in-MP4 binding (14496-15):
 ``avcC`` decoder configuration, length-prefixed (AVCC) samples converted
 to Annex B and decoded by the in-repo H.264 codec (``h264.py``).
 
-Like the AVI module this ships an in-repo MUXER twin (``encode_mp4``)
+Like the other pure codecs this ships an in-repo MUXER twin (``encode_mp4``)
 so decode tests are round-trip exact with zero native deps: the muxer
 writes spec-shaped ftyp/moov/mdat with real sample tables (stts/stsc/
 stsz/stco|co64/stss) from our own H.264 encodings, in both box orders
@@ -13,9 +13,8 @@ found in the wild (moov-last progressive and moov-first "faststart").
 Reference parity note: the reference engine has no media codecs
 (it is an HTML->markdown crawler); this module is training-data-
 pipeline surface per the brief (frame sampling for multimodal
-datasets). Spark-side it rides the existing ``sample_video_frames``
-mapInPandas path — MP4 payloads are sniffed by the ``ftyp`` box and
-emit the same PNG frame rows every image operator consumes.
+datasets): ``decode_mp4_frames`` yields sampled RGB frames, and
+``is_mp4`` sniffs payloads by the ``ftyp`` box.
 
 Format facts used (public specs: ISO 14496-12 §4/8, 14496-15 §5):
 - A box is ``u32 size, 4cc type, payload``; ``size == 1`` means a u64
@@ -546,10 +545,9 @@ def decode_mp4_frames(
     every_n_frames: int = 1,
     max_frames: Optional[int] = None,
 ) -> Tuple[int, int, float, List[Tuple[int, np.ndarray]]]:
-    """The ``decode_avi_frames`` contract for MP4/H.264 payloads:
-    (width, height, fps, [(frame_index, HxWx3 RGB uint8), ...])."""
-    from .h264 import decode_h264  # noqa: PLC0415
-    from .mpeg1 import ycbcr420_to_rgb  # noqa: PLC0415
+    """(width, height, fps, [(frame_index, HxWx3 RGB uint8), ...]) for
+    MP4/H.264 payloads."""
+    from .h264 import decode_h264, ycbcr420_to_rgb  # noqa: PLC0415
 
     if every_n_frames < 1:
         raise ValueError("every_n_frames must be >= 1")

@@ -9,12 +9,8 @@ real web carries: baseline, progressive, 12-bit sequential
 SOF10 QM coder, ``jpeg_arith.py``),
 GIF (LZW + interlacing, ``codecs.py``), baseline TIFF (none/PackBits/
 LZW-early-change strips + horizontal predictor, ``tiff.py``), 16-bit
-PCM WAV (stdlib wave),
-and AVI video carrying MJPEG, uncompressed-DIB or all-intra H.264
-frames (RIFF demuxer + frame sampler, ``video.py``; baseline-intra
-H.264 decode in ``h264.py``) — selected by magic-byte sniffing;
-anything else (INTER-frame H.264 plus VP9/AV1 — the one remaining
-stub, genuinely needing native libs)
+PCM WAV (stdlib wave) — selected by magic-byte sniffing;
+anything else (video payloads included)
 falls back to ``decode_image_stub``, a deterministic fake (dimensions
 and a checksum derived from the bytes) that raises
 ``NotImplementedError`` when ``strict=True``.
@@ -292,9 +288,7 @@ def extract_audio_features(
 
 def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
     """Video frame-sampling PLAN: emits (media_id, frame_ts) rows from the
-    declared duration metadata — the metadata-only path for payloads whose
-    codec needs a native lib. For AVI (MJPEG / raw DIB) payloads the REAL
-    extraction is ``video.sample_video_frames``. Pure JVM
+    declared duration metadata, without decoding the payload. Pure JVM
     (sequence + explode)."""
     duration = F.coalesce(
         F.element_at(F.col("meta"), "duration_s").cast("int"), F.lit(0)

@@ -10,7 +10,7 @@ differencing). Tiled files, 16-bit samples, CMYK, and JPEG-in-TIFF
 raise ValueError (decoder-boundary contract — one adversarial row
 can't abort a job).
 
-Like the other pure codecs (PNG/JPEG/GIF/AVI), an in-repo ENCODER
+Like the other pure codecs (PNG/JPEG/GIF), an in-repo ENCODER
 provides fixtures: ``encode_tiff`` writes all three compressions and
 the predictor, so round-trip tests are pixel-exact with zero native
 deps, and the magic-sniffed decode slots into the same mapInPandas

@@ -13,7 +13,7 @@ What it implements (the subset a text extractor needs):
   streams (PDF 1.5+), ``/Prev`` chains, object streams (``/Type/ObjStm``,
   type-2 xref entries). A torn or corrupt xref falls back to a linear
   ``N G obj`` scan — truncated tails are common in crawled PDFs and must
-  not kill a task (the WARC/AVI torn-tail posture).
+  not kill a task (the WARC torn-tail posture).
 - **Filters**: FlateDecode (with PNG predictors 10-15 and TIFF
   predictor 2), LZWDecode (the early-change variant shared with
   ``functions/tiff.py``), ASCIIHexDecode, ASCII85Decode,

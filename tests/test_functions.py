@@ -124,16 +124,6 @@ def test_ngram_jaccard_exact(spark):
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in rows] == [(1, 2, 1.0)]
 
 
-def test_simhash_similar_docs_close(spark):
-    df = spark.createDataFrame(
-        [(1, "spark data pipeline " * 20), (2, "spark data pipeline " * 20)],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r["simhash"] for r in D.simhash16(df, "doc_id", "text").collect()}
-    assert rows[1] == rows[2]
-    assert set(rows[1]) <= {"0", "1"} and len(rows[1]) == 16
-
-
 def test_cosine_topk_exact_vs_lsh(spark):
     import random
 

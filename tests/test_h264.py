@@ -1,7 +1,7 @@
 """H.264 baseline-intra codec: VLC table structure (prefix-freeness +
 Kraft sums), CAVLC roundtrips, decode == encoder-reconstruction
 bit-equality on every macroblock path, spec error boundaries, and the
-AVI / Spark frame-sampling integration."""
+RGB <-> YCbCr 4:2:0 helpers."""
 
 from fractions import Fraction
 
@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 
 from markdown_lab_spark.functions import h264 as H
-from markdown_lab_spark.functions.mpeg1 import rgb_to_ycbcr420
+from markdown_lab_spark.functions.h264 import rgb_to_ycbcr420
 
 
 # ---------------------------------------------------------------------------
@@ -310,46 +310,18 @@ def test_is_h264_sniff():
 
 
 # ---------------------------------------------------------------------------
-# container + Spark integration
+# RGB <-> YCbCr 4:2:0 helpers
 # ---------------------------------------------------------------------------
 
 
-def test_avi_h264_roundtrip():
-    from markdown_lab_spark.functions.video import decode_avi_frames, encode_avi, parse_avi
-
-    imgs = [_textured(32, 48, seed=s) for s in range(3)]
-    avi = encode_avi(imgs, fps_num=2, fps_den=1, codec="h264")
-    info = parse_avi(avi)
-    assert info["codec"] == "h264" and info["n_frames"] == 3
-    w, h, fps, frames = decode_avi_frames(avi)
-    assert (w, h, fps) == (48, 32, 2.0)
-    rec = H.encode_h264_reconstruction(imgs, qp=26)
-    from markdown_lab_spark.functions.mpeg1 import ycbcr420_to_rgb
-
-    for (idx, rgb), r in zip(frames, rec):
-        np.testing.assert_array_equal(rgb, ycbcr420_to_rgb(*r))
-
-
-def test_spark_frame_sampling_h264_elementary(spark):
-    from markdown_lab_spark.functions.codecs import decode_png
-    from markdown_lab_spark.functions.mpeg1 import ycbcr420_to_rgb
-    from markdown_lab_spark.functions.video import sample_video_frames
-
-    imgs = [_textured(32, 32, seed=s) for s in range(4)]
-    bs = H.encode_h264(imgs, qp=24, fps=2.0)  # 2 s of video at 2 fps
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(bs), "video/h264", {}),
-         (2, "video", bytearray(b"\x00\x00\x00\x01garbage"), "video/h264", {})],
-        "media_id long, kind string, payload binary, mime string, "
-        "meta map<string,string>",
-    )
-    got = sample_video_frames(media, every_n_seconds=1.0).orderBy(
-        "frame_index").collect()
-    assert [r["frame_index"] for r in got] == [0, 2]  # every 2nd frame
-    rec = H.encode_h264_reconstruction(imgs, qp=24)
-    for r in got:
-        _, _, _, px = decode_png(bytes(r["frame_png"]))
-        np.testing.assert_array_equal(px, ycbcr420_to_rgb(*rec[r["frame_index"]]))
+def test_rgb_helpers_roundtrip_on_flat_colors():
+    rgb = np.zeros((16, 16, 3), dtype=np.uint8)
+    rgb[:, :, 0] = 200
+    rgb[:, :, 1] = 60
+    rgb[:, :, 2] = 30
+    y, cb, cr = H.rgb_to_ycbcr420(rgb)
+    back = H.ycbcr420_to_rgb(y, cb, cr)
+    assert np.all(np.abs(back.astype(int) - rgb.astype(int)) <= 2)
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,6 @@
 """MP4 (ISO BMFF) demux: box walking, sample-table resolution, avcC
-parameter sets, AVCC->Annex B conversion, both box orders, torn tails,
-and the Spark frame-sampling dispatch."""
+parameter sets, AVCC->Annex B conversion, both box orders and torn
+tails."""
 
 from __future__ import annotations
 
@@ -8,17 +8,18 @@ import numpy as np
 import pytest
 
 from markdown_lab_spark.functions import h264, mp4
-from markdown_lab_spark.functions.codecs import decode_png
-from markdown_lab_spark.functions.h264 import decode_h264, encode_h264
+from markdown_lab_spark.functions.h264 import (
+    decode_h264,
+    encode_h264,
+    rgb_to_ycbcr420,
+    ycbcr420_to_rgb,
+)
 from markdown_lab_spark.functions.mp4 import (
     decode_mp4_frames,
     encode_mp4,
     is_mp4,
     parse_mp4,
 )
-from markdown_lab_spark.functions.mpeg1 import ycbcr420_to_rgb
-from markdown_lab_spark.functions.multimodal import MEDIA_SCHEMA
-from markdown_lab_spark.functions.video import sample_video_frames
 
 
 def _frames(n: int = 6, h: int = 32, w: int = 48, seed: int = 3):
@@ -119,8 +120,6 @@ def test_not_mp4_and_foreign_codec_raise():
 def test_pcm_leg_is_lossless_through_mp4():
     # I_PCM is lossless in YCbCr; compare against the 4:2:0 round-trip
     # of the source (the only loss is chroma subsampling, outside PCM).
-    from markdown_lab_spark.functions.mpeg1 import rgb_to_ycbcr420
-
     frames = _frames(3)
     p = encode_mp4(frames, qp=40, gop=0, pcm_every=1)
     _, _, _, got = _decoded_via_mp4(p)
@@ -128,30 +127,6 @@ def test_pcm_leg_is_lossless_through_mp4():
     for idx, rgb in got:
         np.testing.assert_array_equal(
             rgb, ycbcr420_to_rgb(*rgb_to_ycbcr420(frames[idx]))
-        )
-
-
-def test_spark_sampling_dispatches_mp4(spark):
-    frames = _frames(8)
-    p = encode_mp4(frames, qp=26, fps=2.0, gop=4)  # 4 s of video
-    rows = [
-        (1, "video", bytearray(p), "video/mp4", {"duration_s": "4"}),
-        (2, "video", bytearray(b"\x00\x00\x00\x14ftypcorrupt"), "video/mp4", {}),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = (
-        sample_video_frames(media, every_n_seconds=1.0)
-        .orderBy("frame_index")
-        .collect()
-    )
-    assert [r["frame_index"] for r in got] == [0, 2, 4, 6]
-    assert got[0]["width"] == 48 and got[0]["height"] == 32
-    # sampled PNGs decode to the H.264 reconstruction of those frames
-    pics, _ = decode_h264(encode_h264(frames, qp=26, fps=2.0, gop=4))
-    for r in got:
-        _, _, _, px = decode_png(bytes(r["frame_png"]))
-        np.testing.assert_array_equal(
-            px, ycbcr420_to_rgb(*pics[r["frame_index"]])
         )
 
 

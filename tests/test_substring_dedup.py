@@ -1,7 +1,6 @@
 """Exact substring dedup (ExactSubstr, Lee et al. 2021): windowed
 formulation — planted-span exactness, interval-merge coverage, short-doc
-pass-through, whole-doc removal, DuckDB cross-oracle, rolling-hash fast
-path agreement."""
+pass-through, whole-doc removal and the DuckDB cross-oracle."""
 
 import duckdb
 import pytest
@@ -10,7 +9,6 @@ from pyspark.sql import functions as F
 from markdown_lab_spark.functions.dedup import (
     dedup_substrings,
     duplicate_window_starts,
-    duplicate_window_starts_fast,
     token_windows,
 )
 
@@ -167,27 +165,6 @@ def test_duckdb_cross_oracle(spark):
         FROM marked GROUP BY doc_id ORDER BY doc_id
     """).fetchall()
     assert spark_out == [tuple(r) for r in oracle]
-
-
-def test_fast_rolling_hash_path_agrees(spark):
-    rows = [
-        (1, f"one two three {BOILER} four five six"),
-        (2, f"seven eight {BOILER} nine ten eleven twelve"),
-        (3, "a b c d e f g h i j"),
-        (4, "a b c d e f g h i j"),
-        (5, "short doc"),
-        (6, None),
-    ]
-    df = _mk(spark, rows)
-    exact = {
-        (r["id"], r["s"])
-        for r in duplicate_window_starts(df, "doc_id", "text", L).collect()
-    }
-    fast = {
-        (r["id"], r["s"])
-        for r in duplicate_window_starts_fast(df, "doc_id", "text", L).collect()
-    }
-    assert exact == fast and len(exact) > 0
 
 
 def test_plan_has_no_window_or_cartesian(spark):

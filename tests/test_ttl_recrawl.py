@@ -170,6 +170,12 @@ def test_build_cuckoo_executor_side_matches_driver_build(spark, cycle_pages):
     assert all(not sh.failed for sh in built.shards)
 
 
+def test_cuckoo_shards_is_a_class_constant_not_a_setting():
+    assert CrawlConfig().cuckoo_shards == 4
+    with pytest.raises(TypeError):
+        CrawlConfig(cuckoo_shards=8)
+
+
 def test_cuckoo_full_tracks_failures_and_delete_is_safe():
     """ADVICE: a key that failed to insert (table full) must not be
     deletable — deleting it could strip a colliding fingerprint belonging
