@@ -70,11 +70,6 @@ class BloomFilter:
         return self.contains_keys(url_hash64_vec(list(urls)))
 
     # -- distribution ---------------------------------------------------------
-    def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert other.m_bits == self.m_bits and other.k == self.k
-        self.bits |= other.bits
-        return self
-
     def to_bytes(self) -> bytes:
         return self.bits.tobytes()
 
@@ -85,9 +80,6 @@ class BloomFilter:
         bf = cls(capacity, fpr)
         bf.bits = np.frombuffer(raw, dtype=np.uint64).copy()
         return bf
-
-    def fill_ratio(self) -> float:
-        return float(np.unpackbits(self.bits.view(np.uint8)).mean())
 
 
 class ShardedBloom:
@@ -134,17 +126,3 @@ def partial_bitsets_from_keys(
         bf.add_keys(keys[shard_ids == s])
         out[int(s)] = bf.to_bytes()
     return out
-
-
-def merge_partials(
-    partials: Iterable[Dict[int, bytes]],
-    num_shards: int,
-    capacity: int,
-    fpr: float = 0.01,
-) -> ShardedBloom:
-    """Driver-side OR-merge of per-partition partial bitsets."""
-    sb = ShardedBloom(num_shards, capacity, fpr)
-    for partial in partials:
-        for s, raw in partial.items():
-            sb.shards[s].bits |= np.frombuffer(raw, dtype=np.uint64)
-    return sb

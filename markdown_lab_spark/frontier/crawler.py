@@ -743,20 +743,13 @@ class CrawlEngine:
         resume: bool = False,
         from_wave: Optional[int] = None,
         host_priorities: Optional[DataFrame] = None,
-        url_priorities: Optional[DataFrame] = None,
     ) -> Dict[str, DataFrame]:
         """``host_priorities``: optional (host, priority) table — e.g.
         ``rank.host_pagerank_priorities`` over a previous crawl's link
         graph — consumed at link discovery so newly found URLs enter the
         frontier with their host's score instead of the flat 0.5 (the
         politeness queues order by priority DESC within a depth). Tiny
-        table (one row per host): AQE broadcasts the join.
-
-        ``url_priorities``: optional (canon_url, priority) table (e.g.
-        ``rank.url_pagerank_priorities``) — per-URL scores that order a
-        host's own queue; takes precedence over the host score where
-        both exist. At warehouse scale bucket it by canon_url so the
-        per-wave join is co-located."""
+        table (one row per host): AQE broadcasts the join."""
         cfg = self.config
         frontier: Optional[DataFrame]
         seen: Optional[DataFrame]
@@ -1089,18 +1082,6 @@ class CrawlEngine:
                         F.coalesce(F.col("_host_prio"), F.col("priority")),
                     )
                     .drop("_host_prio")
-                )
-            if url_priorities is not None:
-                up = url_priorities.select(
-                    "canon_url", F.col("priority").alias("_url_prio")
-                )
-                discovered = (
-                    discovered.join(up, on="canon_url", how="left")
-                    .withColumn(
-                        "priority",
-                        F.coalesce(F.col("_url_prio"), F.col("priority")),
-                    )
-                    .drop("_url_prio")
                 )
 
             # 7. bookkeeping — retrying rows are NOT seen yet. Materialized:

@@ -240,8 +240,8 @@ class ShardedCuckoo:
     pass — the last driver-side term in the scaling model. Shards are
     fully independent tables, so (a) per-wave maintenance parallelizes
     across a thread pool (numpy's scatter/gather kernels release the GIL;
-    the 10^6-key drill in tests/test_ttl_recrawl.py measures the wall
-    scaling), (b) each shard is small enough to stay cache-resident, and
+    the 10^6-key drill in tests/test_ttl_recrawl.py checks the threaded
+    insert), (b) each shard is small enough to stay cache-resident, and
     (c) at cluster scale shards map 1:1 onto host-partitioned executors
     (the same placement the politeness scheduler already uses).
 

@@ -1,7 +1,7 @@
 """From-scratch murmur3, NumPy-vectorized over variable-length byte strings.
 
 The north rule requires a from-scratch murmur3-hashed URL-seen set (no mmh3
-dependency in this environment anyway). ``murmur3_32_vec`` processes an
+dependency in this environment anyway). ``url_hash64_vec`` hashes an
 Arrow batch of encoded URLs without per-row Python: rows are padded into a
 2D uint8 matrix and the x86_32 algorithm runs block-column-wise across all
 rows at once. Scalar reference implementation included for cross-checking
@@ -43,15 +43,6 @@ def _pack_batch(items: List[bytes]) -> Tuple[np.ndarray, np.ndarray]:
         rows = np.repeat(np.arange(n, dtype=np.int64), lengths)
         buf.reshape(-1)[rows * width + pos_in_row] = flat
     return buf, lengths
-
-
-def murmur3_32_vec(data: Iterable[bytes], seed: int = 0) -> np.ndarray:
-    """Vectorized murmurhash3_x86_32 over a batch of byte strings."""
-    items: List[bytes] = [d if isinstance(d, bytes) else bytes(d) for d in data]
-    if not items:
-        return np.empty(0, dtype=np.uint32)
-    buf, lengths = _pack_batch(items)
-    return _murmur3_32_packed(buf, lengths, seed)
 
 
 def _murmur3_32_packed(

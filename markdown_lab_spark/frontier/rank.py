@@ -167,48 +167,3 @@ def host_edges_from_docs(docs: DataFrame) -> DataFrame:
         .filter(F.col("dst_host") != "")
         .distinct()
     )
-
-
-def url_edges_from_docs(docs: DataFrame) -> DataFrame:
-    """(src, dst) canonical-URL edge list from checkpointed docs — the
-    full-resolution input for URL-level PageRank."""
-    from ..functions.udfs import normalize_url_col  # noqa: PLC0415
-
-    return (
-        docs.select(
-            F.col("canon_url").alias("src"), F.explode("links").alias("link")
-        )
-        .filter(F.col("link").rlike(r"^https?://[^/\s]+"))
-        .select("src", normalize_url_col(F.col("link")).alias("dst"))
-        .filter(F.col("dst") != "")
-        .distinct()
-    )
-
-
-def url_pagerank_priorities(docs: DataFrame, iters: int = 5) -> DataFrame:
-    """(canon_url, priority in [0.5, 1]) — URL-graph PageRank scaled into
-    the frontier's priority domain, anchored at the 0.5 default exactly
-    as ``host_pagerank_priorities`` is (ranked URLs never sink below
-    unranked ones; all-equal ranks collapse to the default). Unlike the
-    host-level variant (one rank per host, inert WITHIN a host's
-    politeness queue), URL ranks order the queue itself: high-rank pages
-    of a host fetch before its long tail.
-
-    Scale note: the priorities table is |URLs| rows; the per-wave join
-    against discovered links re-shuffles it unless it is bucketed by
-    canon_url — at warehouse scale persist it as a canon_url-bucketed
-    table so the join is co-located."""
-    pr = pagerank(url_edges_from_docs(docs), iters=iters, src_col="src", dst_col="dst")
-    lohi = pr.agg(F.min("rank").alias("lo"), F.max("rank").alias("hi")).collect()[0]
-    if lohi["hi"] is None:  # empty graph
-        return pr.select(
-            F.col("node").alias("canon_url"), F.col("rank").alias("priority")
-        )
-    span = (lohi["hi"] - lohi["lo"]) or 1.0
-    return pr.select(
-        F.col("node").alias("canon_url"),
-        (
-            F.lit(0.5)
-            + F.lit(0.5) * (F.col("rank") - F.lit(lohi["lo"])) / F.lit(span)
-        ).alias("priority"),
-    )

@@ -14,8 +14,8 @@ partial-agg groupBy — the Zipf head combines map-side) and only the
 ``max_words`` (most-frequent first; ties broken lexicographically so
 the cut is order-independent).
 
-Encoding is where the scale is: ``bpe_encode`` / ``bpe_token_count``
-run as Arrow-batched pandas UDFs with a per-executor word -> tokens
+Encoding is where the scale is: ``bpe_token_count`` runs as an
+Arrow-batched pandas UDF with a per-executor word -> tokens
 memo (Zipf again: the hit rate on real text is high, so the per-word
 merge loop amortizes away). Token counts feed ``packing.pack_sequences``
 directly, replacing the whitespace proxy with real tokenizer lengths.
@@ -179,55 +179,22 @@ def _ranks(merges: List[Tuple[str, str]]) -> Dict[Tuple[str, str], int]:
     return {tuple(p): i for i, p in enumerate(merges)}
 
 
-def bpe_encode(
-    docs: DataFrame,
-    merges: List[Tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "tokens",
-) -> DataFrame:
-    """Adds ``out_col: array<string>`` — the BPE token stream. Arrow-
-    batched pandas UDF with a per-executor word->tokens memo; the merge
-    list rides to executors inside the UDF closure (small: it is the
-    tokenizer, not the corpus)."""
-    ranks = _ranks(merges)
-    memo: dict = {}
-
-    @F.pandas_udf("array<string>")
-    def enc(col: pd.Series) -> pd.Series:
-        return col.map(lambda t: encode_text(t or "", ranks, memo))
-
-    return docs.withColumn(out_col, enc(F.col(text_col)))
-
-
 def bpe_token_count(
     docs: DataFrame,
     merges: List[Tuple[str, str]],
     text_col: str = "text",
     out_col: str = "n_bpe_tokens",
 ) -> DataFrame:
-    """Adds ``out_col: long`` — token count only (the packing input):
-    same memo, no token arrays materialized or shuffled."""
+    """Adds ``out_col: long`` — the BPE token count (the packing input).
+    Arrow-batched pandas UDF with a per-executor word->tokens memo; the
+    merge list rides to executors inside the UDF closure (small: it is
+    the tokenizer, not the corpus). No token arrays are materialized or
+    shuffled."""
     ranks = _ranks(merges)
     memo: dict = {}
 
     @F.pandas_udf("long")
     def cnt(col: pd.Series) -> pd.Series:
-        def one(t):
-            n = 0
-            for w in pretokenize(t or ""):
-                hit = memo.get(w)
-                if hit is None:
-                    hit = encode_word(w, ranks)
-                    memo[w] = hit
-                n += len(hit)
-            return n
-
-        return col.map(one)
+        return col.map(lambda t: len(encode_text(t or "", ranks, memo)))
 
     return docs.withColumn(out_col, cnt(F.col(text_col)))
-
-
-def decode_tokens(tokens: Iterable[str]) -> str:
-    """Inverse of encoding up to the pre-tokenizer's whitespace
-    convention: join tokens, turn EOW markers back into single spaces."""
-    return "".join(tokens).replace(EOW, " ").strip()

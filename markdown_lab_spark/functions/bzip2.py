@@ -27,10 +27,6 @@ class Bzip2Error(ValueError):
     pass
 
 
-def is_bzip2(payload: bytes) -> bool:
-    return payload[:3] == b"BZh" and len(payload) > 3 and 0x31 <= payload[3] <= 0x39
-
-
 def _bz_crc_table() -> list[int]:
     table = []
     for n in range(256):

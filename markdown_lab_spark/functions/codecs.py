@@ -244,29 +244,6 @@ def encode_wav(samples: np.ndarray, rate: int) -> bytes:
     return buf.getvalue()
 
 
-def audio_features(
-    rate: int, nch: int, samples: np.ndarray, bits_per_sample: int = 16
-) -> dict:
-    """Deterministic audio features: duration, rms (normalized to the
-    sample depth's full scale — FLAC payloads carry 8..32-bit PCM, so a
-    fixed /32768 was off by up to 2^16 for non-16-bit audio), zero-
-    crossing rate of the mean channel."""
-    scale = float(1 << (bits_per_sample - 1))
-    mono = samples.astype(np.float64).mean(axis=1) / scale
-    n = len(mono)
-    duration = n / rate if rate else 0.0
-    rms = float(np.sqrt(np.mean(mono**2))) if n else 0.0
-    zcr = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if n > 1 else 0.0
-    return {
-        "sample_rate": rate,
-        "n_channels": nch,
-        "n_samples": n,
-        "duration_s": round(duration, 6),
-        "rms": round(rms, 6),
-        "zcr": round(zcr, 6),
-    }
-
-
 def resize_nearest(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """Nearest-neighbor resize (deterministic: src = floor(dst*src/dst)),
     the resize kernel for the training-pipeline operator — bilinear etc.

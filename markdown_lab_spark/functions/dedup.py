@@ -495,52 +495,6 @@ def embedding_neardup_pairs_banded(
     )
 
 
-def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.99,
-    bits: int = 8,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs — CORRECTNESS BASELINE ONLY,
-    not for production scale.
-
-    Sign-LSH bucketing (concatenated signs of the first ``bits`` dims)
-    restricts the self-join to same-bucket candidates, then exact cosine
-    filters at ``threshold``. The single 8-bit axis-aligned bucket leaves
-    ~n/256 rows per bucket and the self-join is QUADRATIC within each —
-    fine at oracle scale, a blow-up at 10^10 rows. The production path is
-    :func:`embedding_neardup_pairs_banded` (Rademacher hyperplanes +
-    banding, tunable nbits/bands), which q35 exercises with the same
-    output contract. Kept because its plan is trivially SQL-expressible,
-    making it the hash-checked ground truth the banded variant is
-    completeness-tested against.
-    Returns (id_a, id_b, cos_sim) with id_a < id_b, cos rounded to 4dp.
-    """
-    from .similarity import cosine_similarity_col, sign_bucket_col
-
-    b = embeddings.select(
-        F.col(id_col), F.col(vec_col), sign_bucket_col(F.col(vec_col), bits).alias("bucket")
-    )
-    left = b.alias("l")
-    right = b.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.round(
-                cosine_similarity_col(F.col(f"l.{vec_col}"), F.col(f"r.{vec_col}")), 4
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Benchmark decontamination (train/test overlap removal)
 # ---------------------------------------------------------------------------

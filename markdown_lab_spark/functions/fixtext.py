@@ -16,8 +16,7 @@ iterates to fix double-encoding, bounded at 3 rounds.
 
 Scale shape: scan-local Arrow-batched pandas UDF (unicodedata has no
 JVM twin); the telltale pre-filter makes the common clean-text case a
-single regex scan per row. Control stripping alone is pure JVM
-(`strip_control_chars`).
+single regex scan per row.
 """
 
 from __future__ import annotations
@@ -27,8 +26,6 @@ import unicodedata
 from typing import Optional
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 # UTF-8 lead bytes decode (in cp1252/latin-1) to these characters; a
@@ -88,11 +85,3 @@ def fix_text_udf(form: Optional[str] = "NFC"):
         return pd.Series([fix_text_str(t, form) for t in text])
 
     return _fix
-
-
-def strip_control_chars(col: Column) -> Column:
-    """JVM-only control stripping (C0 except tab/newline/CR, DEL, C1)
-    for pipelines that want the cheap pass without Python."""
-    return F.regexp_replace(
-        col, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F-\\x9F]", ""
-    )

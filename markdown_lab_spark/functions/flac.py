@@ -316,13 +316,9 @@ _BPS_TBL = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
 
 
 def decode_flac(
-    payload: bytes, verify_md5: bool = True, return_bps: bool = False
+    payload: bytes, verify_md5: bool = True
 ) -> Tuple[int, int, np.ndarray]:
-    """payload -> (sample_rate, n_channels, samples int32 [n, nch]),
-    plus the declared bits-per-sample as a 4th element when
-    ``return_bps`` is set (FLAC carries 8..32-bit PCM; feature
-    extraction needs the depth to normalize amplitudes — round-5
-    ADVICE).
+    """payload -> (sample_rate, n_channels, samples int32 [n, nch]).
 
     Raises ValueError on any malformed input (the decoder-boundary
     contract shared by every codec in this package).
@@ -456,8 +452,6 @@ def decode_flac(
         raw = _pcm_bytes(out, width)
         if hashlib.md5(raw).digest() != md5:
             raise ValueError("FLAC MD5 signature mismatch")
-    if return_bps:
-        return rate, nch, out.astype(np.int32), bps
     return rate, nch, out.astype(np.int32)
 
 

@@ -1,8 +1,8 @@
 """H.264/AVC (ISO/IEC 14496-10 / ITU-T H.264) — baseline-profile
 decode + encode: IDR (intra) pictures AND P (inter) pictures, the two
-picture types baseline video is made of — this closes the
-frame-sampling story for H.264 payloads end to end (keyframe sampling
-decodes the IDR path; full-sequence sampling decodes the P chain).
+picture types baseline video is made of (``decode_h264`` decodes
+the IDR path and the P chain; MP4 payloads reach it through
+``mp4.parse_mp4``).
 
 What is REAL here:
 - Annex B byte streams: start codes, emulation-prevention (EBSP<->RBSP),
@@ -93,7 +93,7 @@ to the dominant keyframe codec at the 100 TB posture.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Tuple
 
 import numpy as np
 
@@ -357,18 +357,6 @@ class _Bits:
     def se(self) -> int:
         k = self.ue()
         return (k + 1) >> 1 if k & 1 else -(k >> 1)
-
-    def more_rbsp_data(self) -> bool:
-        # true unless only the rbsp_stop_one_bit (+ alignment zeros) remain
-        total = len(self.data) * 8
-        if self.pos >= total:
-            return False
-        last = total - 1
-        while last > self.pos and (
-            self.data[last >> 3] >> (7 - (last & 7))
-        ) & 1 == 0:
-            last -= 1
-        return self.pos < last
 
 
 class _BitsW:
@@ -1360,23 +1348,6 @@ def _parse_chroma_residual(r, cbp_chroma, tc_cb, tc_cr, mb_x, mb_y):
     return dc_cb, dc_cr, ac_cb, ac_cr
 
 
-def is_h264(payload: bytes) -> bool:
-    """Annex B stream sniff: start code followed by an SPS NAL."""
-    if payload[:4] == b"\x00\x00\x00\x01" and len(payload) > 4:
-        return (payload[4] & 0x1F) == 7
-    if payload[:3] == b"\x00\x00\x01" and len(payload) > 3:
-        return (payload[3] & 0x1F) == 7
-    return False
-
-
-def h264_fps(payload: bytes) -> float:
-    """Frame rate from the SPS VUI alone (no frame decode)."""
-    for nal_type, _ref_idc, rbsp in parse_annexb_nals(payload):
-        if nal_type == 7:
-            return _parse_sps(rbsp).fps
-    raise ValueError("no SPS in stream")
-
-
 def decode_h264(payload: bytes):
     """Decode a baseline Annex B stream (I, P, and B pictures).
 
@@ -1547,20 +1518,6 @@ def decode_h264(payload: bytes):
     return out, (w, h, sps.fps)
 
 
-def ycbcr420_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray) -> np.ndarray:
-    """Full-range BT.601 (the JFIF convention the other codecs use) with
-    nearest-neighbor chroma upsampling — HxWx3 uint8."""
-    cbu = np.repeat(np.repeat(cb, 2, axis=0), 2, axis=1).astype(np.float64)
-    cru = np.repeat(np.repeat(cr, 2, axis=0), 2, axis=1).astype(np.float64)
-    yf = y.astype(np.float64)
-    r = yf + 1.402 * (cru - 128.0)
-    g = yf - 0.344136 * (cbu - 128.0) - 0.714136 * (cru - 128.0)
-    b = yf + 1.772 * (cbu - 128.0)
-    return np.clip(
-        np.stack([r, g, b], axis=2) + 0.5, 0, 255
-    ).astype(np.uint8)
-
-
 def rgb_to_ycbcr420(rgb: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Encoder-side companion (JFIF full-range, 2x2 mean subsampling)."""
     f = rgb.astype(np.float64)
@@ -1577,22 +1534,6 @@ def rgb_to_ycbcr420(rgb: np.ndarray) -> Tuple[np.ndarray, np.ndarray, np.ndarray
         np.clip(sub(cb) + 0.5, 0, 255).astype(np.uint8),
         np.clip(sub(cr) + 0.5, 0, 255).astype(np.uint8),
     )
-
-
-def decode_h264_frames(
-    payload: bytes,
-    every_n_frames: int = 1,
-    max_frames: Optional[int] = None,
-) -> Tuple[int, int, float, List[Tuple[int, np.ndarray]]]:
-    """(width, height, fps, [(frame_index, HxWx3 RGB uint8), ...]) for
-    H.264 Annex B streams."""
-    frames, (w, h, fps) = decode_h264(payload)
-    out = []
-    for i in range(0, len(frames), max(1, every_n_frames)):
-        out.append((i, ycbcr420_to_rgb(*frames[i])))
-        if max_frames is not None and len(out) >= max_frames:
-            break
-    return w, h, fps, out
 
 
 # ---------------------------------------------------------------------------
@@ -2782,8 +2723,6 @@ _B_MBTYPE: Dict[int, Tuple[str, Tuple[int, ...]]] = {
     20: ("16x8", (3, 3)), 21: ("8x16", (3, 3)),
     22: ("8x8", ()),
 }
-_B_MBTYPE_INV = {(shape, modes): t for t, (shape, modes) in _B_MBTYPE.items()
-                 if shape in ("16x16", "16x8", "8x16")}
 # partition geometry by shape (4x4-block units), with the 8.4.1.3
 # directional-rule tags
 _B_PART_GEOM = {

@@ -197,24 +197,6 @@ def score_docs(
     )
 
 
-def perplexity_filter(
-    docs: DataFrame,
-    lm: NGramLM,
-    max_perplexity: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.4,
-) -> DataFrame:
-    """Keep docs scoring at or below ``max_perplexity`` (the CCNet-style
-    quality cut). One extra join back to the input on the id."""
-    keep = (
-        score_docs(docs, lm, id_col, text_col, alpha)
-        .filter(F.col("perplexity") <= max_perplexity)
-        .select(id_col)
-    )
-    return docs.join(keep, on=id_col, how="left_semi")
-
-
 def perplexity_buckets(
     scores: DataFrame, n_buckets: int = 3, col: str = "perplexity"
 ) -> DataFrame:

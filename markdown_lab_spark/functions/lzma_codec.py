@@ -2,23 +2,22 @@
 
 The last archive format public text corpora actually ship in
 (HuggingFace datasets and several CC derivatives publish
-``.jsonl.xz``); with it the owned decode family covers gzip/zstd/LZ4/
+``.jsonl.xz``); with it the owned decode family covers zstd/LZ4/
 bzip2/xz. Verification posture as always: foreign bitstreams
 from the REAL implementations — stdlib ``lzma`` at multiple presets
-and both containers (.xz with CRC32/CRC64/SHA256 checks, and the
-legacy .lzma "alone" format with its end-marker path), plus the xz
-CLI (``tests/test_compression.py``).
+(.xz with CRC32/CRC64/SHA256 checks), plus the xz CLI
+(``tests/test_compression.py``).
 
 Implemented: the LZMA range coder (11-bit adaptive probabilities,
 direct bits), the full LZMA1 symbol machine (12-state transitions,
 literal coder with lc/lp/pb contexts and matched-literal mode, rep
 distances rep0-rep3 incl. short rep, length coders, distance slots
-with SpecPos reverse trees + align bits, end marker), the LZMA2 chunk
+with SpecPos reverse trees + align bits), the LZMA2 chunk
 layer (uncompressed chunks, state/props/dict reset modes), the .xz
 container (stream header/flags, block headers with filter chains —
 LZMA2-only accepted — optional size fields, header CRC32s, block
-padding, CRC32/CRC64/SHA256 content checks, index walk, footer), the
-.lzma alone header, and from-scratch CRC64-ECMA. BCJ filters and
+padding, CRC32/CRC64/SHA256 content checks, index walk, footer), and
+from-scratch CRC-32 and CRC64-ECMA. BCJ filters and
 dictionaries-as-presets are rejected explicitly (nothing in the
 corpus path emits them).
 """
@@ -26,8 +25,6 @@ corpus path emits them).
 from __future__ import annotations
 
 import hashlib
-
-from .deflate import crc32
 
 
 class LzmaError(ValueError):
@@ -41,13 +38,29 @@ def is_xz(payload: bytes) -> bool:
     return payload[:6] == XZ_MAGIC
 
 
-def is_lzma_alone(payload: bytes) -> bool:
-    # props byte < 9*5*5, then 4-byte dict size; weak magic by design
-    return len(payload) > 13 and payload[0] < 225
-
-
 # ---------------------------------------------------------------------------
-# CRC64-ECMA (xz's default check), verified against known vectors in tests
+# CRC-32 (header and block checks) and CRC64-ECMA (xz's default check),
+# verified against zlib and known vectors in tests
+
+
+def _crc32_table() -> list[int]:
+    table = []
+    for n in range(256):
+        c = n
+        for _ in range(8):
+            c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
+        table.append(c)
+    return table
+
+
+_CRC32 = _crc32_table()
+
+
+def crc32(data: bytes, value: int = 0) -> int:
+    c = value ^ 0xFFFFFFFF
+    for b in data:
+        c = _CRC32[(c ^ b) & 0xFF] ^ (c >> 8)
+    return c ^ 0xFFFFFFFF
 
 
 def _crc64_table() -> list[int]:
@@ -193,15 +206,14 @@ def _lzma_decode(
     rc: _RangeDecoder,
     st: _LzmaState,
     out: bytearray,
-    limit: int | None,
+    limit: int,
 ) -> None:
-    """Decode symbols until ``limit`` output bytes (LZMA2 chunk) or the
-    end marker (limit None — the alone-format path). ``out`` is the
-    whole dictionary window (shared across chunks)."""
+    """Decode symbols until ``limit`` output bytes (one LZMA2 chunk).
+    ``out`` is the whole dictionary window (shared across chunks)."""
     pb_mask = (1 << st.pb) - 1
     lp_mask = (1 << st.lp) - 1
     lc = st.lc
-    while limit is None or len(out) < limit:
+    while len(out) < limit:
         pos_state = len(out) & pb_mask
         if not rc.bit(st.is_match, (st.state << 4) | pos_state):
             prev = out[-1] if out else 0
@@ -281,14 +293,12 @@ def _lzma_decode(
                     dist += rc.direct(nd - 4) << 4
                     dist += rc.rtree(st.align, 0, 4)
             if dist == 0xFFFFFFFF:
-                if limit is not None:
-                    raise LzmaError("end marker inside sized chunk")
-                return  # end of stream marker
+                raise LzmaError("end marker inside sized chunk")
             st.reps[0] = dist
         dist = st.reps[0]
         if dist + 1 > len(out):
             raise LzmaError("match distance beyond window")
-        if limit is not None and len(out) + length > limit:
+        if len(out) + length > limit:
             raise LzmaError("match overruns chunk size")
         start = len(out) - dist - 1
         if dist + 1 >= length:
@@ -304,25 +314,6 @@ def _parse_props_byte(p: int) -> tuple[int, int, int]:
     lc = p % 9
     p //= 9
     return lc, p % 5, p // 5
-
-
-def decode_lzma_alone(payload: bytes) -> bytes:
-    """The legacy ``.lzma`` format (stdlib FORMAT_ALONE)."""
-    if len(payload) < 13:
-        raise LzmaError("alone header truncated")
-    lc, lp, pb = _parse_props_byte(payload[0])
-    usize = int.from_bytes(payload[5:13], "little")
-    st = _LzmaState(lc, lp, pb)
-    rc = _RangeDecoder(payload, 13)
-    out = bytearray()
-    limit = None if usize == 0xFFFFFFFFFFFFFFFF else usize
-    if limit is None:
-        _lzma_decode(rc, st, out, None)
-    else:
-        # sized streams may still carry a trailing end marker; decode
-        # to the size, tolerating the marker form by using the limit
-        _lzma_decode(rc, st, out, limit)
-    return bytes(out)
 
 
 # ---------------------------------------------------------------------------

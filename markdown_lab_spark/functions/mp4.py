@@ -12,9 +12,9 @@ found in the wild (moov-last progressive and moov-first "faststart").
 
 Reference parity note: the reference engine has no media codecs
 (it is an HTML->markdown crawler); this module is training-data-
-pipeline surface per the brief (frame sampling for multimodal
-datasets): ``decode_mp4_frames`` yields sampled RGB frames, and
-``is_mp4`` sniffs payloads by the ``ftyp`` box.
+pipeline surface (video ingest for multimodal datasets):
+``parse_mp4`` yields the Annex B samples ``h264.decode_h264`` decodes,
+and ``is_mp4`` sniffs payloads by the ``ftyp`` box.
 
 Format facts used (public specs: ISO 14496-12 §4/8, 14496-15 §5):
 - A box is ``u32 size, 4cc type, payload``; ``size == 1`` means a u64
@@ -537,26 +537,3 @@ def parse_mp4(payload: bytes) -> dict:
             "display_order": _display_order(stbl, len(frames)),
         }
     raise ValueError("no video track in MP4")
-
-
-@normalize_decode_errors("MP4")
-def decode_mp4_frames(
-    payload: bytes,
-    every_n_frames: int = 1,
-    max_frames: Optional[int] = None,
-) -> Tuple[int, int, float, List[Tuple[int, np.ndarray]]]:
-    """(width, height, fps, [(frame_index, HxWx3 RGB uint8), ...]) for
-    MP4/H.264 payloads."""
-    from .h264 import decode_h264, ycbcr420_to_rgb  # noqa: PLC0415
-
-    if every_n_frames < 1:
-        raise ValueError("every_n_frames must be >= 1")
-    info = parse_mp4(payload)
-    pics, (w, h, _fps) = decode_h264(b"".join(info["frames"]))
-    fps = info["fps_num"] / info["fps_den"]
-    out = []
-    for i in range(0, len(pics), every_n_frames):
-        out.append((i, ycbcr420_to_rgb(*pics[i])))
-        if max_frames is not None and len(out) >= max_frames:
-            break
-    return w, h, fps, out

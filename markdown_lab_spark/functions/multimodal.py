@@ -1,24 +1,22 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns.
 
 The Spark-side machinery (schemas, Arrow batch shapes, mapInPandas
-signatures, partition sizing) is real and tested. Decode is REAL for the
-formats implementable without a codec library — PNG (stdlib zlib + the
+signatures) is real and tested. Image decode is REAL for the formats
+implementable without a codec library — PNG (stdlib zlib + the
 five spec filters, ``codecs.py``), JPEG in every T.81 DCT process the
 real web carries: baseline, progressive, 12-bit sequential
 (``jpeg.py``), and arithmetic-coded sequential + progressive (SOF9/
 SOF10 QM coder, ``jpeg_arith.py``),
 GIF (LZW + interlacing, ``codecs.py``), baseline TIFF (none/PackBits/
-LZW-early-change strips + horizontal predictor, ``tiff.py``), 16-bit
-PCM WAV (stdlib wave) — selected by magic-byte sniffing;
-anything else (video payloads included)
-falls back to ``decode_image_stub``, a deterministic fake (dimensions
-and a checksum derived from the bytes) that raises
-``NotImplementedError`` when ``strict=True``.
+LZW-early-change strips + horizontal predictor, ``tiff.py``) — selected
+by magic-byte sniffing; anything else falls back to
+``decode_image_stub``, a deterministic fake (dimensions and a checksum
+derived from the bytes) that raises ``NotImplementedError`` when
+``strict=True``.
 
-Scale notes: media rows are orders of magnitude wider than text rows —
-``media_repartition_hint`` sizes partitions by BYTES (not rows) so one
-Arrow batch stays within executor memory; decode runs in mapInPandas with
-small maxRecordsPerBatch.
+Scale notes: media rows are orders of magnitude wider than text rows,
+so decode runs in mapInPandas with small maxRecordsPerBatch and
+re-splits oversize Arrow batches by ``batch_rows``.
 """
 
 from __future__ import annotations
@@ -29,17 +27,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-    ]
-)
 
 IMAGE_FEATURES_SCHEMA = (
     "media_id long, width int, height int, n_bytes long, checksum string, "
@@ -81,68 +68,6 @@ def native_image_backend():
         return w, h, c, arr
 
     return decode
-
-
-def native_audio_backend():
-    """Conditional native audio-decoder loader — the audio twin of
-    ``native_image_backend``: returns a callable ``payload ->
-    (rate, n_channels, samples int16[n, ch])`` backed by ``soundfile``
-    (libsndfile) when importable, else None. Production plugs
-    libsndfile/ffmpeg in here for FLAC/OGG/MP3; the stdlib-wave codec
-    stays as the correctness oracle for PCM WAV. Malformed payload ->
-    ValueError (the decoder-boundary contract)."""
-    try:
-        import soundfile  # noqa: PLC0415, F401
-    except ImportError:
-        return None
-
-    def decode(payload: bytes):
-        import io as _io  # noqa: PLC0415
-
-        import numpy as np  # noqa: PLC0415
-        import soundfile as _sf  # noqa: PLC0415
-
-        try:
-            samples, rate = _sf.read(_io.BytesIO(payload), dtype="int16")
-        except Exception as exc:  # noqa: BLE001 — boundary normalization
-            raise ValueError(f"native decode failed: {type(exc).__name__}: {exc}")
-        arr = np.asarray(samples, dtype=np.int16)
-        if arr.ndim == 1:
-            arr = arr[:, None]
-        return int(rate), int(arr.shape[1]), arr
-
-    return decode
-
-
-def _decode_audio_any(payload: bytes, backend=None):
-    """The one audio decode dispatch: injected native backend first
-    (when provided), then the pure decoders by magic sniff — stdlib-wave
-    PCM WAV and the pure-Python FLAC codec (functions/flac.py).
-    Returns (rate, nch, samples, bits_per_sample) — the depth rides the
-    contract so amplitude features normalize correctly for 8/20/24/32-
-    bit FLAC (round-5 ADVICE). Injected backends may return either the
-    legacy 3-tuple (treated as 16-bit PCM, the pre-round-6 behavior —
-    dtype is NOT a depth signal: libsndfile-style backends commonly
-    widen 16-bit samples into int32 buffers) or a 4-tuple carrying
-    their true bits-per-sample.
-    Raises ValueError when nothing can decode the payload."""
-    from . import codecs, flac  # noqa: PLC0415
-
-    if backend is not None:
-        try:
-            ret = backend(payload)
-            if len(ret) == 4:
-                return ret
-            rate, nch, samples = ret
-            return rate, nch, samples, 16
-        except ValueError:
-            pass  # fall through to the pure decoder
-    if codecs.is_wav(payload):
-        rate, nch, samples = codecs.decode_wav(payload)
-        return rate, nch, samples, 16  # decode_wav is 16-bit-PCM-only
-    if flac.is_flac(payload):
-        return flac.decode_flac(payload, return_bps=True)
-    raise ValueError("no audio decoder for payload")
 
 
 def _decode_image_any(payload: bytes, backend=None):
@@ -231,61 +156,6 @@ def extract_image_features(
     )
 
 
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, sample_rate int, n_channels int, n_samples long, "
-    "duration_s double, rms double, zcr double"
-)
-
-
-def extract_audio_features(
-    media: DataFrame, batch_rows: int = 64, audio_decoder=None
-) -> DataFrame:
-    """Real audio decode for 16-bit PCM WAV (stdlib wave) and FLAC
-    (pure-Python codec, magic-sniffed): sample rate, channel count,
-    duration, RMS level, zero-crossing rate.
-    ``audio_decoder`` injects a native backend (``payload ->
-    (rate, nch, samples)``, ValueError on failure) ahead of the pure
-    decoder — pass ``native_audio_backend()``'s result, or leave None
-    for the pure path. Undecodable payloads yield a null-features row."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from . import codecs  # noqa: PLC0415
-
-        for pdf in batches:
-            start = 0
-            while start < len(pdf):
-                part = pdf.iloc[start : start + batch_rows]
-                start += batch_rows
-                rows = []
-                for media_id, raw in zip(part["media_id"], part["payload"]):
-                    payload = bytes(raw or b"")
-                    try:
-                        rate, nch, samples, bps = _decode_audio_any(
-                            payload, audio_decoder
-                        )
-                        f = codecs.audio_features(rate, nch, samples, bps)
-                        rows.append({"media_id": media_id, **f})
-                        continue
-                    except ValueError:
-                        pass
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "sample_rate": None,
-                            "n_channels": None,
-                            "n_samples": None,
-                            "duration_s": None,
-                            "rms": None,
-                            "zcr": None,
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        run, AUDIO_FEATURES_SCHEMA
-    )
-
-
 def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
     """Video frame-sampling PLAN: emits (media_id, frame_ts) rows from the
     declared duration metadata, without decoding the payload. Pure JVM
@@ -302,17 +172,6 @@ def frame_sample_plan(media: DataFrame, every_n_seconds: int = 5) -> DataFrame:
             ).alias("frame_ts"),
         )
     )
-
-
-def media_repartition_hint(df: DataFrame, target_bytes: int = 64 << 20) -> DataFrame:
-    """Repartition media by cumulative payload size so each partition holds
-    ~target_bytes (rows are wide; row-count partitioning would OOM)."""
-    stats = df.agg(
-        F.sum(F.length(F.col("payload"))).alias("total"),
-    ).collect()[0]
-    total = stats["total"] or 0
-    nparts = max(1, int(total // target_bytes) + 1)
-    return df.repartition(nparts, F.col("media_id"))
 
 
 RESIZED_SCHEMA = "media_id long, width int, height int, payload binary"
@@ -364,86 +223,4 @@ def resize_images(
 
     return media.filter(F.col("kind") == "image").mapInPandas(
         run, RESIZED_SCHEMA
-    )
-
-
-def _luma(px):
-    """HxWxC uint8 -> HxW float luma (BT.601 weights; gray passes through)."""
-    if px.shape[2] == 1:
-        return px[:, :, 0].astype("float64")
-    return (
-        0.299 * px[:, :, 0].astype("float64")
-        + 0.587 * px[:, :, 1].astype("float64")
-        + 0.114 * px[:, :, 2].astype("float64")
-    )
-
-
-def dhash_bits(px) -> str:
-    """64-bit difference hash (dHash) of decoded pixels as a 64-char
-    '0'/'1' string — the perceptual-dedup fingerprint (row-wise
-    brightness gradient signs over a 9x8 nearest-neighbor thumbnail;
-    public method, widely used for LAION-style image dedup). Stable
-    under re-encoding/resizing because only gradient SIGNS survive."""
-    import numpy as np  # noqa: PLC0415
-
-    g = _luma(px)
-    h, w = g.shape
-    rows = np.minimum((np.arange(8) * h) // 8, h - 1)
-    cols = np.minimum((np.arange(9) * w) // 9, w - 1)
-    thumb = g[np.ix_(rows, cols)]
-    bits = (thumb[:, 1:] > thumb[:, :-1]).astype(np.uint8).ravel()
-    return "".join("1" if b else "0" for b in bits)
-
-
-def dhash_images(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    image_decoder=None,
-) -> DataFrame:
-    """(id, dhash) for every decodable image — Arrow-batched, scan-
-    local; undecodable payloads are dropped (native-seam formats).
-    The bit-string column plugs STRAIGHT into
-    ``dedup.simhash_hamming_pairs`` (same 64-bit representation), so
-    perceptual near-dup pairing inherits the pigeonhole-exact banded
-    join instead of growing its own."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for mid, raw in zip(pdf[id_col], pdf[payload_col]):
-                if raw is None:
-                    continue
-                try:
-                    _w, _h, _c, px = _decode_image_any(
-                        bytes(raw), image_decoder
-                    )
-                except ValueError:
-                    continue
-                ids.append(mid)
-                hashes.append(dhash_bits(px))
-            yield pd.DataFrame({id_col: ids, "dhash": hashes})
-
-    return media.select(id_col, payload_col).mapInPandas(
-        run, f"{id_col} long, dhash string"
-    )
-
-
-def image_neardup_pairs(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    bands: int = 8,
-    max_hamming: int = 7,
-    image_decoder=None,
-) -> DataFrame:
-    """(id_a, id_b, hamming) perceptual near-duplicate image pairs:
-    dHash fingerprints + the SimHash stack's banded Hamming join
-    (pigeonhole-exact for the radius, candidates ~O(true dups))."""
-    from .dedup import simhash_hamming_pairs  # noqa: PLC0415
-
-    fps = dhash_images(media, id_col, payload_col, image_decoder)
-    return simhash_hamming_pairs(
-        fps, id_col=id_col, sim_col="dhash",
-        bands=bands, max_hamming=max_hamming,
     )

@@ -18,7 +18,7 @@ twin; see dedup.py module docstring).
 
 from __future__ import annotations
 
-from typing import Dict, Tuple
+from typing import Dict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -109,17 +109,3 @@ def temperature_mix_fractions(
         k: min(1.0, (n ** alpha / z) * n_target / n) if n > 0 else 0.0
         for k, n in ns.items()
     }
-
-
-def train_holdout_split(
-    df: DataFrame, id_col: str, holdout_fraction: float, salt: str = "eval"
-) -> Tuple[DataFrame, DataFrame]:
-    """Disjoint, exhaustive (train, holdout) split on the same variate:
-    holdout = u < fraction, train = u >= fraction. Every row lands in
-    exactly one side on every engine, run, and partitioning — the
-    property randomSplit does NOT give you (its halves can overlap or
-    drop rows when the input recomputes nondeterministically)."""
-    if not 0.0 <= holdout_fraction <= 1.0:
-        raise ValueError("holdout_fraction must be in [0, 1]")
-    u = hash_uniform(F.col(id_col), salt)
-    return df.filter(u >= holdout_fraction), df.filter(u < holdout_fraction)

@@ -1,13 +1,13 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Dot products run as JVM higher-order functions (zip_with + aggregate),
-  so the scan is whole-stage-codegen'd; no Python.
-- ``lsh_cosine_topk``: the scale path — sign-LSH bucketing (axis-aligned
-  hyperplanes on the first ``b`` dimensions) prunes candidates to the
-  query's bucket (plus optional 1-bit-flip probing) before exact scoring.
-  At 100 TB the bucket column is a partition/bucket key so a query touches
-  one bucket's files instead of the full corpus.
+- ``cosine_similarity_col`` / ``sign_bucket_col``: the column expressions
+  the brute-force and sign-LSH top-k queries build on. Dot products run
+  as JVM higher-order functions (zip_with + aggregate), so the scan is
+  whole-stage-codegen'd; no Python.
+- ``ivf_topk``: the scale path — probe the query's nearest IVF cells
+  (``ivf_assign``, optionally over ``kmeans_train_centroids``) and score
+  only their members.
+- ``semdedup_pairs`` / ``semdedup_keep``: SemDedup within IVF cells.
 
 Scores are rounded to 4 decimals and ties broken by vec_id so results are
 deterministic and hash-comparable against the DuckDB oracle despite float
@@ -15,8 +15,6 @@ summation-order differences.
 """
 
 from __future__ import annotations
-
-from typing import List, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,22 +42,6 @@ def cosine_similarity_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact brute-force top-k by cosine similarity to a constant query."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = embeddings.select(
-        F.col(id_col),
-        F.round(cosine_similarity_col(F.col(vec_col), q), 4).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
-
-
 def sign_bucket_col(vec_col, bits: int = 8):
     """Sign-LSH bucket: concatenated signs of the first ``bits`` dims."""
     return F.concat(
@@ -68,34 +50,6 @@ def sign_bucket_col(vec_col, bits: int = 8):
             for d in range(bits)
         ]
     )
-
-
-def lsh_cosine_topk(
-    embeddings: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    bits: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    multiprobe: bool = True,
-) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's sign bucket
-    (plus all 1-bit-flip neighbor buckets when ``multiprobe``)."""
-    qbucket = "".join("1" if float(x) >= 0 else "0" for x in query_vec[:bits])
-    probes: List[str] = [qbucket]
-    if multiprobe:
-        for d in range(bits):
-            flipped = qbucket[:d] + ("0" if qbucket[d] == "1" else "1") + qbucket[d + 1 :]
-            probes.append(flipped)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    candidates = embeddings.withColumn(
-        "bucket", sign_bucket_col(F.col(vec_col), bits)
-    ).filter(F.col("bucket").isin(probes))
-    scored = candidates.select(
-        F.col(id_col),
-        F.round(cosine_similarity_col(F.col(vec_col), q), 4).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
 def ivf_assign(
@@ -174,33 +128,6 @@ def ivf_topk(
     )
 
 
-def pairwise_topk_join(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k corpus neighbors per query row (broadcast the smaller side)."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    c = corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"))
-    scored = F.broadcast(q).crossJoin(c).select(
-        "query_id",
-        "cand_id",
-        F.round(cosine_similarity_col(F.col("qv"), F.col("cv")), 4).alias("cos_sim"),
-    ).filter(F.col("query_id") != F.col("cand_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
-
-
 def kmeans_train_centroids(
     embeddings: DataFrame,
     k: int,
@@ -270,53 +197,6 @@ def kmeans_train_centroids(
             .localCheckpoint()
         )
     return cents
-
-
-# ---------------------------------------------------------------------------
-# int8 embedding quantization (storage/bandwidth cut for the vector table)
-# ---------------------------------------------------------------------------
-
-
-def quantize_embeddings_int8(df, vec_col: str = "embedding"):
-    """Symmetric per-vector int8 quantization: scale = max(|x|)/127,
-    q_i = round(x_i / scale). Adds ``q_<vec>`` (array<tinyint>) and
-    ``<vec>_scale`` (float) columns; the float array can then be dropped
-    for a ~4x storage/shuffle cut on the vector table — the standard
-    first step before ANN at 10^10-vector scale. Pure JVM higher-order
-    expressions (transform/aggregate) — no UDF, no shuffle. All-zero
-    vectors quantize to zeros with scale 0."""
-    v = F.col(vec_col)
-    amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
-    scale = (amax / F.lit(127.0)).cast("float")
-    q = F.when(amax > 0, F.transform(
-        v, lambda x: F.round(x / F.col(f"{vec_col}_scale")).cast("tinyint")
-    )).otherwise(F.transform(v, lambda x: F.lit(0).cast("tinyint")))
-    return df.withColumn(f"{vec_col}_scale", scale).withColumn(f"q_{vec_col}", q)
-
-
-def dequantize_embeddings_int8(df, vec_col: str = "embedding"):
-    """Reconstruct ``<vec>_deq`` (array<float>) from the int8 columns.
-    Max per-element error is scale/2 = max|x|/254 (~0.4% of range)."""
-    return df.withColumn(
-        f"{vec_col}_deq",
-        F.transform(
-            F.col(f"q_{vec_col}"),
-            lambda x: (x.cast("float") * F.col(f"{vec_col}_scale")).cast("float"),
-        ),
-    )
-
-
-def cosine_similarity_int8(qa, qb):
-    """Cosine over two int8-quantized arrays directly (per-vector scales
-    cancel in the cosine), avoiding dequantization in the ANN hot path."""
-    num = F.aggregate(
-        F.zip_with(qa, qb, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(F.aggregate(qa, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")))
-    nb = F.sqrt(F.aggregate(qb, F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")))
-    return F.when((na > 0) & (nb > 0), num / na / nb).otherwise(F.lit(0.0))
 
 
 # ---------------------------------------------------------------------------

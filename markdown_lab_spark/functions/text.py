@@ -352,83 +352,3 @@ def url_quality_keep(url: Column) -> Column:
         & ~F.lower(path).rlike(r"\.(jpg|jpeg|png|gif|css|js|zip|exe|dmg|iso)$")
     )
 
-
-# ---------------------------------------------------------------------------
-# Script-aware language ID (round 5): the production quick-filter shape —
-# Unicode-script fractions decide non-Latin languages outright (no
-# stopword list can see Japanese), Latin text falls back to an extended
-# stopword argmax. 100% JVM (Java regex script classes via regexp_count).
-# The 4-language `predicted_lang` above is UNCHANGED (q25's oracle pins
-# it); this is the superset operator.
-# ---------------------------------------------------------------------------
-
-SCRIPT_CLASSES = {
-    "han": r"\p{IsHan}",
-    "hiragana": r"\p{IsHiragana}",
-    "katakana": r"\p{IsKatakana}",
-    "hangul": r"\p{IsHangul}",
-    "cyrillic": r"\p{IsCyrillic}",
-    "arabic": r"\p{IsArabic}",
-    "devanagari": r"\p{IsDevanagari}",
-    "thai": r"\p{IsThai}",
-    "greek": r"\p{IsGreek}",
-    "hebrew": r"\p{IsHebrew}",
-}
-
-EXTRA_STOPWORDS = {
-    "it": ["di", "che", "il", "per", "con", "del", "sono", "della", "anche", "più"],
-    "pt": ["de", "que", "não", "uma", "para", "com", "como", "mais", "dos", "são"],
-    "nl": ["de", "het", "een", "van", "dat", "niet", "voor", "ook", "maar", "zijn"],
-}
-
-
-def script_fractions(text: Column) -> dict[str, Column]:
-    """Per-script fraction of non-whitespace characters (JVM regex)."""
-    chars = F.greatest(
-        F.length(F.regexp_replace(text, r"\s", "")), F.lit(1)
-    )
-    return {
-        name: F.regexp_count(text, F.lit(rx)) / chars
-        for name, rx in SCRIPT_CLASSES.items()
-    }
-
-
-def predicted_lang_full(text: Column) -> Column:
-    """Script-aware language ID:
-
-    - kana (hiragana+katakana) > 5% of chars -> 'ja' (kana is the
-      Japanese discriminator — Japanese text is han-heavy too);
-    - then majority scripts decide: han -> 'zh', hangul -> 'ko',
-      cyrillic -> 'ru', arabic -> 'ar', devanagari -> 'hi',
-      thai -> 'th', greek -> 'el', hebrew -> 'he' (threshold 30% —
-      mixed/navigational pages with embedded Latin still resolve);
-    - otherwise the stopword argmax over en/de/fr/es/it/pt/nl
-      (fixed tie precedence in that order), 'und' when nothing hits.
-
-    Cyrillic maps to 'ru' and han to 'zh' as the majority class —
-    distinguishing uk/bg or zh/yue needs a trained model (the native
-    fastText seam), which this quick-filter deliberately precedes."""
-    f = script_fractions(text)
-    kana = f["hiragana"] + f["katakana"]
-
-    toks = F.greatest(ws_token_count(text), F.lit(1))
-    all_sets = {**LANG_STOPWORDS, **EXTRA_STOPWORDS}
-    scores = {
-        lang: _count_words(text, words) / toks
-        for lang, words in all_sets.items()
-    }
-    best = F.greatest(*scores.values())
-    latin = F.lit("und")
-    for lang in ["nl", "pt", "it", "es", "fr", "de", "en"]:
-        latin = F.when(
-            (scores[lang] == best) & (best > 0), F.lit(lang)
-        ).otherwise(latin)
-
-    expr = F.when(kana > 0.05, F.lit("ja"))
-    for name, code in [
-        ("han", "zh"), ("hangul", "ko"), ("cyrillic", "ru"),
-        ("arabic", "ar"), ("devanagari", "hi"), ("thai", "th"),
-        ("greek", "el"), ("hebrew", "he"),
-    ]:
-        expr = expr.when(f[name] > 0.3, F.lit(code))
-    return expr.otherwise(latin)

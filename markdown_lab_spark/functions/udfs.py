@@ -1,4 +1,4 @@
-"""Arrow-vectorized pandas UDFs — the engine's four core UDFs (SURVEY.md §2.11).
+"""Arrow-vectorized pandas UDFs — the engine's three core UDFs (SURVEY.md §2.11).
 
 Each UDF wraps the pure-Python oracle so the Spark path and the pytest
 byte-identity suite execute EXACTLY the same semantics; the Arrow batch is
@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from ..frontier.hashing import url_hash64_vec
 from ..oracle import chunker as rust_chunker
 from ..oracle import chunk_utils as py_chunker
 from ..oracle import html_parser as oracle_html
@@ -198,45 +197,6 @@ def make_chunk_semantic_udf(chunk_size: int = 1000, chunk_overlap: int = 200):
 
 
 chunk_semantic_udf = make_chunk_semantic_udf()
-
-
-# ---------------------------------------------------------------------------
-# 4. canonicalize_url: url -> struct(canon_url, host, url_hash)
-#    X1/X2/X3 + murmur3 (NumPy-vectorized, no per-row Python for the hash)
-# ---------------------------------------------------------------------------
-CANON_SCHEMA = T.StructType(
-    [
-        T.StructField("canon_url", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("url_hash", T.LongType()),
-    ]
-)
-
-
-@pandas_udf(CANON_SCHEMA)
-def canonicalize_url_udf(url: pd.Series) -> pd.DataFrame:
-    canon = []
-    hosts = []
-    for u in url:
-        if u is None:
-            canon.append(None)
-            hosts.append(None)
-            continue
-        try:
-            canon.append(oracle_url.normalize_url(u))
-            hosts.append(oracle_url.get_domain_from_url(u))
-        except Exception:
-            canon.append(None)
-            hosts.append(None)
-    keys = url_hash64_vec([c if c is not None else "" for c in canon])
-    # store as signed int64 (Spark LongType); bit pattern preserved
-    return pd.DataFrame(
-        {
-            "canon_url": canon,
-            "host": hosts,
-            "url_hash": pd.Series(keys.astype("int64")),
-        }
-    )
 
 
 # ---------------------------------------------------------------------------

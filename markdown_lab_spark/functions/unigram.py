@@ -270,31 +270,6 @@ def encode_text(
     return out
 
 
-def unigram_encode(
-    docs: DataFrame,
-    model: List[Tuple[str, float]],
-    text_col: str = "text",
-    out_col: str = "pieces",
-) -> DataFrame:
-    spark = docs.sparkSession
-    bm = spark.sparkContext.broadcast(_model_dict(model))
-
-    def gen(batches):
-        logp = bm.value
-        memo: dict = {}
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                encode_text(t or "", logp, memo) for t in pdf[text_col]
-            ]
-            yield pdf
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in docs.schema.fields
-    )
-    return docs.mapInPandas(gen, f"{schema}, {out_col} array<string>")
-
-
 def unigram_token_count(
     docs: DataFrame,
     model: List[Tuple[str, float]],
@@ -318,10 +293,3 @@ def unigram_token_count(
         f"{f.name} {f.dataType.simpleString()}" for f in docs.schema.fields
     )
     return docs.mapInPandas(gen, f"{schema}, {out_col} long")
-
-
-def decode_pieces(pieces: Iterable[str]) -> str:
-    """Lossy-joins pieces back to the pretokenized text (words were
-    lowercased and whitespace-normalized by pretokenize — same contract
-    as ``bpe.decode_tokens``)."""
-    return "".join(pieces)

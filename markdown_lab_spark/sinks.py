@@ -7,15 +7,11 @@ chunks); per-file layouts exist for export parity with the reference:
   ``get_filename_from_url`` (url_utils.py:46-94).
 - K2 chunk sink: ``chunks.jsonl`` (one JSON object per chunk,
   chunk_utils.py:200-226) or one ``{id}.json`` per chunk.
-- K3 URL export: ``loc[,priority][,lastmod]`` lines
-  (sitemap_utils.py:409-431).
 """
 
 from __future__ import annotations
 
-import json
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,14 +57,3 @@ def export_content_files(
             f.write(r[col])
         n += 1
     return n
-
-
-def export_urls_csv(urls: DataFrame, path: str) -> None:
-    """K3: loc[,priority][,lastmod] lines (nulls dropped right-to-left)."""
-    line = F.concat_ws(
-        ",",
-        F.col("loc"),
-        F.col("priority").cast("string"),
-        F.col("lastmod"),
-    )
-    urls.select(line.alias("value")).write.mode("overwrite").text(path)

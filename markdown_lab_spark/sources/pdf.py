@@ -32,13 +32,10 @@ What it implements (the subset a text extractor needs):
   adjustment below -100/1000 em emits a space (the pdfminer-family
   heuristic, fixed threshold so output is reproducible).
 
-Spark shape: one PDF is the distribution unit. ``read_pdf_docs`` lists
-files through the binaryFile source and extracts each inside ONE task
-via ``mapInPandas`` (no shuffle, no driver I/O); ``pdf_text_pages``
-does the same over an in-table binary column (the multimodal-column
-path), emitting one row per page. Both honor the decoder-boundary
-contract: any malformed payload yields a null-text row with an error
-string, never a task failure.
+Entry points: ``extract_pdf`` (per-page text plus title and page
+count) and ``extract_pdf_text`` (pages joined with form-feeds), both
+pure functions over one payload, so a Spark caller runs them inside
+its own ``mapInPandas`` or UDF task.
 
 The encoder twin ``encode_pdf`` builds deterministic spec-valid files
 (classic or xref-stream/ObjStm layout, every supported filter, WinAnsi
@@ -1023,88 +1020,6 @@ def _pdf_text_string(raw: bytes) -> str:
 def extract_pdf_text(payload: bytes) -> str:
     """All pages joined with form-feeds — the documents-table text."""
     return "\f".join(extract_pdf(payload)["pages"])
-
-
-# ---------------------------------------------------------------------------
-# Spark integration
-# ---------------------------------------------------------------------------
-
-PDF_DOCS_SCHEMA = "path string, n_pages int, title string, text string, error string"
-PDF_PAGES_SCHEMA_SUFFIX = "page int, page_text string, error string"
-
-
-def read_pdf_docs(spark, path: str):
-    """One row per PDF file under ``path`` (glob ok): (path, n_pages,
-    title, text, error). One file per task via the binaryFile source —
-    no shuffle, no driver I/O; malformed files yield (null text, error)
-    rows per the decoder-boundary contract."""
-    import pandas as pd  # noqa: PLC0415
-
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                rows.append(_extract_row(pth, bytes(content)))
-            yield pd.DataFrame(
-                rows, columns=["path", "n_pages", "title", "text", "error"]
-            )
-
-    return files.mapInPandas(run, PDF_DOCS_SCHEMA)
-
-
-def _extract_row(key, payload: bytes):
-    try:
-        d = extract_pdf(payload)
-        return {
-            "path": key,
-            "n_pages": d["n_pages"],
-            "title": d["title"],
-            "text": "\f".join(d["pages"]),
-            "error": None,
-        }
-    except Exception as exc:
-        return {
-            "path": key,
-            "n_pages": None,
-            "title": None,
-            "text": None,
-            "error": f"{type(exc).__name__}: {exc}"[:200],
-        }
-
-
-def pdf_text_pages(df, id_col: str, payload_col: str):
-    """Per-page extraction over an in-table binary column (the
-    multimodal-column path): (id, page, page_text, error). Scan-local
-    mapInPandas — no shuffle; errors are rows, not failures."""
-    import pandas as pd  # noqa: PLC0415
-
-    id_field = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_field}, " + PDF_PAGES_SCHEMA_SUFFIX
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for key, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    rows.append((key, None, None, "null payload"))
-                    continue
-                try:
-                    d = extract_pdf(bytes(payload))
-                    for i, t in enumerate(d["pages"]):
-                        rows.append((key, i, t, None))
-                    if not d["pages"]:
-                        rows.append((key, None, None, "no pages"))
-                except Exception as exc:
-                    rows.append(
-                        (key, None, None, f"{type(exc).__name__}: {exc}"[:200])
-                    )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "page", "page_text", "error"]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -62,9 +62,3 @@ def discover_sitemap_seeds(
     fetcher = corpus_fetcher(pages, hosts=[host])
     urls = parse_sitemap(base_url, fetcher)
     return filter_urls(urls, min_priority, include_patterns, exclude_patterns, limit)
-
-
-def seeds_to_frontier_priority(urls: List[SitemapURL]) -> List[tuple]:
-    """(url, priority) rows; missing priority defaults to 0.5 like
-    link-discovered URLs so sitemap-ranked seeds sort above them."""
-    return [(u.loc, u.priority if u.priority is not None else 0.5) for u in urls]

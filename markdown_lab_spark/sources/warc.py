@@ -43,7 +43,7 @@ _CRLF = b"\r\n"
 
 WARC_RECORDS_SCHEMA = (
     "warc_type string, url string, warc_ts timestamp, http_status int, "
-    "mime string, content_type string, html binary"
+    "mime string, html binary"
 )
 
 
@@ -120,13 +120,11 @@ def _parse_headers(block: bytes) -> dict:
 
 def _parse_http_response(
     block: bytes,
-) -> Tuple[Optional[int], Optional[str], Optional[str], bytes]:
-    """(status, bare mime, raw content-type, body) from an HTTP
-    response block — the raw header keeps its charset parameter for
-    the WHATWG sniff (functions/encoding.py)."""
+) -> Tuple[Optional[int], Optional[str], bytes]:
+    """(status, bare mime, body) from an HTTP response block."""
     sep = block.find(_CRLF + _CRLF)
     if sep < 0 or not block.startswith(b"HTTP/"):
-        return None, None, None, block
+        return None, None, block
     head, body = block[:sep], block[sep + 4 :]
     status_line = head.split(_CRLF, 1)[0].split(b" ")
     try:
@@ -135,7 +133,7 @@ def _parse_http_response(
         status = None
     ctype = _parse_headers(head).get("content-type")
     mime = ctype.split(";", 1)[0].strip() if ctype is not None else None
-    return status, mime, ctype, body
+    return status, mime, body
 
 
 def _parse_ts(value: Optional[str]):
@@ -179,17 +177,16 @@ def parse_warc_stream(payload: bytes) -> Iterator[dict]:
             url = headers.get("warc-target-uri")
             ts = _parse_ts(headers.get("warc-date"))
             if wtype == "response":
-                status, mime, ctype, html = _parse_http_response(body)
+                status, mime, html = _parse_http_response(body)
             else:
                 status, html = None, body
-                mime = ctype = headers.get("content-type")
+                mime = headers.get("content-type")
             yield {
                 "warc_type": wtype,
                 "url": url,
                 "warc_ts": ts,
                 "http_status": status,
                 "mime": mime,
-                "content_type": ctype,
                 "html": html,
             }
             pos = sep + 4 + length
@@ -268,86 +265,13 @@ def encode_warc(records: List[dict], compress: bool = True) -> bytes:
     return out.getvalue()
 
 
-def warc_text_pages(spark: SparkSession, path: str) -> DataFrame:
-    """``warc_pages_table`` plus the charset step the reference gets
-    from ``requests.Response.text`` (markdown_lab/core/client.py:181):
-    WHATWG sniff (BOM > Content-Type charset > meta prescan > utf-8
-    validity > windows-1252) and decode to a ``text`` column, with
-    (encoding, enc_source) kept for curation filters. Decode is
-    scan-local (fuses into the ingest stage, no shuffle); errors
-    replace, never abort."""
-    from markdown_lab_spark.functions.encoding import decode_html_bytes
-
-    rec = read_warc(spark, path)
-    pages = rec.filter(
-        (F.col("warc_type") == "response")
-        & (F.col("http_status") == 200)
-        & (F.col("url").isNotNull())
-        & (F.coalesce(F.col("mime"), F.lit("")).startswith("text/html"))
-    ).select("url", "warc_ts", "content_type", "html")
-    return decode_html_bytes(pages, "html", "content_type").select(
-        "url", "warc_ts", "text", "encoding", "enc_source"
-    )
-
-
-def warc_pdf_docs(spark: SparkSession, path: str) -> DataFrame:
-    """The archive's ``application/pdf`` response records extracted to
-    text — (url, warc_ts, n_pages, title, text, error) — via the
-    in-repo PDF extractor (``sources/pdf.py``). Same fused scan-local
-    shape as ``warc_text_pages``: one WARC file per task, extraction in
-    the same stage, no shuffle; malformed PDFs are error rows, never
-    task failures. This is the Common-Crawl reality that a pages-only
-    ingest silently drops: a meaningful slice of crawled URLs serve
-    PDF, and the published pipelines (Dolma, FineWeb-2) extract them
-    into the same documents table as HTML."""
-    import pandas as pd  # noqa: PLC0415
-
-    from markdown_lab_spark.sources.pdf import extract_pdf  # noqa: PLC0415
-
-    rec = read_warc(spark, path).filter(
-        (F.col("warc_type") == "response")
-        & (F.col("http_status") == 200)
-        & (F.col("url").isNotNull())
-        & (F.coalesce(F.col("mime"), F.lit("")).startswith("application/pdf"))
-    ).select("url", "warc_ts", F.col("html").alias("payload"))
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for url, ts, payload in zip(
-                pdf["url"], pdf["warc_ts"], pdf["payload"]
-            ):
-                try:
-                    d = extract_pdf(bytes(payload))
-                    rows.append(
-                        (url, ts, d["n_pages"], d["title"],
-                         "\f".join(d["pages"]), None)
-                    )
-                except Exception as exc:
-                    rows.append(
-                        (url, ts, None, None, None,
-                         f"{type(exc).__name__}: {exc}"[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "warc_ts", "n_pages", "title", "text",
-                         "error"],
-            )
-
-    return rec.mapInPandas(
-        run,
-        "url string, warc_ts timestamp, n_pages int, title string, "
-        "text string, error string",
-    )
-
-
 def encode_wet(records: List[dict], compress: str | bool = True) -> bytes:
     """WET bytes (Common Crawl's extracted-text layout: WARC 1.0
     ``conversion`` records, text/plain, member-per-record compression).
     Each record dict: url, text (str), warc_ts (datetime). ``compress``:
     ``"gzip"``/True (classic CC layout), ``"zstd"`` (one checksummed
     zstd frame per record via the in-repo store encoder — any zstd
-    reader and ``read_wet`` decode it), or ``"none"``/False.
+    reader and ``read_warc`` decode it), or ``"none"``/False.
     Deterministic for fixed inputs (gzip mtime pinned to 0)."""
     if compress is True:
         compress = "gzip"
@@ -383,18 +307,6 @@ def encode_wet(records: List[dict], compress: str | bool = True) -> bytes:
         else:
             out.write(member)
     return out.getvalue()
-
-
-def read_wet(spark: SparkSession, path: str) -> DataFrame:
-    """(url, warc_ts, text) from WET files — ``conversion`` records'
-    blocks decoded as utf-8 (WET is utf-8 by construction; the charset
-    sniff belongs to raw ``response`` ingest, not here)."""
-    rec = read_warc(spark, path)
-    return rec.filter(
-        (F.col("warc_type") == "conversion") & F.col("url").isNotNull()
-    ).select(
-        "url", "warc_ts", F.col("html").cast("string").alias("text")
-    )
 
 
 def write_wet(

@@ -2,16 +2,10 @@
 
 Wikipedia publishes MediaWiki XML exports as ``.xml.bz2`` (multistream:
 concatenated bzip2 streams of ~100 pages each, so readers can seek).
-This source turns those dumps into the engine's documents-table shape
-so the whole curation stack (dedup, quality, tokenization, WET egress)
-runs on wiki text exactly like crawl text — what the published
-pipelines (GPT-3's Wikipedia slice, Dolma's wiki subset) do.
-
-Spark shape: one dump file (or multistream chunk) per task via the
-binaryFile source + ``mapInPandas`` — decompression and XML parsing are
-scan-local, no shuffle, no driver I/O; the 100-page multistream pieces
-make the distribution unit arbitrarily fine. bz2 decode uses the
-stdlib (C speed) on the hot path; the from-scratch decoder
+``parse_wikidump`` turns those dumps into page dicts (title, ns,
+page_id, redirect, warc_ts, wikitext) — what the published pipelines
+(GPT-3's Wikipedia slice, Dolma's wiki subset) ingest. bz2 decode
+uses the stdlib (C speed) on the hot path; the from-scratch decoder
 (``functions/bzip2.py``, verified against stdlib output) is the
 owned-byte-path proof and is cross-checked on the same fixtures in
 tests.
@@ -30,14 +24,6 @@ import re
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
 from typing import Iterator, List
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-WIKI_PAGES_SCHEMA = (
-    "title string, ns int, page_id long, redirect string, "
-    "warc_ts timestamp, wikitext string"
-)
 
 
 def _decompress_any(payload: bytes) -> bytes:
@@ -198,60 +184,6 @@ def wikitext_to_text(wikitext: str) -> str:
     t = _QUOTES_RE.sub("", t)
     t = _BLANK_RE.sub("\n\n", t)
     return t.strip()
-
-
-def read_wikidump(spark: SparkSession, path: str) -> DataFrame:
-    """All pages of the dump files matching ``path`` — one file per
-    task, decompress+parse scan-local, no shuffle."""
-    import pandas as pd  # noqa: PLC0415
-
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def run(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = list(parse_wikidump(bytes(content)))
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    return files.mapInPandas(run, WIKI_PAGES_SCHEMA)
-
-
-def wiki_docs_table(spark: SparkSession, path: str) -> DataFrame:
-    """The curation-ready documents shape: main-namespace non-redirect
-    pages, wikitext cleaned to plain text, canonical page URL derived
-    from the title — feeds the same pipeline as crawl documents."""
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    clean = pandas_udf(
-        lambda texts: texts.map(lambda t: wikitext_to_text(t) if t else ""),
-        "string",
-    )
-
-    pages = read_wikidump(spark, path)
-    return (
-        pages.filter(
-            (F.col("ns") == 0)
-            & F.col("redirect").isNull()
-            & F.col("wikitext").isNotNull()
-            & F.col("title").isNotNull()
-        )
-        .withColumn("text", clean(F.col("wikitext")))
-        .withColumn(
-            "url",
-            F.concat(
-                F.lit("https://en.wikipedia.org/wiki/"),
-                F.regexp_replace(F.col("title"), " ", "_"),
-            ),
-        )
-        .select(
-            F.col("page_id").alias("doc_id"),
-            "url",
-            "warc_ts",
-            "title",
-            "text",
-        )
-    )
 
 
 def encode_wikidump(

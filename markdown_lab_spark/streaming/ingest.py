@@ -7,21 +7,17 @@ a streaming pipeline over a file source, so new page files landing in a
 directory flow to docs/chunks tables incrementally with checkpointed
 exactly-once file tracking.
 
-``process_pages_stream(..., available_now=True)`` drains everything
-currently in the directory and stops — the testable batch-equivalent
-trigger; in production the same call with available_now=False runs
-continuously.
+``read_pages_stream`` opens the page-file source and ``convert_stream``
+applies the convert UDF to it; the caller picks the sink and trigger.
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.udfs import chunk_markdown_udf, convert_html_udf
+from ..functions.udfs import convert_html_udf
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -52,45 +48,3 @@ def convert_stream(pages: DataFrame) -> DataFrame:
         F.col("doc.status").alias("status"),
         F.col("doc.error").alias("error"),
     )
-
-
-def chunk_stream(docs: DataFrame) -> DataFrame:
-    return docs.filter(F.col("status") == "ok").select(
-        "url",
-        "warc_ts",
-        F.posexplode(chunk_markdown_udf(F.col("markdown"))).alias("pos", "content"),
-    )
-
-
-def page_rate_per_window(pages: DataFrame, window: str = "1 minute") -> DataFrame:
-    """Event-time windowed fetch-rate metric with late-data watermark."""
-    return (
-        pages.withWatermark("warc_ts", "5 minutes")
-        .groupBy(F.window("warc_ts", window), F.lit("pages").alias("metric"))
-        .agg(F.count("*").alias("n"))
-        .select("window.start", "window.end", "metric", "n")
-    )
-
-
-def process_pages_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    timeout_s: Optional[int] = 300,
-):
-    """Run the streaming docs pipeline; returns the StreamingQuery."""
-    pages = read_pages_stream(spark, input_dir)
-    docs = convert_stream(pages)
-    writer = (
-        docs.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        query = writer.trigger(availableNow=True).start()
-        query.awaitTermination(timeout_s)
-        return query
-    return writer.start()

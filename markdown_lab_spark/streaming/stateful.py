@@ -1,12 +1,9 @@
-"""Custom stateful streaming operators (applyInPandasWithState).
+"""Custom stateful streaming operator (applyInPandasWithState).
 
-Two streaming analogues of the batch crawl's state:
-
-- ``first_seen_filter``: streaming URL-seen dedup — emits only the first
-  occurrence of each canon_url per host group, keeping a per-host seen set
-  in GroupState (the streaming counterpart of the batch bloom+anti-join).
-- ``host_rate_monitor``: running per-host fetch totals (politeness
-  accounting) with a per-batch delta.
+``first_seen_filter`` is the streaming analogue of the batch crawl's
+URL-seen state: it emits only the first occurrence of each canon_url per
+host group, keeping a per-host seen set in GroupState (the streaming
+counterpart of the batch bloom+anti-join).
 
 State is partitioned by host — the same key the batch engine partitions
 on — so hot-host skew handling carries over (state shards by key).
@@ -29,15 +26,6 @@ FIRST_SEEN_OUTPUT = T.StructType(
 )
 FIRST_SEEN_STATE = T.StructType([T.StructField("seen", T.ArrayType(T.StringType()))])
 
-RATE_OUTPUT = T.StructType(
-    [
-        T.StructField("host", T.StringType()),
-        T.StructField("batch_count", T.LongType()),
-        T.StructField("total_count", T.LongType()),
-    ]
-)
-RATE_STATE = T.StructType([T.StructField("total", T.LongType())])
-
 
 def _first_seen_fn(
     key: Tuple[Any, ...],
@@ -59,112 +47,12 @@ def _first_seen_fn(
 def first_seen_filter(pages: DataFrame) -> DataFrame:
     """Streaming dedup: first occurrence of each canon_url per host.
 
-    EXACT but unbounded: GroupState holds each host's full seen set. For
-    10^10 URLs use ``first_seen_filter_bloom`` — same operator shape,
-    constant-size bloom state.
+    EXACT but unbounded: GroupState holds each host's full seen set.
     """
     return pages.groupBy("host").applyInPandasWithState(
         _first_seen_fn,
         outputStructType=FIRST_SEEN_OUTPUT,
         stateStructType=FIRST_SEEN_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-BLOOM_SEEN_STATE = T.StructType(
-    [
-        T.StructField("bits", T.BinaryType()),
-        T.StructField("n_added", T.LongType()),
-    ]
-)
-
-
-def make_first_seen_bloom_fn(capacity: int, fpr: float):
-    """Builds the stateful fn with bloom parameters baked in (state rows
-    must carry only the bitset so all executors agree on m/k)."""
-
-    def _fn(
-        key: Tuple[Any, ...],
-        batches: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np  # noqa: PLC0415
-
-        from ..frontier.bloom import BloomFilter  # noqa: PLC0415
-        from ..frontier.hashing import url_hash64_vec  # noqa: PLC0415
-
-        (host,) = key
-        bf = BloomFilter(capacity, fpr)
-        n_added = 0
-        if state.exists:
-            raw, n_added = state.get
-            bf.bits = np.frombuffer(raw, dtype=np.uint64).copy()
-        out = []
-        for pdf in batches:
-            urls = pdf["canon_url"].tolist()
-            if not urls:
-                continue
-            keys = url_hash64_vec(urls)
-            # sequential probe+insert: duplicates WITHIN a batch must
-            # dedup too, so vectorized contains-then-add is not enough
-            for url, k64 in zip(urls, keys):
-                one = np.asarray([k64], dtype=np.uint64)
-                if not bool(bf.contains_keys(one)[0]):
-                    bf.add_keys(one)
-                    n_added += 1
-                    out.append(url)
-        state.update((bf.to_bytes(), n_added))
-        yield pd.DataFrame({"host": [host] * len(out), "canon_url": out})
-
-    return _fn
-
-
-def first_seen_filter_bloom(
-    pages: DataFrame, capacity: int = 1 << 17, fpr: float = 0.01
-) -> DataFrame:
-    """Streaming dedup with CONSTANT-SIZE state: the per-host GroupState is
-    a serialized bloom bitset (m bits for ``capacity`` keys at ``fpr``)
-    instead of an exact URL list, so state stays bounded at 10^10 URLs.
-
-    Tradeoff (inherent to bounded streaming dedup): a bloom false positive
-    drops a genuinely-new URL, so the FP rate bounds the dedup LOSS rate
-    (~fpr at design load). The batch engine never accepts that — its bloom
-    only prefilters ahead of an exact anti-join — but a stream cannot
-    re-probe an unbounded exact set; choose capacity/fpr per host budget.
-    """
-    return pages.groupBy("host").applyInPandasWithState(
-        make_first_seen_bloom_fn(capacity, fpr),
-        outputStructType=FIRST_SEEN_OUTPUT,
-        stateStructType=BLOOM_SEEN_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _rate_fn(
-    key: Tuple[Any, ...],
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (host,) = key
-    total = state.get[0] if state.exists else 0
-    batch_n = 0
-    for pdf in batches:
-        batch_n += len(pdf)
-    total += batch_n
-    state.update((total,))
-    yield pd.DataFrame(
-        {"host": [host], "batch_count": [batch_n], "total_count": [total]}
-    )
-
-
-def host_rate_monitor(pages: DataFrame) -> DataFrame:
-    """Running per-host fetch totals (politeness accounting)."""
-    return pages.groupBy("host").applyInPandasWithState(
-        _rate_fn,
-        outputStructType=RATE_OUTPUT,
-        stateStructType=RATE_STATE,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -1,5 +1,5 @@
 """BPE tokenizer: the classic Sennrich example, JVM/Python pre-token
-agreement, distributed-vs-driver encode equality, determinism, and the
+agreement, distributed-vs-driver token-count equality, determinism, and the
 packing integration."""
 
 from __future__ import annotations
@@ -9,9 +9,7 @@ from pyspark.sql import functions as F
 
 from markdown_lab_spark.functions.bpe import (
     EOW,
-    bpe_encode,
     bpe_token_count,
-    decode_tokens,
     encode_text,
     encode_word,
     pretokenize,
@@ -78,18 +76,11 @@ def test_distributed_encode_matches_driver_reference(spark):
     df = spark.createDataFrame(corpus, ["doc_id", "text"])
     merges = train_bpe(df, n_merges=40)
     ranks = _ranks(merges)
-    got = {
-        r["doc_id"]: list(r["tokens"])
-        for r in bpe_encode(df, merges).collect()
-    }
-    for i, text in corpus:
-        assert got[i] == encode_text(text, ranks, {}), i
-    # counts match the arrays without materializing them
     cnt = {
         r["doc_id"]: r["n_bpe_tokens"]
         for r in bpe_token_count(df, merges).collect()
     }
-    assert cnt == {i: len(v) for i, v in got.items()}
+    assert cnt == {i: len(encode_text(text, ranks, {})) for i, text in corpus}
 
 
 def test_roundtrip_and_compression(spark):
@@ -98,7 +89,7 @@ def test_roundtrip_and_compression(spark):
     merges = train_bpe(df, n_merges=60)
     ranks = _ranks(merges)
     toks = encode_text(text, ranks, {})
-    assert decode_tokens(toks) == text
+    assert "".join(toks).replace(EOW, " ").strip() == text
     n_words = len(pretokenize(text))
     assert n_words <= len(toks) <= len(text) + n_words  # chars+EOW upper bound
     # merges actually compress below the char-level start

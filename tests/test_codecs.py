@@ -61,7 +61,7 @@ def test_png_image_features_deterministic():
     assert feat[6] == round(1.0 / 3.0, 6)  # luma of pure red
 
 
-def test_wav_roundtrip_and_analytic_features():
+def test_wav_roundtrip():
     rate = 8000
     t = np.arange(rate)  # 1 second
     sine = (0.5 * 32767 * np.sin(2 * math.pi * 440 * t / rate)).astype(np.int16)
@@ -69,34 +69,19 @@ def test_wav_roundtrip_and_analytic_features():
     r, nch, samples = codecs.decode_wav(payload)
     assert (r, nch) == (rate, 1)
     assert np.array_equal(samples[:, 0], sine)
-    f = codecs.audio_features(r, nch, samples)
-    assert f["duration_s"] == 1.0
-    # RMS of a half-amplitude sine = 0.5/sqrt(2) ~ 0.3536
-    assert abs(f["rms"] - 0.5 / math.sqrt(2)) < 0.01
-    # a 440 Hz sine crosses zero ~880 times/s -> zcr ~ 880/8000
-    assert abs(f["zcr"] - 880 / rate) < 0.01
 
 
-def test_spark_pipeline_real_png_and_wav(spark):
-    """The mapInPandas pipelines route PNG/WAV payloads through the real
-    decoders (width/height from IHDR, duration from the WAV header) and
-    everything else through the stub."""
-    from markdown_lab_spark.functions.multimodal import (
-        extract_audio_features,
-        extract_image_features,
-    )
+def test_spark_image_pipeline_real_png_and_stub(spark):
+    """The mapInPandas image pipeline routes PNG payloads through the
+    real decoder (width/height from IHDR), everything else through the
+    stub, and skips non-image rows."""
+    from markdown_lab_spark.functions.multimodal import extract_image_features
 
     png = codecs.encode_png(_gradient(12, 34, 3))
-    rate = 4000
-    sine = (
-        0.25 * 32767 * np.sin(2 * math.pi * 100 * np.arange(2 * rate) / rate)
-    ).astype(np.int16)
-    wav = codecs.encode_wav(sine, rate)
     rows = [
         (1, "image", bytearray(png), "image/png", {}),
         (2, "image", bytearray(b"\xff\xd8fakejpeg"), "image/jpeg", {}),
-        (3, "audio", bytearray(wav), "audio/wav", {}),
-        (4, "audio", bytearray(b"ID3fakempeg"), "audio/mpeg", {}),
+        (3, "audio", bytearray(b"ID3fakempeg"), "audio/mpeg", {}),
     ]
     df = spark.createDataFrame(
         rows,
@@ -106,22 +91,18 @@ def test_spark_pipeline_real_png_and_wav(spark):
     img = {r["media_id"]: r for r in extract_image_features(df).collect()}
     assert (img[1]["width"], img[1]["height"]) == (34, 12)  # real IHDR
     assert img[2]["width"] != 34 or img[2]["height"] != 12  # stub path
-    aud = {r["media_id"]: r for r in extract_audio_features(df).collect()}
-    assert aud[3]["sample_rate"] == rate
-    assert aud[3]["duration_s"] == 2.0
-    assert aud[4]["sample_rate"] is None
+    assert set(img) == {1, 2}
 
 
 def test_spark_pipeline_survives_adversarial_payloads(spark):
     """Round-3 ADVICE: malformed web media used to leak struct.error /
     zlib.error / wave.Error / IndexError out of the decoders and abort
     the whole Spark job. The decoder boundary now normalizes everything
-    to ValueError, so every adversarial row falls back to the stub (or a
-    null-feature row for audio) instead of killing the task."""
+    to ValueError, so every adversarial row falls back to the stub
+    instead of killing the task."""
     import struct as _struct
 
     from markdown_lab_spark.functions.multimodal import (
-        extract_audio_features,
         extract_image_features,
         resize_images,
     )
@@ -129,8 +110,6 @@ def test_spark_pipeline_survives_adversarial_payloads(spark):
     good_png = codecs.encode_png(_gradient(8, 8, 3))
     trunc_ihdr = codecs.PNG_MAGIC + _struct.pack(">I", 13) + b"IHDR" + b"\x00" * 3
     corrupt_idat = good_png[:40] + b"\x00" * 8 + good_png[48:]
-    # RIFF/WAVE magic but garbage body -> wave.Error before the fix
-    bad_wav = b"RIFF" + b"\x10\x00\x00\x00" + b"WAVEjunkjunkjunk"
     trunc_gif = b"GIF89a" + b"\x08"
     trunc_jpeg = b"\xff\xd8\xff\xc0\x00\x05\x08"
     rows = [
@@ -139,7 +118,6 @@ def test_spark_pipeline_survives_adversarial_payloads(spark):
         (3, "image", bytearray(corrupt_idat), "image/png", {}),
         (4, "image", bytearray(trunc_gif), "image/gif", {}),
         (5, "image", bytearray(trunc_jpeg), "image/jpeg", {}),
-        (6, "audio", bytearray(bad_wav), "audio/wav", {}),
     ]
     df = spark.createDataFrame(
         rows,
@@ -149,12 +127,13 @@ def test_spark_pipeline_survives_adversarial_payloads(spark):
     img = {r["media_id"]: r for r in extract_image_features(df).collect()}
     assert len(img) == 5  # no row lost, no job abort
     assert (img[1]["width"], img[1]["height"]) == (8, 8)  # real decode
-    aud = extract_audio_features(df).collect()
-    assert len(aud) == 1 and aud[0]["sample_rate"] is None
     # resize drops undecodable payloads by contract — the point is the
     # job survives and the one good payload comes through resized
     rs = {r["media_id"]: r for r in resize_images(df, 4, 4).collect()}
     assert set(rs) == {1} and (rs[1]["width"], rs[1]["height"]) == (4, 4)
+    # RIFF/WAVE magic but garbage body leaked wave.Error before the fix
+    with pytest.raises(ValueError):
+        codecs.decode_wav(b"RIFF" + b"\x10\x00\x00\x00" + b"WAVEjunkjunkjunk")
 
 
 # ---------------------------------------------------------------------------
@@ -495,68 +474,3 @@ def test_jpeg_fast_reader_handles_restart_streams():
         finally:
             J._decode_scan = orig
         assert fast[:3] == slow[:3] and (fast[3] == slow[3]).all()
-
-
-def test_native_audio_seam_accepts_injected_backend(spark):
-    """Round-4 verdict item 5 (fallback leg): the audio pipeline takes an
-    injected ``payload -> (rate, nch, samples)`` backend ahead of the
-    pure stdlib-wave decoder — proven with a fake backend that decodes a
-    sentinel native-only payload and ValueErrors everything else (WAV
-    then falls through to the pure path)."""
-    from markdown_lab_spark.functions.multimodal import extract_audio_features
-
-    sentinel = b"NATIVE-ONLY-AUDIO" + b"\x00" * 16
-
-    def fake_backend(payload: bytes):
-        if payload.startswith(b"NATIVE-ONLY-AUDIO"):
-            # 1 second of a 100 Hz-ish square-ish signal at 8 kHz mono
-            s = (np.arange(8000) % 80 < 40).astype(np.int16) * 1000 - 500
-            return 8000, 1, s[:, None]
-        raise ValueError("not mine")
-
-    wav = codecs.encode_wav(
-        (np.arange(4000, dtype=np.int16) % 321 - 160)[:, None], 16000
-    )
-    rows = [
-        (1, "audio", bytearray(sentinel), "audio/x-native", {}),
-        (2, "audio", bytearray(wav), "audio/wav", {}),
-        (3, "audio", bytearray(b"garbage"), "audio/x-broken", {}),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "media_id long, kind string, payload binary, mime string, "
-        "meta map<string,string>",
-    )
-    feats = {
-        r["media_id"]: r
-        for r in extract_audio_features(df, audio_decoder=fake_backend).collect()
-    }
-    assert feats[1]["sample_rate"] == 8000 and feats[1]["n_samples"] == 8000
-    assert feats[1]["duration_s"] == pytest.approx(1.0)
-    assert feats[2]["sample_rate"] == 16000 and feats[2]["n_samples"] == 4000
-    assert feats[3]["sample_rate"] is None  # undecodable -> null features
-    # pure-path parity: the injected backend must not perturb WAV results
-    pure = {
-        r["media_id"]: r for r in extract_audio_features(df).collect()
-    }
-    for k in ("sample_rate", "n_channels", "n_samples", "rms", "zcr"):
-        assert feats[2][k] == pure[2][k]
-
-
-def test_native_audio_backend_crosschecks_pure_decoder_when_present():
-    """When a real native audio library (soundfile/libsndfile) exists,
-    the loader must return a backend whose PCM-WAV output matches the
-    stdlib-wave oracle sample-for-sample. Skipped (loader asserted
-    None-safe) when absent — this environment forbids installs."""
-    from markdown_lab_spark.functions.multimodal import native_audio_backend
-
-    backend = native_audio_backend()
-    if backend is None:
-        pytest.skip("no native audio library in this environment")
-    samples = (np.arange(2000, dtype=np.int16) % 501 - 250)[:, None]
-    wav = codecs.encode_wav(samples, 8000)
-    rate, nch, got = backend(wav)
-    assert (rate, nch) == (8000, 1)
-    assert (got == samples).all()
-    with pytest.raises(ValueError):
-        backend(b"definitely not audio")

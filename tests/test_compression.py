@@ -241,148 +241,17 @@ def test_lz4_content_checksum_tamper_raises():
 
 
 # ---------------------------------------------------------------------------
-# DEFLATE / zlib / gzip (vs the stdlib's real zlib)
+# CRC-32 (vs the stdlib's real zlib)
 
 
-def test_crc32_adler32_match_zlib():
+def test_crc32_matches_zlib():
     import zlib
 
-    from markdown_lab_spark.functions.deflate import adler32, crc32
+    from markdown_lab_spark.functions.lzma_codec import crc32
 
     for n in [0, 1, 100, 5552, 5553, 60000]:
         d = _payload("rand", n, seed=8)
         assert crc32(d) == zlib.crc32(d)
-        assert adler32(d) == zlib.adler32(d)
-
-
-@pytest.mark.parametrize("kind", KINDS)
-@pytest.mark.parametrize("level", [0, 1, 6, 9])
-def test_inflate_decodes_real_zlib_streams(kind, level):
-    import zlib
-
-    from markdown_lab_spark.functions.deflate import decode_zlib, inflate_raw
-
-    for n in SIZES:
-        data = _payload(kind, n, seed=9)
-        assert decode_zlib(zlib.compress(data, level=level)) == data
-        co = zlib.compressobj(level, zlib.DEFLATED, -15)
-        raw = co.compress(data) + co.flush()
-        out, _ = inflate_raw(raw)
-        assert bytes(out) == data
-
-
-@pytest.mark.parametrize("strategy_name", ["Z_FIXED", "Z_RLE", "Z_FILTERED"])
-def test_inflate_fixed_and_rle_strategies(strategy_name):
-    """Force the block shapes zlib's default strategy rarely emits:
-    Z_FIXED = static-Huffman blocks (btype 1), Z_RLE = distance-1-only
-    dynamic blocks."""
-    import zlib
-
-    from markdown_lab_spark.functions.deflate import decode_zlib
-
-    strategy = getattr(zlib, strategy_name)
-    for kind in KINDS:
-        for n in [1, 100, 70000]:
-            data = _payload(kind, n, seed=10)
-            co = zlib.compressobj(6, zlib.DEFLATED, 15, 8, strategy)
-            comp = co.compress(data) + co.flush()
-            assert decode_zlib(comp) == data
-
-
-def test_gzip_members_and_header_fields():
-    import gzip as gz
-    import struct
-    import zlib
-
-    from markdown_lab_spark.functions.deflate import crc32, decode_gzip
-
-    data = _payload("text", 5000, seed=11)
-    assert decode_gzip(gz.compress(data)) == data
-    # concatenated members (the .warc.gz layout)
-    two = gz.compress(b"alpha") + gz.compress(b"beta")
-    assert decode_gzip(two) == b"alphabeta"
-    # FEXTRA + FNAME + FCOMMENT + FHCRC header
-    co = zlib.compressobj(6, zlib.DEFLATED, -15)
-    raw = co.compress(data) + co.flush()
-    extra = b"ab" + struct.pack("<H", 3) + b"xyz"
-    header = (
-        b"\x1f\x8b\x08" + bytes([0x02 | 0x04 | 0x08 | 0x10])
-        + b"\x00\x00\x00\x00\x00\xff"
-        + struct.pack("<H", len(extra)) + extra
-        + b"somename\x00" + b"a comment\x00"
-    )
-    header += struct.pack("<H", crc32(header) & 0xFFFF)
-    member = header + raw + struct.pack(
-        "<II", zlib.crc32(data), len(data) & 0xFFFFFFFF
-    )
-    assert decode_gzip(member) == data
-
-
-@given(st.binary(max_size=3000), st.integers(min_value=1, max_value=9))
-@settings(max_examples=60, deadline=None)
-def test_inflate_fuzz_roundtrip_vs_zlib(data, level):
-    import zlib
-
-    from markdown_lab_spark.functions.deflate import decode_zlib
-
-    assert decode_zlib(zlib.compress(data, level=level)) == data
-
-
-def test_deflate_store_encoders_decoded_by_real_zlib():
-    import gzip as gz
-    import zlib
-
-    from markdown_lab_spark.functions.deflate import (
-        decode_gzip,
-        decode_zlib,
-        deflate_store,
-        encode_gzip_store,
-        encode_zlib_store,
-    )
-
-    for n in [0, 1, 100, 300000]:
-        data = _payload("rand", n, seed=12)
-        assert zlib.decompress(encode_zlib_store(data)) == data
-        assert gz.decompress(encode_gzip_store(data)) == data
-        assert zlib.decompress(deflate_store(data), -15) == data
-        assert decode_gzip(encode_gzip_store(data)) == data
-        assert decode_zlib(encode_zlib_store(data)) == data
-
-
-def test_gzip_corruption_detected():
-    import gzip as gz
-
-    from markdown_lab_spark.functions.deflate import (
-        DeflateError,
-        decode_gzip,
-    )
-
-    comp = bytearray(gz.compress(_payload("text", 2000, seed=13)))
-    comp[-6] ^= 1  # flip a CRC byte
-    with pytest.raises(DeflateError):
-        decode_gzip(bytes(comp))
-
-
-def test_warc_gz_parses_through_pure_inflate():
-    """The classic .warc.gz member layout decodes via the in-repo
-    inflate, member boundaries preserved."""
-    from datetime import datetime, timezone
-
-    from markdown_lab_spark.functions.deflate import decode_gzip
-    from markdown_lab_spark.sources.warc import encode_warc, parse_warc_stream
-
-    recs = [
-        {
-            "url": f"https://w.test/p{i}",
-            "warc_ts": datetime(2026, 8, 18, tzinfo=timezone.utc),
-            "html": f"<html><body>page {i}</body></html>".encode(),
-        }
-        for i in range(3)
-    ]
-    payload = encode_warc(recs)  # member-per-record gzip
-    plain = decode_gzip(payload)
-    got = list(parse_warc_stream(plain))
-    assert [r["url"] for r in got] == [r["url"] for r in recs]
 
 
 # ---------------------------------------------------------------------------
@@ -608,7 +477,6 @@ import subprocess  # noqa: E402
 
 _ZSTD_CLI = shutil.which("zstd")
 _LZ4_CLI = shutil.which("lz4")
-_GZIP_CLI = shutil.which("gzip")
 _BZIP2_CLI = shutil.which("bzip2")
 
 
@@ -651,14 +519,6 @@ def test_lz4_cli_decodes_our_frames():
     frame[-2] ^= 1
     with pytest.raises(subprocess.CalledProcessError):
         _cli_roundtrip([_LZ4_CLI, "-d", "-c"], bytes(frame))
-
-
-@pytest.mark.skipif(_GZIP_CLI is None, reason="no gzip CLI")
-def test_gzip_cli_decodes_our_members():
-    from markdown_lab_spark.functions.deflate import encode_gzip_store
-
-    data = _payload("text", 150000, seed=63)
-    assert _cli_roundtrip([_GZIP_CLI, "-d", "-c"], encode_gzip_store(data)) == data
 
 
 @pytest.mark.skipif(_BZIP2_CLI is None, reason="no bzip2 CLI")
@@ -707,19 +567,11 @@ def test_xz_all_check_types(check_name):
     assert decode_xz(comp) == data
 
 
-def test_lzma_alone_format_and_concat_streams():
+def test_xz_concatenated_streams():
     import lzma
 
-    from markdown_lab_spark.functions.lzma_codec import (
-        decode_lzma_alone,
-        decode_xz,
-    )
+    from markdown_lab_spark.functions.lzma_codec import decode_xz
 
-    for n in [0, 1, 100, 150000]:
-        data = _payload("text", n, seed=68)
-        assert decode_lzma_alone(
-            lzma.compress(data, format=lzma.FORMAT_ALONE)
-        ) == data
     two = lzma.compress(b"aaa") + lzma.compress(b"bbb" * 100)
     assert decode_xz(two) == b"aaa" + b"bbb" * 100
 

@@ -220,9 +220,9 @@ def test_pipeline_substr_dedup_and_wet_out(
     assert counts["wet_records"] == counts["substr_dedup"]
     assert counts["wet_files"] >= 1
 
-    from markdown_lab_spark.sources.warc import read_wet
+    from markdown_lab_spark.sources.warc import read_warc
 
-    back = read_wet(spark, wet)
+    back = read_warc(spark, wet).filter("warc_type = 'conversion'")
     assert back.count() == counts["substr_dedup"]
     assert back.filter(back.url.startswith("urn:mls:doc:")).count() == back.count()
 

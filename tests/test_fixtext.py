@@ -3,13 +3,11 @@ touches legitimate accented text), double-encoding, normalization,
 control stripping, Spark column integration."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from markdown_lab_spark.functions.fixtext import (
     fix_text_str,
     fix_text_udf,
     repair_mojibake_str,
-    strip_control_chars,
 )
 
 
@@ -80,9 +78,6 @@ def test_spark_column(spark):
     assert out[2] == "clean São Paulo"
     assert out[3] == "ctrlhere"
     assert out[4] is None
-    # JVM-only control strip agrees on the control case
-    jvm = df.withColumn("fixed", strip_control_chars(F.col("text")))
-    assert {r["id"]: r["fixed"] for r in jvm.collect()}[3] == "ctrlhere"
 
 
 def test_pipeline_fix_text_stage(spark, tmp_path, monkeypatch, capsys):

@@ -170,54 +170,3 @@ def test_md5_tamper_detected():
 # ---------------------------------------------------------------------------
 # pipeline integration
 # ---------------------------------------------------------------------------
-
-
-def test_audio_dispatch_sniffs_flac():
-    from markdown_lab_spark.functions.multimodal import _decode_audio_any
-
-    s = np.stack([saw(400), (-saw(400)).astype(np.int16)], axis=1)
-    rate, nch, out, bps = _decode_audio_any(flac.encode_flac(s, 16000))
-    assert (rate, nch, bps) == (16000, 2, 16)
-    assert (out == s).all()
-
-
-def test_audio_features_normalize_by_bit_depth():
-    """Round-5 ADVICE (low): RMS must normalize by 2^(bps-1), not a
-    hardcoded 32768 — the same waveform rendered at 16- and 24-bit
-    depth must report (near-)identical rms/zcr."""
-    from markdown_lab_spark.functions import codecs
-    from markdown_lab_spark.functions.multimodal import _decode_audio_any
-
-    s16 = np.stack([saw(400), (-saw(400)).astype(np.int16)], axis=1)
-    s24 = s16.astype(np.int64) << 8  # same waveform, 24-bit full scale
-    f16 = codecs.audio_features(
-        *(_decode_audio_any(flac.encode_flac(s16, 16000))[:3]), 16
-    )
-    p24 = flac.encode_flac(s24, 16000, bps=24)
-    rate, nch, out, bps = _decode_audio_any(p24)
-    assert bps == 24
-    f24 = codecs.audio_features(rate, nch, out, bps)
-    assert abs(f16["rms"] - f24["rms"]) < 1e-4
-    assert f16["zcr"] == f24["zcr"]
-
-
-def test_extract_audio_features_flac(spark):
-    import pyspark.sql.functions as F  # noqa: F401
-
-    from markdown_lab_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        extract_audio_features,
-    )
-
-    s = saw(8000)
-    wav_like = flac.encode_flac(s, 8000)
-    rows = [
-        (1, "audio", bytearray(wav_like), "audio/flac", {}),
-        (2, "audio", bytearray(b"fLaCgarbage"), "audio/flac", {}),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in extract_audio_features(df).collect()}
-    assert got[1]["sample_rate"] == 8000
-    assert got[1]["n_samples"] == 8000
-    assert got[1]["duration_s"] == pytest.approx(1.0)
-    assert got[2]["sample_rate"] is None  # malformed -> null row, no abort

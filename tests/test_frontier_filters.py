@@ -5,13 +5,13 @@ import numpy as np
 from markdown_lab_spark.frontier.bloom import (
     BloomFilter,
     ShardedBloom,
-    merge_partials,
     partial_bitsets_from_keys,
 )
 from markdown_lab_spark.frontier.cuckoo import CuckooFilter
 from markdown_lab_spark.frontier.hashing import (
+    _murmur3_32_packed,
+    _pack_batch,
     murmur3_32,
-    murmur3_32_vec,
     url_hash64_vec,
 )
 
@@ -37,10 +37,11 @@ def test_murmur3_vectorized_matches_scalar():
     inputs = [d for d, _, _ in VECTORS] + [
         b"x" * n for n in range(0, 67)
     ] + ["https://example.com/path?q=1".encode(), "你好世界".encode()]
-    got = murmur3_32_vec(inputs, seed=0)
+    packed = _pack_batch(inputs)
+    got = _murmur3_32_packed(*packed, seed=0)
     want = np.array([murmur3_32(b, 0) for b in inputs], dtype=np.uint32)
     assert (got == want).all()
-    got42 = murmur3_32_vec(inputs, seed=42)
+    got42 = _murmur3_32_packed(*packed, seed=42)
     want42 = np.array([murmur3_32(b, 42) for b in inputs], dtype=np.uint32)
     assert (got42 == want42).all()
 
@@ -64,19 +65,6 @@ def test_bloom_no_false_negatives_and_low_fpr():
     assert fpr < 0.02, fpr  # ~1% target
 
 
-def test_bloom_merge_equals_single_build():
-    a = [f"https://a.com/{i}" for i in range(1000)]
-    b = [f"https://b.com/{i}" for i in range(1000)]
-    bf1 = BloomFilter(2000, 0.01)
-    bf1.add(a)
-    bf2 = BloomFilter(2000, 0.01)
-    bf2.add(b)
-    merged = bf1.merge(bf2)
-    whole = BloomFilter(2000, 0.01)
-    whole.add(a + b)
-    assert (merged.bits == whole.bits).all()
-
-
 def test_sharded_bloom_and_partial_merge():
     urls = [f"https://h{i % 13}.example/p{i}" for i in range(20_000)]
     hosts = [f"h{i % 13}.example" for i in range(20_000)]
@@ -89,7 +77,10 @@ def test_sharded_bloom_and_partial_merge():
     sid = ShardedBloom.shard_of(hosts, 8)
     p1 = partial_bitsets_from_keys(keys[:10_000], sid[:10_000], 8, 5000, 0.01)
     p2 = partial_bitsets_from_keys(keys[10_000:], sid[10_000:], 8, 5000, 0.01)
-    merged = merge_partials([p1, p2], 8, 5000)
+    merged = ShardedBloom(num_shards=8, capacity_per_shard=5000)
+    for partial in (p1, p2):
+        for s, raw in partial.items():
+            merged.shards[s].bits |= np.frombuffer(raw, dtype=np.uint64)
     assert merged.contains(urls, hosts).all()
 
 

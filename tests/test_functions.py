@@ -9,7 +9,6 @@ from markdown_lab_spark.functions import dedup as D
 from markdown_lab_spark.functions import similarity as S
 from markdown_lab_spark.functions import text as X
 from markdown_lab_spark.functions.udfs import (
-    canonicalize_url_udf,
     convert_html_udf,
     chunk_markdown_udf,
     domain_col,
@@ -17,6 +16,7 @@ from markdown_lab_spark.functions.udfs import (
     normalize_url_col,
 )
 from markdown_lab_spark.oracle import convert_to_markdown, normalize_url
+from markdown_lab_spark.oracle.url_utils import get_domain_from_url
 from markdown_lab_spark.oracle.chunker import create_semantic_chunks
 
 
@@ -64,7 +64,7 @@ def test_chunk_udf_matches_oracle(spark):
     assert got == create_semantic_chunks(md, 1000, 200)
 
 
-def test_canonicalize_udf_and_jvm_col_agree(spark):
+def test_jvm_url_cols_agree_with_oracle(spark):
     urls = [
         "https://example.com/path/",
         "https://example.com/path#frag",
@@ -77,16 +77,13 @@ def test_canonicalize_udf_and_jvm_col_agree(spark):
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     rows = df.select(
         "url",
-        canonicalize_url_udf("url").alias("c"),
         normalize_url_col(F.col("url")).alias("jvm_canon"),
         domain_col(F.col("url")).alias("jvm_host"),
         extract_base_url_col(F.col("url")).alias("jvm_base"),
     ).collect()
     for r in rows:
-        assert r["c"]["canon_url"] == normalize_url(r["url"])
         assert r["jvm_canon"] == normalize_url(r["url"])  # JVM == oracle
-        assert r["jvm_host"] == r["c"]["host"]
-        assert r["c"]["url_hash"] is not None
+        assert r["jvm_host"] == get_domain_from_url(r["url"])
 
 
 def test_exact_dedup(spark):
@@ -122,20 +119,6 @@ def test_ngram_jaccard_exact(spark):
     )
     rows = D.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.8).collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in rows] == [(1, 2, 1.0)]
-
-
-def test_cosine_topk_exact_vs_lsh(spark):
-    import random
-
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(200)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    query = rows[5][1]
-    exact = S.cosine_topk(df, query, k=5).collect()
-    assert exact[0]["vec_id"] == 5  # self is most similar
-    assert exact[0]["cos_sim"] == pytest.approx(1.0, abs=1e-3)
-    approx = S.lsh_cosine_topk(df, query, k=5, bits=6).collect()
-    assert approx[0]["vec_id"] == 5  # self lands in its own bucket
 
 
 def test_text_analysis_columns(spark):
@@ -537,43 +520,3 @@ def test_decontaminate_matches_duckdb_oracle(spark):
     assert {k: v[0] for k, v in got.items()} == expect
     assert all((v[0] == 0) == v[1] for v in got.values())
     assert any(v[0] > 0 for v in got.values())  # planted spans detected
-
-
-def test_predicted_lang_full_scripts_and_latin(spark):
-    from markdown_lab_spark.functions.text import (
-        predicted_lang,
-        predicted_lang_full,
-    )
-    from pyspark.sql import functions as F
-
-    rows = [
-        (1, "これは日本語のテキストです。漢字も含まれています。", "ja"),
-        (2, "这是一段中文文本，包含很多汉字内容。", "zh"),
-        (3, "이것은 한국어 텍스트입니다 많은 내용이 있습니다", "ko"),
-        (4, "Это русский текст с большим количеством слов", "ru"),
-        (5, "هذا نص باللغة العربية مع كلمات كثيرة", "ar"),
-        (6, "यह हिन्दी में लिखा गया पाठ है", "hi"),
-        (7, "นี่คือข้อความภาษาไทยที่มีหลายคำ", "th"),
-        (8, "Αυτό είναι ένα ελληνικό κείμενο με πολλές λέξεις", "el"),
-        (9, "זהו טקסט בעברית עם מילים רבות", "he"),
-        (10, "the cat sat on the mat and it was happy for the day", "en"),
-        (11, "der Hund ist nicht mit der Katze und das ist gut zu sehen", "de"),
-        (12, "il problema è che anche la soluzione non funziona più per tutti", "it"),
-        (13, "não há uma solução para que os problemas são mais fáceis", "pt"),
-        (14, "de kat en het huis zijn niet van dat dorp maar ook mooi", "nl"),
-        (15, "12345 67890 !!!", "und"),
-        # Japanese page with embedded Latin brand names: kana still wins
-        (16, "Apple の新しい iPhone は日本で発売されます。詳細はこちら。", "ja"),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string, want string")
-    got = {
-        r["id"]: (r["lang"], r["want"])
-        for r in df.select(
-            "id", "want", predicted_lang_full(F.col("text")).alias("lang")
-        ).collect()
-    }
-    for i, (lang, want) in sorted(got.items()):
-        assert lang == want, (i, lang, want)
-    # the gated 4-language function is untouched on its domain
-    en = df.filter("id = 10").select(predicted_lang(F.col("text"))).collect()
-    assert en[0][0] == "en"

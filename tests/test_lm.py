@@ -16,7 +16,6 @@ from markdown_lab_spark.functions.lm import (
     EOS,
     NGramLM,
     perplexity_buckets,
-    perplexity_filter,
     score_docs,
     train_ngram_lm,
 )
@@ -176,9 +175,6 @@ def test_planted_separation_and_filter(spark):
     worst_in = max(v for k, v in rows.items() if k < 100)
     best_gib = min(v for k, v in rows.items() if k >= 100)
     assert worst_in < best_gib, (worst_in, best_gib)
-
-    kept = perplexity_filter(sdf, lm, max_perplexity=worst_in)
-    assert {r["doc_id"] for r in kept.collect()} == {i for i, _ in indist}
 
     b = perplexity_buckets(scores, n_buckets=2)
     by_bucket = {

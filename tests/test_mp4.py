@@ -12,10 +12,8 @@ from markdown_lab_spark.functions.h264 import (
     decode_h264,
     encode_h264,
     rgb_to_ycbcr420,
-    ycbcr420_to_rgb,
 )
 from markdown_lab_spark.functions.mp4 import (
-    decode_mp4_frames,
     encode_mp4,
     is_mp4,
     parse_mp4,
@@ -28,9 +26,18 @@ def _frames(n: int = 6, h: int = 32, w: int = 48, seed: int = 3):
     return [np.roll(base, 2 * t, axis=1) for t in range(n)]
 
 
-def _decoded_via_mp4(payload, every=1, maxf=None):
-    w, h, fps, frames = decode_mp4_frames(payload, every, maxf)
-    return w, h, fps, frames
+def _decoded_via_mp4(payload):
+    """The path q47 runs: demux with ``parse_mp4``, decode the joined
+    Annex B samples with ``decode_h264``. Returns ``(w, h, fps, pics)``
+    with one ``(y, cb, cr)`` per picture in display order."""
+    info = parse_mp4(payload)
+    pics, (w, h, fps) = decode_h264(b"".join(info["frames"]))
+    return w, h, fps, pics
+
+
+def _assert_planes_equal(got, want):
+    for a, b in zip(got, want):
+        np.testing.assert_array_equal(a, b)
 
 
 def test_mp4_roundtrip_matches_raw_annexb_decode():
@@ -41,9 +48,11 @@ def test_mp4_roundtrip_matches_raw_annexb_decode():
     mw, mh, fps, got = _decoded_via_mp4(mp4)
     assert (mw, mh) == (w, h) == (48, 32)
     assert fps == pytest.approx(25.0)
+    info = parse_mp4(mp4)
+    assert info["fps_num"] / info["fps_den"] == pytest.approx(25.0)
     assert len(got) == len(pics) == 6
-    for (idx, rgb), pic in zip(got, pics):
-        np.testing.assert_array_equal(rgb, ycbcr420_to_rgb(*pic))
+    for g, pic in zip(got, pics):
+        _assert_planes_equal(g, pic)
 
 
 def test_faststart_and_progressive_layouts_decode_identically():
@@ -57,8 +66,8 @@ def test_faststart_and_progressive_layouts_decode_identically():
     _, _, _, a = _decoded_via_mp4(prog)
     _, _, _, b = _decoded_via_mp4(fast)
     assert len(a) == len(b) == 4
-    for (_, fa), (_, fb) in zip(a, b):
-        np.testing.assert_array_equal(fa, fb)
+    for fa, fb in zip(a, b):
+        _assert_planes_equal(fa, fb)
 
 
 def test_co64_offsets_and_chunked_stsc_runs():
@@ -78,16 +87,6 @@ def test_sync_sample_table_matches_idr_positions():
     assert info["sync"] == [0, 3, 6]
     info = parse_mp4(encode_mp4(frames, qp=26, gop=0))  # all-intra
     assert info["sync"] == list(range(7))
-
-
-def test_every_n_and_max_frames():
-    frames = _frames(8)
-    p = encode_mp4(frames, qp=28, fps=4.0, gop=0)
-    _, _, fps, got = _decoded_via_mp4(p, every=3)
-    assert fps == pytest.approx(4.0)
-    assert [i for i, _ in got] == [0, 3, 6]
-    _, _, _, got = _decoded_via_mp4(p, every=1, maxf=2)
-    assert [i for i, _ in got] == [0, 1]
 
 
 def test_torn_tail_progressive_keeps_whole_samples():
@@ -124,10 +123,8 @@ def test_pcm_leg_is_lossless_through_mp4():
     p = encode_mp4(frames, qp=40, gop=0, pcm_every=1)
     _, _, _, got = _decoded_via_mp4(p)
     assert len(got) == 3
-    for idx, rgb in got:
-        np.testing.assert_array_equal(
-            rgb, ycbcr420_to_rgb(*rgb_to_ycbcr420(frames[idx]))
-        )
+    for pic, frame in zip(got, frames):
+        _assert_planes_equal(pic, rgb_to_ycbcr420(frame))
 
 
 def test_mp4_b_frames_ctts_roundtrip():
@@ -149,13 +146,15 @@ def test_mp4_b_frames_ctts_roundtrip():
         assert info["display_order"] == sorted(
             range(6), key=lambda k: order[k])
         assert info["sync"] == [0]  # only the IDR is a sync sample
-        w, h, fps, out = mp4.decode_mp4_frames(pay)
+        w, h, fps, out = _decoded_via_mp4(pay)
         assert (w, h, fps) == (48, 32, 30.0)
         rec = h264.encode_h264_reconstruction(
             frames, qp=28, gop=6, b_frames=2, direct_spatial=spatial)
-        assert [i for i, _ in out] == list(range(6))
-        for (_, rgb), rc in zip(out, rec):
-            np.testing.assert_array_equal(rgb, ycbcr420_to_rgb(*rc))
+        # decode_h264 reorders by POC: pictures come out in display
+        # order, each bit-equal to the encoder reconstruction
+        assert len(out) == len(rec) == 6
+        for pic, rc in zip(out, rec):
+            _assert_planes_equal(pic, rc)
 
 
 def test_mp4_without_b_frames_has_identity_display_order():

@@ -73,31 +73,6 @@ def test_banded_embedding_neardup_complete_vs_bruteforce(spark):
     assert banded, "drill corpus must contain near-dup pairs"
 
 
-def test_baseline_neardup_agrees_with_banded(spark):
-    """Round-4 replacement for the retired q34 driver gate: the unbanded
-    correctness baseline (embedding_neardup_pairs, quadratic-within-bucket)
-    and the banded scale path must return the identical pair set on the
-    synthesized near-dup corpus."""
-    synth = _synth_neardups(spark).cache()
-    baseline = {
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in D.embedding_neardup_pairs(
-            synth, "vec_id", "embedding", 0.99, 8
-        ).collect()
-    }
-    banded = {
-        (r["id_a"], r["id_b"], r["cos_sim"])
-        for r in D.embedding_neardup_pairs_banded(
-            synth, threshold=0.99, nbits=32, bands=4, dim=64
-        ).collect()
-    }
-    synth.unpersist()
-    # the 8-bit sign bucket of the baseline can only LOSE pairs vs the
-    # 4x8-bit banded OR — on this corpus both are empirically complete
-    assert baseline == banded
-    assert baseline, "drill corpus must contain near-dup pairs"
-
-
 def test_banded_candidates_prune_quadratic(spark):
     """Candidate pairs (pre-cosine) << n^2/2 — the whole point of banding."""
     synth = _synth_neardups(spark)
@@ -372,55 +347,3 @@ def test_rademacher_signature_agreement_adversarial(spark):
     ).filter(F.col("a") != F.col("b"))
     assert bad.count() == 0
     assert all(math.isfinite(x) for r in rows for x in r[1])
-
-
-def test_int8_quantization_roundtrip_and_cosine(spark):
-    """Symmetric per-vector int8 quantization: error bound, zero-vector
-    edge, tinyint schema, and cosine-on-quantized within tolerance of
-    exact cosine (scales cancel)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from markdown_lab_spark.functions.similarity import (
-        cosine_similarity_col,
-        cosine_similarity_int8,
-        dequantize_embeddings_int8,
-        quantize_embeddings_int8,
-    )
-
-    rng = np.random.default_rng(5)
-    rows = [(i, [float(x) for x in rng.normal(0, 3, 16)]) for i in range(40)]
-    rows.append((100, [0.0] * 16))  # all-zero edge
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    q = quantize_embeddings_int8(df)
-    field = dict(q.dtypes)["q_embedding"]
-    assert field == "array<tinyint>"  # the 4x storage claim is the type
-    d = dequantize_embeddings_int8(q)
-    for r in d.collect():
-        e, dq, s = np.array(r["embedding"]), np.array(r["embedding_deq"]), r["embedding_scale"]
-        if r["vec_id"] == 100:
-            assert s == 0.0 and (dq == 0).all()
-        else:
-            assert np.abs(e - dq).max() <= 0.5 * s + 1e-6
-            assert np.abs(np.array(r["q_embedding"])).max() <= 127
-    pairs = (
-        q.alias("a")
-        .crossJoin(q.alias("b"))
-        .where((F.col("a.vec_id") < F.col("b.vec_id")) & (F.col("b.vec_id") != 100))
-        .where(F.col("a.vec_id") != 100)
-        .select(
-            cosine_similarity_col(F.col("a.embedding"), F.col("b.embedding")).alias("c"),
-            cosine_similarity_int8(F.col("a.q_embedding"), F.col("b.q_embedding")).alias("cq"),
-        )
-        .collect()
-    )
-    assert pairs and max(abs(r["c"] - r["cq"]) for r in pairs) < 0.02
-    # zero vector: int8 cosine defined as 0
-    z = (
-        q.alias("a").crossJoin(q.alias("b"))
-        .where((F.col("a.vec_id") == 100) & (F.col("b.vec_id") == 0))
-        .select(cosine_similarity_int8(F.col("a.q_embedding"), F.col("b.q_embedding")).alias("cq"))
-        .collect()[0]["cq"]
-    )
-    assert z == 0.0

@@ -1,7 +1,6 @@
 """PDF text extraction (sources/pdf.py): encoder-twin round-trips over
 every filter and layout variant, font decoding (WinAnsi, ToUnicode,
-CID, Differences), content-operator semantics, torn-tail recovery, and
-the Spark ingest paths."""
+CID, Differences), content-operator semantics, and torn-tail recovery."""
 
 import zlib
 
@@ -19,8 +18,6 @@ from markdown_lab_spark.sources.pdf import (
     extract_pdf_text,
     is_pdf,
     parse_object,
-    pdf_text_pages,
-    read_pdf_docs,
     Name,
 )
 
@@ -223,36 +220,3 @@ def test_broken_page_yields_empty_not_crash():
     d = extract_pdf(bad)
     assert d["n_pages"] == 2
     assert d["pages"][1] == JOINED[1]  # second page unaffected
-
-
-# ---- Spark ------------------------------------------------------------------
-def test_read_pdf_docs_and_error_rows(spark, tmp_path):
-    (tmp_path / "a.pdf").write_bytes(encode_pdf(PAGES, filt="flate"))
-    (tmp_path / "b.pdf").write_bytes(
-        encode_pdf([["solo page"]], xref_stream=True, object_streams=True)
-    )
-    (tmp_path / "c.pdf").write_bytes(b"%PDF-1.4\ngarbage")
-    df = read_pdf_docs(spark, str(tmp_path / "*.pdf"))
-    rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert rows["a.pdf"]["n_pages"] == 2
-    assert rows["a.pdf"]["text"] == "\f".join(JOINED)
-    assert rows["b.pdf"]["text"] == "solo page"
-    assert rows["c.pdf"]["text"] is None and rows["c.pdf"]["error"]
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # scan-local: one file per task
-
-
-def test_pdf_text_pages_per_page_rows(spark):
-    payload = encode_pdf(PAGES)
-    df = spark.createDataFrame(
-        [(1, bytearray(payload)), (2, bytearray(b"nope")), (3, None)],
-        "doc_id long, payload binary",
-    )
-    out = {
-        (r["doc_id"], r["page"]): (r["page_text"], r["error"])
-        for r in pdf_text_pages(df, "doc_id", "payload").collect()
-    }
-    assert out[(1, 0)] == (JOINED[0], None)
-    assert out[(1, 1)] == (JOINED[1], None)
-    assert out[(2, None)][1] is not None
-    assert out[(3, None)][1] == "null payload"

@@ -149,69 +149,16 @@ def test_wave_fetch_cap_prefers_high_priority_hosts(spark):
     assert waves["https://lo.test/a"] == 2 and waves["https://lo.test/b"] == 2
 
 
-def test_url_priorities_order_within_host_queue(spark, tmp_path):
-    """URL-level ranks order a single host's politeness queue: with
-    budget 1/wave, the page every other page links to is fetched before
-    the long tail."""
-    from markdown_lab_spark.frontier.crawler import CrawlConfig, CrawlEngine
-    from markdown_lab_spark.frontier.rank import url_pagerank_priorities
-
-    def page(title, links):
-        anchors = "".join(f'<a href="{u}">{u}</a>' for u in links)
-        return (
-            f"<html><head><title>{title}</title></head>"
-            f"<body><p>{title} text</p>{anchors}</body></html>"
-        ).encode()
-
-    urls = [f"https://h.test/p{i}" for i in range(4)]
-    hub = "https://h.test/hub"
-    # every page links to the hub AND to the next page; the seed links all
-    rows = [("https://h.test/", page("root", urls + [hub]))]
-    rows += [(u, page(f"p{i}", [hub])) for i, u in enumerate(urls)]
-    rows += [(hub, page("hub", []))]
-    pages = spark.createDataFrame(rows, "url string, html binary")
-
-    ckpt = str(tmp_path / "c1")
-    cfg0 = CrawlConfig(rps=100.0, wave_seconds=1, max_waves=3)
-    CrawlEngine(spark, pages, cfg0, checkpoint_dir=ckpt).crawl(
-        ["https://h.test/"]
-    )
-    docs = spark.read.parquet(f"{ckpt}/wave=*/docs")
-    up = url_pagerank_priorities(docs, iters=10)
-    ranks = {r["canon_url"]: r["priority"] for r in up.collect()}
-    assert ranks[hub] == max(ranks.values())  # in-link magnet tops
-
-    # budget 1/wave: without priorities the queue orders by URL; with
-    # them the hub (rank 1.0) wins the first discovered-wave slot
-    cfg1 = CrawlConfig(rps=1.0, wave_seconds=1, max_waves=3)
-    out = CrawlEngine(spark, pages, cfg1).crawl(
-        ["https://h.test/"], url_priorities=up
-    )
-    fetched = {
-        r["canon_url"]: r["wave"]
-        for r in out["trace"].collect()
-        if r["status"] == "ok"
-    }
-    assert fetched[hub] == 1  # beat p0..p3 despite URL sort order
-
-
 def test_pagerank_empty_edges_returns_empty(spark):
     """A crawl whose docs discovered no http links produces an empty edge
-    list; pagerank and both priority builders must return empty frames
-    (every host/url keeps the 0.5 default) instead of dividing by zero."""
-    from markdown_lab_spark.frontier.rank import url_pagerank_priorities
-
+    list; pagerank and the priority builder must return empty frames
+    (every host keeps the 0.5 default) instead of dividing by zero."""
     edges = spark.createDataFrame([], "src string, dst string")
     assert pagerank(edges, iters=3).count() == 0
     hp = host_pagerank_priorities(
         spark.createDataFrame([], "src_host string, dst_host string"), iters=2
     )
     assert hp.columns == ["host", "priority"] and hp.count() == 0
-    docs = spark.createDataFrame(
-        [], "canon_url string, host string, links array<string>"
-    )
-    up = url_pagerank_priorities(docs, iters=2)
-    assert up.columns == ["canon_url", "priority"] and up.count() == 0
 
 
 def test_pagerank_priorities_floor_is_default(spark):

@@ -365,7 +365,7 @@ def test_ranked_tail_with_ttl_recrawl(spark, deep_pages, tmp_path):
 
 
 def test_ranked_tail_with_priorities(spark, deep_pages, tmp_path):
-    """PageRank-style host/url priority tables compose with the ranked
+    """A PageRank-style host priority table composes with the ranked
     tail: priorities are applied to discovered rows BEFORE insert, so
     the stored per-host queue ranks order by the final priority. Trace
     equality vs default mode under the same priorities + fetch cap."""
@@ -373,16 +373,13 @@ def test_ranked_tail_with_priorities(spark, deep_pages, tmp_path):
         [("mega.test", 0.9), ("small0.test", 0.95), ("small1.test", 0.6)],
         "host string, priority double",
     )
-    up = spark.createDataFrame(
-        [("https://mega.test/p7", 1.0)], "canon_url string, priority double"
-    )
 
     def run(ckpt=None, **kw):
         cfg = CrawlConfig(
             rps=0.4, wave_seconds=5, max_waves=6, wave_fetch_cap=4, **kw
         )
         eng = CrawlEngine(spark, deep_pages, cfg, checkpoint_dir=ckpt)
-        return eng.crawl(SEEDS, host_priorities=hp, url_priorities=up)
+        return eng.crawl(SEEDS, host_priorities=hp)
 
     base = run()
     out = run(

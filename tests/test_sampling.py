@@ -12,7 +12,6 @@ from markdown_lab_spark.functions.sampling import (
     deterministic_sample,
     hash_uniform,
     stratified_sample,
-    train_holdout_split,
 )
 
 
@@ -86,14 +85,6 @@ def test_stratified_fractions_per_source(spark, docs):
     assert by_src.get("web", set()) == expect_web
 
 
-def test_train_holdout_split_partitions_exactly(spark, docs):
-    train, hold = train_holdout_split(docs, "doc_id", 0.2, salt="ev")
-    tr = {r["doc_id"] for r in train.collect()}
-    ho = {r["doc_id"] for r in hold.collect()}
-    assert tr | ho == set(range(900)) and not (tr & ho)
-    assert ho == {i for i in range(900) if _py_uniform("ev", i) < 0.2}
-
-
 def test_plan_is_scan_local(spark, docs):
     plan = deterministic_sample(docs, "doc_id", 0.5)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan  # pure filter: no shuffle anywhere
@@ -104,8 +95,6 @@ def test_validation(spark, docs):
         deterministic_sample(docs, "doc_id", 1.5)
     with pytest.raises(ValueError):
         stratified_sample(docs, "doc_id", "source", {"web": -0.1})
-    with pytest.raises(ValueError):
-        train_holdout_split(docs, "doc_id", 2.0)
 
 
 def test_temperature_mix_fractions(spark):

@@ -78,39 +78,39 @@ def test_chunks_jsonl_sink(spark, tmp_path):
     assert json.loads(lines[0])["content"] == "chunk text"
 
 
-def test_export_urls_csv(spark, tmp_path):
-    from markdown_lab_spark.sinks import export_urls_csv
-
-    urls = spark.createDataFrame(
-        [("https://e.com/", 1.0, "2023-01-01"), ("https://e.com/x", None, None)],
-        "loc string, priority double, lastmod string",
-    )
-    out = str(tmp_path / "urls")
-    export_urls_csv(urls, out)
-    lines = set()
-    for fn in os.listdir(out):
-        if fn.startswith("part-"):
-            lines |= set(open(os.path.join(out, fn)).read().splitlines())
-    assert "https://e.com/,1.0,2023-01-01" in lines
-    assert "https://e.com/x" in lines  # nulls dropped
-
-
 # --- streaming ingest ---------------------------------------------------------------
 def test_streaming_convert_pipeline(spark, corpus, tmp_path):
-    from markdown_lab_spark.streaming.ingest import process_pages_stream
+    from markdown_lab_spark.streaming.ingest import (
+        convert_stream,
+        read_pages_stream,
+    )
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     write_corpus_parquet(corpus, str(in_dir / "batch1.parquet"))
     out_dir = str(tmp_path / "docs")
     ckpt = str(tmp_path / "ckpt")
-    q = process_pages_stream(spark, str(in_dir), out_dir, ckpt, available_now=True)
+
+    def drain():
+        q = (
+            convert_stream(read_pages_stream(spark, str(in_dir)))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        return q
+
+    q = drain()
     assert q.lastProgress is not None
     got = spark.read.parquet(out_dir)
     assert got.count() == len(corpus.rows)
     assert got.filter("status = 'ok'").count() == len(corpus.rows)
     # exactly-once: draining again with same checkpoint adds nothing
-    q2 = process_pages_stream(spark, str(in_dir), out_dir, ckpt, available_now=True)
+    drain()
     assert spark.read.parquet(out_dir).count() == len(corpus.rows)
 
 
@@ -187,49 +187,4 @@ def test_stateful_first_seen_filter(spark, tmp_path):
         for r in spark.sql("select * from first_seen").collect()
     }
     # u1 emitted once per host despite appearing in both batches
-    assert rows == {("h1", "u1"), ("h1", "u2"), ("h1", "u3"), ("h2", "u1")}
-
-
-def test_stateful_first_seen_bloom(spark, tmp_path):
-    """Bloom-state variant: constant-size per-host state across batches;
-    at test load (far below capacity) behavior is identical to the exact
-    filter — duplicates dropped across AND within micro-batches."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from markdown_lab_spark.streaming.stateful import first_seen_filter_bloom
-
-    in_dir = tmp_path / "stream_in_bloom"
-    in_dir.mkdir()
-
-    def write_batch(name, rows):
-        table = pa.table(
-            {"host": [r[0] for r in rows], "canon_url": [r[1] for r in rows]}
-        )
-        pq.write_table(table, str(in_dir / name))
-
-    # u2 duplicated WITHIN b1; u1 duplicated ACROSS batches
-    write_batch("b1.parquet", [("h1", "u1"), ("h1", "u2"), ("h1", "u2")])
-    write_batch("b2.parquet", [("h1", "u1"), ("h1", "u3"), ("h2", "u1")])
-
-    schema = "host string, canon_url string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
-    q = (
-        first_seen_filter_bloom(stream, capacity=1 << 12, fpr=0.01)
-        .writeStream.format("memory")
-        .queryName("first_seen_bloom")
-        .option("checkpointLocation", str(tmp_path / "ckpt_bloom"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r["host"], r["canon_url"])
-        for r in spark.sql("select * from first_seen_bloom").collect()
-    }
     assert rows == {("h1", "u1"), ("h1", "u2"), ("h1", "u3"), ("h2", "u1")}

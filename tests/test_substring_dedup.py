@@ -247,78 +247,3 @@ def test_canonical_dedup_null_html_passes_through(spark):
     )
     assert canonical_dedup(df, "url", "html").count() == 2
 
-
-# ---------------------------------------------------------------------------
-# perceptual image dedup (dHash) — the multimodal dedup-family member
-# ---------------------------------------------------------------------------
-
-
-def _gradient_png(w, h, invert=False):
-    import numpy as np
-
-    from markdown_lab_spark.functions import codecs
-
-    y, x = np.mgrid[0:h, 0:w]
-    gx = ((x * 255) // max(w - 1, 1)).astype(np.uint8)
-    if invert:
-        gx = (255 - gx).astype(np.uint8)
-    px = np.stack(
-        [
-            gx,
-            ((y * 255) // max(h - 1, 1)).astype(np.uint8),
-            np.full((h, w), 64, dtype=np.uint8),
-        ],
-        axis=2,
-    )
-    return codecs.encode_png(px), px
-
-
-def test_dhash_invariance_and_discrimination(spark):
-    import numpy as np
-
-    from markdown_lab_spark.functions import codecs, jpeg
-    from markdown_lab_spark.functions.multimodal import dhash_bits
-
-    _, px = _gradient_png(64, 48)
-    h_png = dhash_bits(px)
-    # re-encode through lossy JPEG and decode back: signs survive
-    jp = jpeg.encode_jpeg(px)
-    _, _, _, px2 = jpeg.decode_jpeg(jp)
-    h_jpg = dhash_bits(px2)
-    ham = sum(a != b for a, b in zip(h_png, h_jpg))
-    assert ham <= 6, ham
-    # resized copy: same thumbnail signs
-    _, px_small = _gradient_png(32, 24)
-    assert sum(a != b for a, b in zip(h_png, dhash_bits(px_small))) <= 6
-    # a genuinely different image (inverted gradient: every sign flips)
-    _, px_inv = _gradient_png(64, 48, invert=True)
-    far = dhash_bits(px_inv)
-    assert sum(a != b for a, b in zip(h_png, far)) > 32
-
-
-def test_image_neardup_pairs_spark(spark):
-    from markdown_lab_spark.functions import jpeg
-    from markdown_lab_spark.functions.multimodal import (
-        dhash_images,
-        image_neardup_pairs,
-    )
-
-    png_a, px = _gradient_png(64, 48)
-    jpg_a = jpeg.encode_jpeg(px)
-    png_b, _ = _gradient_png(48, 64, invert=True)  # opposite gradient
-    rows = [
-        (1, bytearray(png_a)),
-        (2, bytearray(jpg_a)),   # near-dup of 1 across formats
-        (3, bytearray(png_b)),
-        (4, None),
-        (5, bytearray(b"not an image")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    fps = dhash_images(df, "media_id", "payload")
-    assert fps.count() == 3  # null + undecodable dropped
-    pairs = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in image_neardup_pairs(df, "media_id", "payload").collect()
-    }
-    assert (1, 2) in pairs and pairs[(1, 2)] <= 6
-    assert all(p == (1, 2) for p in pairs)

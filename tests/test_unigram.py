@@ -1,6 +1,6 @@
 """Unigram-LM tokenizer (functions/unigram.py): Viterbi segmentation
 laws, distributed EM training behavior, determinism across
-partitionings, encode/count pipelines, packing integration."""
+partitionings, the token-count pipeline, packing integration."""
 
 import math
 
@@ -8,10 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from markdown_lab_spark.functions.unigram import (
-    decode_pieces,
     encode_text,
     train_unigram,
-    unigram_encode,
     unigram_token_count,
     viterbi_segment,
 )
@@ -47,7 +45,6 @@ def test_encode_text_uses_pretokenizer_and_memo():
     out = encode_text("Hello, world! hello", logp, memo)
     assert out == ["hello", ",", "world", "!", "hello"]
     assert "hello" in memo
-    assert decode_pieces(["hel", "lo"]) == "hello"
 
 
 # ---- training ----------------------------------------------------------------
@@ -93,22 +90,18 @@ def test_segmentation_compresses_frequent_words(spark, model):
 
 
 # ---- Spark encode / count -----------------------------------------------------
-def test_unigram_encode_and_count(spark, model):
+def test_unigram_token_count_matches_driver_encode(spark, model):
     docs = spark.createDataFrame(
         [(1, "The quick fox"), (2, ""), (3, None)],
         "doc_id long, text string",
     )
-    enc = {r["doc_id"]: r["pieces"] for r in unigram_encode(docs, model).collect()}
     cnt = {
         r["doc_id"]: r["n_tokens"]
         for r in unigram_token_count(docs, model).collect()
     }
-    logp = dict(model)
-    memo = {}
-    assert enc[1] == encode_text("The quick fox", logp, memo)
-    assert cnt[1] == len(enc[1])
-    assert enc[2] == [] and cnt[2] == 0
-    assert enc[3] == [] and cnt[3] == 0
+    pieces = encode_text("The quick fox", dict(model), {})
+    assert pieces and cnt[1] == len(pieces)
+    assert cnt[2] == 0 and cnt[3] == 0
 
 
 def test_counts_feed_packing(spark, model):

@@ -17,6 +17,15 @@ def _ts(i=0):
     return datetime(2026, 8, 17, 12, 0, i, tzinfo=timezone.utc)
 
 
+def _read_wet(spark, path):
+    """(url, warc_ts, text) of the ``conversion`` records under ``path``."""
+    from pyspark.sql import functions as F
+
+    return read_warc(spark, path).filter(
+        (F.col("warc_type") == "conversion") & F.col("url").isNotNull()
+    ).select("url", "warc_ts", F.col("html").cast("string").alias("text"))
+
+
 def _records(n=3):
     return [
         {
@@ -136,7 +145,6 @@ def test_wet_roundtrip_and_interop(spark, tmp_path):
     from markdown_lab_spark.sources.warc import (
         encode_wet,
         parse_warc_stream,
-        read_wet,
         write_wet,
     )
 
@@ -154,7 +162,7 @@ def test_wet_roundtrip_and_interop(spark, tmp_path):
     assert sum(r["n_records"] for r in manifest) == 25
     assert all(r["path"].endswith(".warc.wet.gz") for r in manifest)
 
-    back = read_wet(spark, out_dir)
+    back = _read_wet(spark, out_dir)
     got = {(r["url"], r["text"]) for r in back.collect()}
     assert got == {(u, t) for u, t, _ in rows}
     # timestamps survive the second-resolution WET date format
@@ -175,7 +183,7 @@ def test_wet_roundtrip_and_interop(spark, tmp_path):
 def test_wet_skips_null_rows(spark, tmp_path):
     from datetime import datetime, timezone
 
-    from markdown_lab_spark.sources.warc import read_wet, write_wet
+    from markdown_lab_spark.sources.warc import write_wet
 
     ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
     df = spark.createDataFrame(
@@ -187,43 +195,7 @@ def test_wet_skips_null_rows(spark, tmp_path):
     out_dir = str(tmp_path / "wet2")
     m = write_wet(df, out_dir).collect()
     assert sum(r["n_records"] for r in m) == 1
-    assert [r["text"] for r in read_wet(spark, out_dir).collect()] == ["keep"]
-
-
-def test_warc_pdf_docs_extracts_pdf_records(spark, tmp_path):
-    """application/pdf response records in a mixed archive extract to
-    text through the in-repo PDF parser; HTML records are ignored;
-    corrupt PDFs become error rows."""
-    from datetime import datetime, timezone
-
-    from markdown_lab_spark.sources.pdf import encode_pdf
-    from markdown_lab_spark.sources.warc import encode_warc, warc_pdf_docs
-
-    ts = datetime(2024, 5, 1, tzinfo=timezone.utc)
-    good = encode_pdf(
-        [["A pdf line one.", "And line two."], ["Second page."]],
-        filt="flate",
-    )
-    recs = [
-        {"url": "https://a.example/x.html", "warc_ts": ts,
-         "html": b"<html><body>hi</body></html>"},
-        {"url": "https://a.example/doc.pdf", "warc_ts": ts,
-         "html": good, "mime": "application/pdf"},
-        {"url": "https://a.example/bad.pdf", "warc_ts": ts,
-         "html": b"%PDF-1.4 broken", "mime": "application/pdf"},
-    ]
-    p = tmp_path / "mixed.warc.gz"
-    p.write_bytes(encode_warc(recs))
-    rows = {r["url"]: r for r in warc_pdf_docs(spark, str(p)).collect()}
-    assert set(rows) == {
-        "https://a.example/doc.pdf", "https://a.example/bad.pdf"
-    }
-    ok = rows["https://a.example/doc.pdf"]
-    assert ok["n_pages"] == 2
-    assert ok["text"] == "A pdf line one.\nAnd line two.\fSecond page."
-    assert ok["error"] is None
-    bad = rows["https://a.example/bad.pdf"]
-    assert bad["text"] is None and bad["error"]
+    assert [r["text"] for r in _read_wet(spark, out_dir).collect()] == ["keep"]
 
 
 def test_warc_zst_real_compressor_ingest():
@@ -304,13 +276,13 @@ def test_warc_lz4_frame_ingest():
 
 def test_wet_zstd_egress_roundtrip(spark, tmp_path):
     """write_wet(compression='zstd') publishes .warc.wet.zst via the
-    in-repo store encoder; read_wet ingests it back, and the REAL zstd
+    in-repo store encoder; read_warc ingests it back, and the REAL zstd
     decodes the same files (interop both directions)."""
     import glob
 
     import pyarrow as pa
 
-    from markdown_lab_spark.sources.warc import read_wet, write_wet
+    from markdown_lab_spark.sources.warc import write_wet
 
     rows = [
         (f"https://w.test/d{i}", f"text body {i}", _ts(i)) for i in range(5)
@@ -333,6 +305,6 @@ def test_wet_zstd_egress_roundtrip(spark, tmp_path):
         raw, decompressed_size=len(mine), asbytes=True
     )
     assert plain == mine and plain.startswith(b"WARC/1.0")
-    back = read_wet(spark, out_dir)
+    back = _read_wet(spark, out_dir)
     got = {(r["url"], r["text"]) for r in back.collect()}
     assert got == {(u, t) for u, t, _ in rows}

@@ -12,13 +12,10 @@ import pytest
 from markdown_lab_spark.functions.bzip2 import (
     Bzip2Error,
     decode_bzip2,
-    is_bzip2,
 )
 from markdown_lab_spark.sources.wikipedia import (
     encode_wikidump,
     parse_wikidump,
-    read_wikidump,
-    wiki_docs_table,
     wikitext_to_text,
 )
 
@@ -78,7 +75,6 @@ def test_bzip2_multiblock_and_concatenated_streams():
     data = (b"wiki page text " * 40000)[: 500_000]  # ~5 blocks at level 1
     assert decode_bzip2(bz2.compress(data, 1)) == data
     two = bz2.compress(b"hello") + bz2.compress(b"world" * 100)
-    assert is_bzip2(two)
     assert decode_bzip2(two) == b"hello" + b"world" * 100
 
 
@@ -102,6 +98,17 @@ def test_wikidump_roundtrip_and_pure_bz2_crosscheck():
     assert got[1]["warc_ts"] == _ts(1)
     # the from-scratch bzip2 decoder reads the same fixture
     assert decode_bzip2(payload) == bz2.decompress(payload)
+    # namespace and redirect target ride along for callers to filter on
+    extra = [
+        {"title": "Talk:Article 0", "ns": 1, "page_id": 900,
+         "wikitext": "talk chatter"},
+        {"title": "Old Name", "ns": 0, "page_id": 901,
+         "redirect": "Article 0", "wikitext": "#REDIRECT [[Article 0]]"},
+    ]
+    got = list(parse_wikidump(encode_wikidump(pages + extra, multistream=2)))
+    assert [(p["ns"], p["redirect"]) for p in got] == [(0, None)] * 4 + [
+        (1, None), (0, "Article 0")
+    ]
 
 
 def test_wikidump_multistream_and_torn_tail():
@@ -134,50 +141,3 @@ def test_wikitext_to_text_fixtures():
     ]
     for src, want in cases:
         assert wikitext_to_text(src) == want, src
-
-
-def test_redirects_and_namespaces_filtered(spark, tmp_path):
-    pages = _pages(3)
-    pages.append(
-        {
-            "title": "Talk:Article 0",
-            "ns": 1,
-            "page_id": 900,
-            "warc_ts": _ts(),
-            "wikitext": "talk chatter",
-        }
-    )
-    pages.append(
-        {
-            "title": "Old Name",
-            "ns": 0,
-            "page_id": 901,
-            "warc_ts": _ts(),
-            "redirect": "Article 0",
-            "wikitext": "#REDIRECT [[Article 0]]",
-        }
-    )
-    p = tmp_path / "dump.xml.bz2"
-    p.write_bytes(encode_wikidump(pages, multistream=2))
-    all_pages = read_wikidump(spark, str(p))
-    assert all_pages.count() == 5
-    docs = wiki_docs_table(spark, str(p)).orderBy("doc_id").collect()
-    assert [r["doc_id"] for r in docs] == [100, 101, 102]
-    assert docs[0]["url"] == "https://en.wikipedia.org/wiki/Article_0"
-    assert "infobox" not in docs[0]["text"]
-    assert "Article 0" in docs[0]["text"]
-    assert "page" in docs[0]["text"]  # link label survived
-
-
-def test_wiki_docs_feed_curation_shape(spark, tmp_path):
-    """The docs table has the exact columns the curation stack uses."""
-    p = tmp_path / "d.xml.bz2"
-    p.write_bytes(encode_wikidump(_pages(3)))
-    docs = wiki_docs_table(spark, str(p))
-    assert set(docs.columns) == {"doc_id", "url", "warc_ts", "title", "text"}
-    from markdown_lab_spark.functions.dedup import exact_dedup
-
-    # runs through an actual curation operator: 3 distinct texts
-    groups = exact_dedup(docs, "doc_id", "text")
-    assert groups.count() == 3
-    assert groups.agg({"dup_count": "max"}).collect()[0][0] == 1
