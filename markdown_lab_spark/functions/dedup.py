@@ -10,11 +10,13 @@ Scale notes:
 - exact dedup: one shuffle on the content hash (map-side partial distinct
   via AQE); at 100 TB prefer a two-level hash (cheap 64-bit prefilter,
   md5 verify) and bucketed output.
-- MinHash LSH: one Arrow UDF computes all k signature lanes inside each
-  doc's row (no shuffle), bands -> self-join only within band buckets,
+- MinHash LSH: one Arrow pass computes all k signature lanes inside each
+  doc's row from its shingle set (no shuffle), bands -> self-join only within band buckets,
   so candidate pairs ~ O(true dups), not O(n^2).
-- n-gram Jaccard: candidate pairs restricted to pairs sharing >=1 shingle
-  (inner self-join on shingle), counts -> |A∩B| / (|A|+|B|-|A∩B|).
+- n-gram Jaccard: each doc's shingle set is one sorted array row; the
+  self-join runs on each set's prefix only, under a length filter, and
+  the survivors are verified by array_intersect against broadcast
+  candidates -> |A∩B| / (|A|+|B|-|A∩B|).
 - connected components: star-contraction rounds while the edge set is
   large; once it has at most ``_LOCAL_EDGES`` edges it is collected
   through Arrow and finished by a driver-side union-find, so the driver
@@ -67,6 +69,56 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+    """(id, sh, n_sh): each doc's distinct word n-gram set as one sorted
+    ``array<string>`` plus its size, from ONE Arrow pass over ``spread(df)``.
+
+    ``sh`` equals the ``shingles(text, n)`` set: Java's default ``\\s``
+    split after a 0x20-only trim ('' pseudo-tokens kept), a text under
+    ``n`` words is one whole-text gram, and a null text is ``[""]``. It
+    is sorted by ``(md5(shingle), shingle)``, a global total order that
+    needs no global pass (``ngram_jaccard_pairs``' prefix filter)."""
+    from .partitioning import spread  # noqa: PLC0415
+
+    @F.pandas_udf("array<string>")
+    def _sets(texts: pd.Series) -> pd.Series:
+        import hashlib  # noqa: PLC0415
+        import re  # noqa: PLC0415
+
+        split = re.compile("[ \t\n\x0b\f\r]+").split
+        md5 = hashlib.md5
+        out = []
+        for text in texts:
+            # a null text is one '' word, as concat_ws over its null slice
+            words = [""] if text is None else split(text.strip(" "))
+            grams = {" ".join(words[i : i + n]) for i in range(max(len(words) - n, 0) + 1)}
+            out.append(sorted(grams, key=lambda g: (md5(g.encode("utf-8")).digest(), g)))
+        return pd.Series(out)
+
+    sets = spread(df).select(F.col(id_col), _sets(F.col(text_col)).alias("sh"))
+    return sets.withColumn("n_sh", F.size("sh"))
+
+
+def _with_minhash(sets: DataFrame, k: int) -> DataFrame:
+    """``sets`` plus ``_mh``: the k MinHash lanes of each ``shingle_sets``
+    row, lane i = min(md5(shingle || ':' || i)) (the min digest is the min
+    lowercase hex). Chained onto ``shingle_sets``' UDF in one Arrow pass."""
+
+    @F.pandas_udf("array<string>")
+    def _lanes(sets_col: pd.Series) -> pd.Series:
+        import hashlib  # noqa: PLC0415
+
+        md5 = hashlib.md5
+        suffixes = [f":{i}".encode() for i in range(k)]
+        out = []
+        for grams in sets_col:
+            enc = [g.encode("utf-8") for g in grams]
+            out.append([min(md5(g + suf).digest() for g in enc).hex() for suf in suffixes])
+        return pd.Series(out)
+
+    return sets.withColumn("_mh", _lanes(F.col("sh")))
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
@@ -76,59 +128,12 @@ def minhash_signatures(
 ) -> DataFrame:
     """k-lane MinHash signature per doc: lane i = min(md5(shingle || ':' || i)).
 
-    ONE Arrow-batched pandas UDF: a doc's shingles never leave its row,
-    so there is no explode + k-lane groupBy shuffle (guide §2.4/§4.2)
-    and the per-shingle work is hashlib's C md5; the input is spread to
-    cluster parallelism first (partitioning.spread, a no-op for
-    corpus-scale scans). Hex-string min in Python equals the JVM's
-    UTF8String ordering because both compare lowercase-hex bytewise.
-    The DuckDB oracle computes the same lanes as an explode + groupBy.
+    The lanes are computed from ``shingle_sets`` inside each doc's row, so
+    there is no explode + k-lane groupBy shuffle (guide §2.4/§4.2). The
+    DuckDB oracle computes the same lanes as an explode + groupBy.
     """
-    from .partitioning import spread  # noqa: PLC0415
-
-    @F.pandas_udf("array<string>")
-    def _sig(texts: pd.Series) -> pd.Series:
-        import hashlib  # noqa: PLC0415
-        import re  # noqa: PLC0415
-
-        # Java default \s (no UNICODE_CHARACTER_CLASS) + Spark trim
-        # (0x20 only): tokens match F.split(F.trim(col), r"\s+")
-        # byte-for-byte, '' pseudo-tokens included (simhash64 rationale)
-        split = re.compile("[ \t\n\x0b\f\r]+").split
-        n = shingle_n
-        suffixes = [f":{i}".encode() for i in range(k)]
-        out = []
-        for text in texts:
-            if text is None:
-                # as shingles() on a null text: greatest(size(NULL), 0)
-                # = 0 and concat_ws over the null slice is '' — a null
-                # text gets the empty-string pseudo-gram, NOT dropped
-                grams = {""}
-                words = None
-            else:
-                words = split(text.strip(" "))
-                # shingles(): sequence(0, greatest(size - n, 0)) then
-                # concat_ws over slice — short texts emit one whole-text
-                # pseudo-gram; array_distinct = the set below
-                grams = {
-                    " ".join(words[i : i + n])
-                    for i in range(max(len(words) - n, 0) + 1)
-                }
-            md5 = hashlib.md5
-            lanes = []
-            for suf in suffixes:
-                lanes.append(
-                    min(md5(g.encode("utf-8") + suf).hexdigest() for g in grams)
-                )
-            out.append(lanes)
-        return pd.Series(out)
-
-    sig = spread(df).select(
-        F.col(id_col), _sig(F.col(text_col)).alias("_mh")
-    )
-    return sig.select(
-        F.col(id_col), *[F.col("_mh")[i].alias(f"mh_{i}") for i in range(k)]
-    )
+    sigs = _with_minhash(shingle_sets(df, id_col, text_col, shingle_n), k)
+    return sigs.select(F.col(id_col), *[F.col("_mh")[i].alias(f"mh_{i}") for i in range(k)])
 
 
 def minhash_lsh_pairs(
@@ -141,12 +146,9 @@ def minhash_lsh_pairs(
     """LSH banding: docs sharing any band bucket become candidate pairs;
     estimated Jaccard = fraction of equal signature lanes. Returns
     (id_a, id_b, est_jaccard) with id_a < id_b."""
-    # materialize the signatures once: the banded self-join's two sides
-    # are NOT canonicalized into a ReusedExchange by Spark, so without
-    # this the k-lane groupBy over every shingle runs twice (verified in
-    # the q20/q37 physical plans). At warehouse scale the signature table
-    # is persisted anyway — one pass over the tokens, then pair-finding
-    # reads fingerprints, never the corpus.
+    # materialize the signatures once: Spark does not reuse one side of
+    # the banded self-join for the other, so each side would recompute
+    # every lane; pair-finding then reads fingerprints, never the corpus
     sigs = sigs.localCheckpoint(eager=True)
     rows_per_band = k // bands
     band_cols = [
@@ -199,30 +201,49 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs sharing >=1 shingle."""
-    sh = df.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), shingle_n)).alias("sh")
-    ).dropDuplicates([id_col, "sh"])
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    """(id_a, id_b, jaccard) with id_a < id_b and jaccard =
+    round(|A∩B| / |A∪B|, 6) >= ``threshold``, over pairs sharing a shingle.
 
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+    Exact prefix and length filters (TokenJoin, VLDB 2022; LCJoin, ICDE
+    2019) over the once-materialized ``shingle_sets``: in their shared
+    order a pair with J >= t' shares a token among each set's first
+    |x| - ceil(t'|x|) + 1, and t'|x| <= |y| <= |x|/t'. Rounding admits J
+    down to t - 5e-7, so t' is that (less 1e-12, so a product one ulp
+    high cannot shorten a prefix); t' <= 0 joins every shingle unfiltered.
+    The distinct survivors are verified by ``_intersections``."""
+    sets = shingle_sets(df, id_col, text_col, shingle_n).localCheckpoint(eager=True)
+    tp = threshold - 5e-7 - 1e-12
+    n = F.col("n_sh")
+    prefix = F.slice("sh", 1, n - F.ceil(n * tp).cast("int") + 1) if tp > 0 else F.col("sh")
+    toks = sets.select(F.col(id_col).alias("_id"), n, F.explode(prefix).alias("_tok"))
+    a, b = toks.alias("a"), toks.alias("b")
+    on = (F.col("a._tok") == F.col("b._tok")) & (F.col("a._id") < F.col("b._id"))
+    if tp > 0:
+        on &= (F.col("b.n_sh") >= F.col("a.n_sh") * tp) & (
+            F.col("a.n_sh") >= F.col("b.n_sh") * tp
         )
-        .agg(F.count("*").alias("n_inter"))
-    )
+    cand = a.join(b, on).select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
+    cand = cand.distinct()
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
+        _intersections(sets, cand, id_col)
+        .withColumn("jaccard", F.round(F.col("n_inter") / F.col("n_union"), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+def _intersections(sets: DataFrame, cand: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, n_inter, n_union) of each candidate pair by
+    ``size(array_intersect)`` of its two ``shingle_sets`` rows. Both joins
+    broadcast the candidate side, so the sets are never shuffled."""
+    s = sets.select(F.col(id_col).alias("_sid"), "sh", "n_sh")
+    a = s.join(F.broadcast(cand), F.col("_sid") == F.col("id_a"))
+    a = a.select("id_a", "id_b", F.col("sh").alias("_sa"), F.col("n_sh").alias("_na"))
+    ab = s.join(F.broadcast(a), F.col("_sid") == F.col("id_b")).select(
+        "id_a", "id_b", "_na", "n_sh", F.size(F.array_intersect("_sa", "sh")).alias("n_inter")
+    )
+    n_union = F.col("_na") + F.col("n_sh") - F.col("n_inter")
+    return ab.select("id_a", "id_b", "n_inter", n_union.alias("n_union"))
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -360,41 +381,19 @@ def rademacher_hyperplanes(nbits: int, dim: int) -> List[List[int]]:
     ]
 
 
-def rademacher_signature_col(
-    vec_col, planes: List[List[int]], jvm: bool = False
-):
+def rademacher_signature_col(vec_col, planes: List[List[int]]):
     """The ``nbits``-char '0'/'1' sign-bit signature of ``vec_col`` under
     Rademacher hyperplanes ``planes``.
 
-    Two implementations with bit-identical output:
-
-    - ``jvm=False`` (default): one Arrow-batched pandas UDF whose numpy
-      accumulation adds the ±x_j terms in the same left-to-right order as
-      the JVM fold, so every dot product — and therefore every sign bit —
-      is IEEE-identical to the expression variant and to the DuckDB
-      oracle's unrolled ``0.0 + x0 - x1 ...`` sum. Plan size is O(1):
-      the expression variant's tree is O(nbits*dim) interpreted
-      higher-order-function nodes which, duplicated across both sides of
-      the LSH self-join, costs seconds of driver analysis/codegen per run
-      (measured: q35 6.4 s -> the join itself is milliseconds at oracle
-      scale) and ~nbits*dim interpreted lambda calls per row
-      executor-side.
-    - ``jvm=True``: the pure-expression twin (zip_with + aggregate fold),
-      kept for the agreement test and for environments without Arrow.
+    One Arrow-batched pandas UDF whose numpy accumulation adds the ±x_j
+    terms in the same left-to-right order as the DuckDB oracle's unrolled
+    ``0.0 + x0 - x1 ...`` sum, so every dot product — and therefore every
+    sign bit — is IEEE-identical to it. Plan size is O(1): an expression
+    form's tree is O(nbits*dim) interpreted higher-order-function nodes
+    which, duplicated across both sides of the LSH self-join, costs
+    seconds of driver analysis/codegen per run (measured: q35 6.4 s ->
+    the join itself is milliseconds at oracle scale).
     """
-    if jvm:
-
-        def _bit(p: int):
-            w = F.array(*[F.lit(float(x)) for x in planes[p]])
-            dot = F.aggregate(
-                F.zip_with(vec_col, w, lambda x, y: x.cast("double") * y),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-        return F.concat(*[_bit(p) for p in range(len(planes))])
-
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
 
     W = np.asarray(planes, dtype=np.float64)  # nbits x dim
@@ -430,7 +429,6 @@ def embedding_neardup_pairs_banded(
     nbits: int = 16,
     bands: int = 4,
     dim: int = 64,
-    jvm_sig: bool = False,
 ) -> DataFrame:
     """Scale-safe embedding near-dup: random-hyperplane LSH with banding.
 
@@ -445,8 +443,7 @@ def embedding_neardup_pairs_banded(
     bands. Exact cosine >= threshold verifies candidates.
 
     Signatures come from :func:`rademacher_signature_col` (Arrow-batched
-    numpy by default; ``jvm_sig=True`` selects the bit-identical
-    pure-expression twin — see its docstring for the plan-size rationale).
+    numpy; see its docstring for the plan-size rationale).
     Returns (id_a, id_b, cos_sim) with id_a < id_b, cos rounded to 4dp.
     """
     from .similarity import cosine_similarity_col  # noqa: PLC0415
@@ -454,7 +451,7 @@ def embedding_neardup_pairs_banded(
     planes = rademacher_hyperplanes(nbits, dim)
     rb = nbits // bands
 
-    sig = rademacher_signature_col(F.col(vec_col), planes, jvm=jvm_sig)
+    sig = rademacher_signature_col(F.col(vec_col), planes)
     # materialized once: the self-join's two sides would otherwise run
     # the signature UDF (and the upstream lineage) twice
     sigd = embeddings.select(
@@ -783,10 +780,12 @@ def near_dedup_keep(
 ) -> DataFrame:
     """The full FineWeb-shaped fuzzy-dedup pipeline as one composition:
 
-    1. MinHash signatures (one shuffle over the shingles),
+    1. ``shingle_sets`` and the MinHash lanes computed from them,
+       materialized once,
     2. LSH banding -> candidate pairs (banded self-join, ~O(true dups)),
-    3. exact n-gram Jaccard VERIFY of the candidates only (kills LSH
-       false positives before they chain clusters together),
+    3. exact n-gram Jaccard VERIFY of the candidates only, by
+       ``_intersections`` over the same sets (kills LSH false positives
+       before they chain clusters together),
     4. connected components over the verified pairs (similarity is
        transitive through chains the pair list never states),
     5. keep the min-id representative per cluster.
@@ -796,37 +795,14 @@ def near_dedup_keep(
     composition a user runs. Verification restricted to candidate pairs
     keeps step 3 linear in true-duplicate volume — the two O(n^2) traps
     (all-pairs Jaccard, all-pairs components) never appear."""
-    sigs = minhash_signatures(df, id_col, text_col, k=k, shingle_n=shingle_n)
-    cand = minhash_lsh_pairs(
-        sigs, id_col, k=k, bands=bands, min_est_jaccard=0.0
-    ).select("id_a", "id_b")
-    # verify: exact Jaccard on candidate pairs only
-    sh = df.select(
-        F.col(id_col).alias("_vid"),
-        F.explode(shingles(F.col(text_col), shingle_n)).alias("sh"),
-    ).dropDuplicates(["_vid", "sh"])
-    sizes = sh.groupBy("_vid").agg(F.count("*").alias("n_sh"))
-    shared = (
-        sh.alias("a")
-        .join(
-            cand,
-            F.col("a._vid") == F.col("id_a"),
-        )
-        .join(
-            sh.alias("b"),
-            (F.col("b._vid") == F.col("id_b")) & (F.col("a.sh") == F.col("b.sh")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    sets = _with_minhash(shingle_sets(df, id_col, text_col, shingle_n), k)
+    sets = sets.localCheckpoint(eager=True)
+    sigs = sets.select(F.col(id_col), *[F.col("_mh")[i].alias(f"mh_{i}") for i in range(k)])
+    cand = minhash_lsh_pairs(sigs, id_col, k=k, bands=bands, min_est_jaccard=0.0)
+    cand = cand.select("id_a", "id_b")
     verified = (
-        shared.join(sizes.withColumnRenamed("_vid", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("_vid", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .filter(
-            F.col("n_inter")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            >= min_jaccard
-        )
+        _intersections(sets, cand, id_col)
+        .filter(F.col("n_inter") / F.col("n_union") >= min_jaccard)
         .select("id_a", "id_b")
     )
     return dedup_near_duplicates(
@@ -1051,17 +1027,30 @@ def canonical_dedup(df: DataFrame, url_col: str, html_col: str) -> DataFrame:
     never pins one task in a window.
 
     PRECONDITION: ``url_col`` is the corpus row key (the crawl
-    invariant: one row per canonical URL) — duplicate url values would
-    cross-multiply through the keep join; dedupe upstream first.
+    invariant: one row per canonical URL). A duplicate url would
+    cross-multiply through the keep join, so the plan raises on one: a
+    narrow groupBy(url) over (url, target) with ``raise_error`` ahead of
+    the target grouping, inside the same query (no separate action).
     That lets the keep set re-attach by URL alone, so
     the html-parsing UDF runs in ONE narrow pass (url + html only cross
     Arrow) inside the keep computation — the previous semi-join on
     (target, url) consumed the un-materialized UDF column on BOTH sides
     and parsed the whole corpus twice (guide §4.1: control how many
     columns cross, and how many times)."""
-    narrow = canonical_targets(
-        df.select(url_col, html_col), url_col, html_col
-    ).select(url_col, "canonical_target")
+    dup = F.raise_error(
+        F.concat(F.lit(f"canonical_dedup: {url_col} is not unique: "), F.col(url_col))
+    )
+    narrow = (
+        canonical_targets(df.select(url_col, html_col), url_col, html_col)
+        .groupBy(url_col)
+        .agg(F.count("*").alias("_n"), F.min("canonical_target").alias("_t0"))
+        .select(
+            url_col,
+            F.when((F.col("_n") > 1) & F.col(url_col).isNotNull(), dup)
+            .otherwise(F.col("_t0"))
+            .alias("canonical_target"),
+        )
+    )
     keep = (
         narrow.groupBy("canonical_target")
         .agg(

@@ -25,7 +25,7 @@ PICK = {
  "q58_decontaminate": "benchmark decontamination: broadcast bench-ngram membership, corpus side narrow shingle+explode, one partial-agg groupBy",
  "q63_substring_dedup": "exact substring dedup: JVM window hashing (no Python), ONE partial-agg count shuffle on whash, join back, higher-order coverage splice — no Window node",
  "q64_crawl_delay_cap": "Crawl-delay cap: every Window partitions the SCHEDULE (per-host size <= budget by construction); since the round-6 politeness rewrite the merge rounds are ONE tagged window chain (sticky _def flag, bounded per-shard buckets for deferred rows) instead of per-round union branches, so the plan no longer repeats the window subtree per leg; under-budget hosts bypass the windows; delays join is AQE-broadcastable",
- "q65_canonical_dedup": "canonical dedup: ONE partial-agg groupBy on canonical_target (min(struct) collapses mega-groups map-side) + semi-join back — no Window",
+ "q65_canonical_dedup": "canonical dedup: partial-agg groupBy(url) that raises on a repeated url, then ONE partial-agg groupBy on canonical_target (min(struct) collapses mega-groups map-side) + semi-join back — no Window",
  "q68_quality_classifier": "NBSVM quality classifier, closed-form train+score in ONE declarative query: distinct-presence agg + term agg build the weight table (partial agg absorbs Zipf skew), scoring is a broadcast weights join + ONE per-doc agg; no Window, no Python UDF",
  "q66_near_dedup_keep": "fuzzy-dedup composition: banded LSH candidates -> candidate-restricted exact-Jaccard verify (joins touch only candidate rows) -> bounded-iteration components -> ONE left_anti; no O(n^2) stage",
 }

@@ -297,25 +297,27 @@ def test_simhash64_pinned_edge_cases(spark):
     assert _rows_digest(corpus) == "c398d7988f3e129aef216741cd8da44a"
 
 
-def test_rademacher_signature_pandas_jvm_agree(spark):
-    """The Arrow-batched numpy signature must be bit-identical to the
-    pure-expression fold (which the DuckDB oracle unrolls): the numpy
+def test_rademacher_signature_pinned(spark):
+    """The Arrow-batched numpy signature over the sf0.001 embeddings,
+    pinned to the signatures the pure-expression fold (zip_with +
+    aggregate, the form the DuckDB oracle unrolls) computed: the numpy
     path adds the ±x_j terms in the same left-to-right order, so every
     sign bit agrees even for dot products within one ulp of zero."""
     planes = D.rademacher_hyperplanes(32, 64)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    mismatches = emb.select(
-        D.rademacher_signature_col(F.col("embedding"), planes, jvm=False).alias("a"),
-        D.rademacher_signature_col(F.col("embedding"), planes, jvm=True).alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    assert mismatches.count() == 0
+    rows = emb.select(
+        "vec_id", D.rademacher_signature_col(F.col("embedding"), planes)
+    ).collect()
+    assert len(rows) == 500
+    assert _rows_digest(rows) == "27fb4efe8f3ad4dd88ffd319ad475440"
 
 
 def test_rademacher_signature_agreement_adversarial(spark):
     """Vectors engineered so many hyperplane dots land within a few ulp of
-    zero — the only place the numpy path could diverge from the JVM fold
-    if its summation order differed. Mixed magnitudes force catastrophic
-    cancellation; sign agreement must still be bit-exact."""
+    zero — the only place the numpy path could diverge from the oracle's
+    left-to-right fold if its summation order differed. Mixed magnitudes
+    force catastrophic cancellation; the signatures are pinned to the
+    ones the pure-expression fold computed, bit for bit."""
     import math
     import random
 
@@ -341,9 +343,218 @@ def test_rademacher_signature_agreement_adversarial(spark):
         rows.append((i, [float(x) for x in vec]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     planes = D.rademacher_hyperplanes(64, 64)
-    bad = df.select(
-        D.rademacher_signature_col(F.col("embedding"), planes, jvm=False).alias("a"),
-        D.rademacher_signature_col(F.col("embedding"), planes, jvm=True).alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    assert bad.count() == 0
+    got = df.select(
+        "vec_id", D.rademacher_signature_col(F.col("embedding"), planes)
+    ).collect()
+    # one vector of each kind: cancellation, 12 decades, subnormal, plain
+    sigs = dict(map(tuple, got))
+    assert {i: sigs[i] for i in range(4)} == {
+        0: "0010011010111101000101110110111111001100111111101101000110110000",
+        1: "1110101000110111101011010001101000111100000010111111111101111111",
+        2: "1011100100100100110000010100000001100011111110000010111011010111",
+        3: "1110001001001000101110000001010111001100000000100010111100000110",
+    }
+    assert _rows_digest(got) == "f72c0d9ab8feaa239b4a7a4f4a841967"
     assert all(math.isfinite(x) for r in rows for x in r[1])
+
+
+# ---------------------------------------------------------------------------
+# shingle_sets and the filtered exact Jaccard join
+# ---------------------------------------------------------------------------
+
+_EDGE_TEXTS = [
+    None,
+    "",
+    " ",
+    "\tleading tab then words",
+    "double  space  inside here",
+    "unicode café über tökens x",
+    "nbsp\u00a0is a word char",
+    "vt\x0bsplits like space here",
+    "one",
+    "two words",
+    "  padded  ",
+    "a b c a b c a b c",
+]
+
+
+def _md5_order(grams):
+    return sorted(grams, key=lambda g: (hashlib.md5(g.encode()).hexdigest(), g))
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_shingle_sets_equal_sorted_shingles(spark, n):
+    """shingle_sets is element-for-element the JVM shingles() set, sorted
+    by (md5(shingle), shingle): null text, '', leading tab, double space,
+    accents, NBSP (not \\s in Java), \\x0b (\\s in Java) and texts shorter
+    than n words."""
+    df = spark.createDataFrame(
+        list(enumerate(_EDGE_TEXTS)), "doc_id long, text string"
+    )
+    jvm = {
+        r[0]: r[1]
+        for r in df.select("doc_id", D.shingles(F.col("text"), n)).collect()
+    }
+    got = {
+        r["doc_id"]: (list(r["sh"]), r["n_sh"])
+        for r in D.shingle_sets(df, "doc_id", "text", n).collect()
+    }
+    assert got == {i: (_md5_order(jvm[i]), len(jvm[i])) for i in jvm}
+    assert got[0][0] == [""]  # a null text keeps the '' pseudo-gram
+    assert "nbsp\u00a0is" in " ".join(got[6][0])
+
+
+def _pairs(df, t, n=3):
+    return sorted(
+        map(tuple, D.ngram_jaccard_pairs(df, "doc_id", "text", n, t).collect())
+    )
+
+
+def test_jaccard_pair_that_rounds_up_is_emitted(spark):
+    """J = 2/3 rounds to 0.666667: at t = 0.666667 the length filter must
+    use t - 5e-7 (|A| = 2 >= t * |B| = 2.000001 fails), or the pair that
+    only rounding admits is lost."""
+    df = spark.createDataFrame(
+        [(1, "x y"), (2, "x y z"), (3, "x q r s")], "doc_id long, text string"
+    )
+    assert _pairs(df, 0.666667, n=1) == [(1, 2, 0.666667)]
+    assert _pairs(df, 0.666668, n=1) == []
+
+
+@pytest.mark.parametrize("t", [0.0, -1.0])
+def test_jaccard_nonpositive_threshold_joins_every_shared_shingle(spark, t):
+    """t <= 0: no prefix and no length filter; every pair sharing at least
+    one shingle is emitted, however small its Jaccard, and pairs sharing
+    none are not."""
+    df = spark.createDataFrame(
+        [
+            (1, "a b c"),
+            (2, "a b c x y z u v w q r s"),
+            (3, "k l m"),
+            (4, "k l m"),
+        ],
+        "doc_id long, text string",
+    )
+    assert _pairs(df, t) == [(1, 2, 0.1), (3, 4, 1.0)]
+
+
+def _brute_jaccard(rows, n, t):
+    """All-pairs exact Jaccard in pure Python: split on Java's \\s class
+    after a 0x20-only trim, round half-up at 6 decimals like Spark."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def grams(text):
+        w = re.split("[ \t\n\x0b\f\r]+", text.strip(" "))
+        return {" ".join(w[i : i + n]) for i in range(max(len(w) - n, 0) + 1)}
+
+    sets = {i: grams(x) for i, x in rows}
+    out = []
+    ids = sorted(sets)
+    for ai, a in enumerate(ids):
+        for b in ids[ai + 1 :]:
+            inter = len(sets[a] & sets[b])
+            if not inter:
+                continue
+            j = inter / len(sets[a] | sets[b])
+            j = float(Decimal(repr(j)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+            if j >= t:
+                out.append((a, b, j))
+    return sorted(out)
+
+
+def _seeded_corpus(seed=7, n_docs=200):
+    """~200 docs over a small vocabulary, a third of them edited copies
+    of an earlier doc (one to three words replaced, dropped or appended),
+    plus short texts below the shingle width."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"v{i}" for i in range(120)]
+    rows = []
+    for i in range(n_docs):
+        if rows and rng.random() < 0.35:
+            words = rng.choice(rows)[1].split(" ")
+            for _ in range(rng.randint(1, 3)):
+                op = rng.random()
+                pos = rng.randrange(len(words))
+                if op < 0.4:
+                    words[pos] = rng.choice(vocab)
+                elif op < 0.7 and len(words) > 1:
+                    del words[pos]
+                else:
+                    words.append(rng.choice(vocab))
+        else:
+            words = [rng.choice(vocab) for _ in range(rng.randint(1, 80))]
+        rows.append((i, " ".join(words)))
+    return rows + [(n_docs, "v1 v2"), (n_docs + 1, "v1 v2"), (n_docs + 2, "v1")]
+
+
+@pytest.mark.parametrize("t", [0.5, 0.8, 0.9])
+def test_ngram_jaccard_pairs_match_bruteforce(spark, t):
+    """Prefix + length filters lose nothing: the operator equals an
+    all-pairs pure-Python Jaccard on a seeded corpus with planted
+    near-duplicates."""
+    rows = _seeded_corpus()
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _brute_jaccard(rows, 3, t)
+    assert len(want) >= 10, "corpus must plant pairs above the threshold"
+    assert _pairs(df, t) == want
+
+
+def _plan_nodes(plan):
+    """Every node of an executed plan, through adaptive and query-stage
+    wrappers."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    yield plan
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _verify_joins(df):
+    """The verify joins of an executed pair frame: the hash joins keyed
+    on the shingle-set id ``_sid``."""
+    df.collect()
+    return [
+        p for p in _plan_nodes(df._jdf.queryExecution().executedPlan())
+        if "HashJoinExec" in p.getClass().getSimpleName()
+        and "_sid" in p.leftKeys().toString()
+    ]
+
+
+def _assert_candidate_build_side(joins):
+    assert len(joins) == 2
+    for j in joins:
+        assert j.getClass().getSimpleName() == "BroadcastHashJoinExec"
+        assert j.buildSide().toString() == "BuildRight"
+        build = j.right().output().toString()
+        assert "id_a" in build and "id_b" in build
+        # the stream side is the materialized sets, never shuffled
+        stream = [p.getClass().getSimpleName() for p in _plan_nodes(j.left())]
+        assert not any("Exchange" in s for s in stream), stream
+
+
+def test_verify_joins_broadcast_candidates(spark, monkeypatch):
+    """ngram_jaccard_pairs and near_dedup_keep verify candidates with two
+    BroadcastHashJoins whose build side is the candidate pairs, so the
+    shingle sets stream and are never shuffled."""
+    df = spark.createDataFrame(_seeded_corpus(n_docs=60), "doc_id long, text string")
+    _assert_candidate_build_side(
+        _verify_joins(D.ngram_jaccard_pairs(df, "doc_id", "text", 3, 0.5))
+    )
+    seen = []
+    orig = D.dedup_near_duplicates
+
+    def capture(df_, id_col, pairs, *args, **kwargs):
+        seen.append(pairs)
+        return orig(df_, id_col, pairs, *args, **kwargs)
+
+    monkeypatch.setattr(D, "dedup_near_duplicates", capture)
+    D.near_dedup_keep(df, "doc_id", "text", k=16, bands=8, min_jaccard=0.5).collect()
+    _assert_candidate_build_side(_verify_joins(seen[0]))

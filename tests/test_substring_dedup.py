@@ -247,3 +247,29 @@ def test_canonical_dedup_null_html_passes_through(spark):
     )
     assert canonical_dedup(df, "url", "html").count() == 2
 
+
+
+def test_canonical_dedup_raises_on_duplicated_url(spark):
+    """One row per URL is enforced inside the plan: a repeated url raises
+    instead of cross-multiplying through the keep join, whether its copies
+    declare the same canonical target or different ones."""
+    from pyspark.errors import PySparkException
+
+    from markdown_lab_spark.functions.dedup import canonical_dedup
+
+    base = [
+        ("https://a.example/x", _page()),
+        ("https://a.example/x?utm=1", _page("https://a.example/x")),
+        ("https://b.example/solo", _page()),
+    ]
+    same = base + [("https://a.example/x", _page())]
+    other = base + [("https://a.example/x?utm=1", _page("https://c.example/y"))]
+    for rows in (same, other):
+        df = spark.createDataFrame(rows, "url string, html string")
+        with pytest.raises(PySparkException, match="url is not unique"):
+            canonical_dedup(df, "url", "html").collect()
+    df = spark.createDataFrame(base, "url string, html string")
+    assert sorted(r["url"] for r in canonical_dedup(df, "url", "html").collect()) == [
+        "https://a.example/x",
+        "https://b.example/solo",
+    ]
