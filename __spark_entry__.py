@@ -54,9 +54,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DataFrame DEFINITION (the resolved scan + schema): every execution
     still reads the parquet files. Without this each ``spark.read
     .parquet`` costs a driver job (~0.1 s) re-reading the same footer —
-    q47 alone builds nine legs over the same table, so a single query
-    construction paid ~1 s of pure metadata re-resolution (guide §6:
-    file-listing/metadata work is driver-side and repeats per read)."""
+    q47 builds six legs over the same table, and the gate queries read
+    ``documents`` again and again in one session, so uncached handles
+    repeat that metadata re-resolution per read (guide §6: file-listing/
+    metadata work is driver-side and repeats per read)."""
     per_session = _TABLE_CACHE.setdefault(spark, {})
     key = (sf_dir, name)
     df = per_session.get(key)
@@ -1173,175 +1174,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "pixel_sum long",
         ).select("codec", "media_id", "width", "height", "pixel_sum")
 
-        # H.264 leg (round-5 continuation): REAL Annex B decode under
-        # the hash gate — constant-color frames reproduce EXACTLY on
-        # three distinct code paths, so the oracle is closed-form:
-        #   doc_id%3==0 ('h264i'): 3 intra frames at qp 28 — NAL/SPS/PPS
-        #     parse, CAVLC, intra DC/V prediction, the I16 luma-DC
-        #     Hadamard chain (luma-exact at qp28: the quantizer scale is
-        #     a power of two there, proven in tests);
-        #   doc_id%3==1 ('h264p'): I_PCM macroblocks — lossless, so the
-        #     sum covers luma AND both chroma planes;
-        #   doc_id%3==2 ('h264s'): an I-P-B GOP of identical frames —
-        #     the P picture collapses to mb_skip_run (P_Skip MV
-        #     derivation + skip reconstruction) and the B picture to
-        #     direct-mode B_Skip (POC reference lists, temporal/spatial
-        #     direct alternating by media id, bi-prediction averaging,
-        #     POC display reordering), all closed-form exact.
-        # pixel_sum = decoded luma sum (plus chroma for the PCM leg).
-        h264_docs = (
-            _t(spark, sf, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") < 80)
-        )
-
-        def h264_decode(batches):
-            import numpy as np  # noqa: PLC0415
-            import pandas as pd  # noqa: PLC0415
-
-            from markdown_lab_spark.functions import h264 as h264mod  # noqa: PLC0415
-
-            for pdf in batches:
-                rows = []
-                for i in pdf["doc_id"]:
-                    i = int(i)
-                    w_, h_ = 32 + 16 * (i % 2), 32
-
-                    def colr(t):
-                        return (
-                            (i * 31 + t * 17) % 256,
-                            (i * 13 + t * 7) % 256,
-                            (i * 29 + t * 3) % 256,
-                        )
-
-                    variant = i % 3
-                    if variant == 2:
-                        # I-P-B GOP of identical frames: P collapses to
-                        # P_Skip, B to direct-mode B_Skip — POC parsing,
-                        # two-list init, direct MV derivation (both
-                        # modes, alternating), bi-prediction averaging
-                        # and display reordering all sit on the
-                        # hash-verified path, still closed-form exact.
-                        frames = [
-                            np.full((h_, w_, 3), colr(0), dtype=np.uint8)
-                        ] * 3
-                        bs = h264mod.encode_h264(
-                            frames, qp=28, gop=3, b_frames=1,
-                            direct_spatial=bool((i // 3) % 2))
-                    elif variant == 1:
-                        frames = [
-                            np.full((h_, w_, 3), colr(t), dtype=np.uint8)
-                            for t in range(3)
-                        ]
-                        bs = h264mod.encode_h264(frames, qp=40, pcm_every=1)
-                    else:
-                        frames = [
-                            np.full((h_, w_, 3), colr(t), dtype=np.uint8)
-                            for t in range(3)
-                        ]
-                        bs = h264mod.encode_h264(frames, qp=28)
-                    dec, (dw, dh, _) = h264mod.decode_h264(bs)
-                    if variant == 1:
-                        ps = sum(
-                            int(f[0].astype(np.int64).sum())
-                            + int(f[1].astype(np.int64).sum())
-                            + int(f[2].astype(np.int64).sum())
-                            for f in dec
-                        )
-                    else:
-                        ps = sum(int(f[0].astype(np.int64).sum()) for f in dec)
-                    rows.append(
-                        {
-                            "codec": "h264" + "ips"[variant],
-                            "media_id": i,
-                            "width": dw,
-                            "height": dh,
-                            "pixel_sum": ps,
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-        h264_leg = _spread(h264_docs).mapInPandas(
-            h264_decode,
-            "codec string, media_id long, width int, height int, "
-            "pixel_sum long",
-        ).select("codec", "media_id", "width", "height", "pixel_sum")
-
-        # MP4 leg (round-5 continuation): REAL ISO-BMFF demux under the
-        # hash gate — the box walk, stts/stsc/stsz/stco|co64 sample-table
-        # resolution, avcC parameter-set extraction and AVCC->Annex B
-        # conversion all sit on the verified path. Payloads are
-        # MP4-wrapped I_PCM H.264 (lossless, so the sum covers luma AND
-        # chroma and the oracle is the same closed JFIF form as
-        # 'h264p'); the variant grid cycles faststart/progressive box
-        # order, 1-3 samples per chunk (multi-run stsc), and
-        # co64 64-bit offsets.
-        mp4_docs = (
-            _t(spark, sf, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") < 60)
-        )
-
-        def mp4_decode(batches):
-            import numpy as np  # noqa: PLC0415
-            import pandas as pd  # noqa: PLC0415
-
-            from markdown_lab_spark.functions import h264 as h264mod  # noqa: PLC0415
-            from markdown_lab_spark.functions import mp4 as mp4mod  # noqa: PLC0415
-
-            for pdf in batches:
-                rows = []
-                for i in pdf["doc_id"]:
-                    i = int(i)
-                    w_, h_ = 32 + 16 * (i % 2), 32
-                    frames = [
-                        np.full(
-                            (h_, w_, 3),
-                            (
-                                (i * 31 + t * 17) % 256,
-                                (i * 13 + t * 7) % 256,
-                                (i * 29 + t * 3) % 256,
-                            ),
-                            dtype=np.uint8,
-                        )
-                        for t in range(2)
-                    ]
-                    payload = mp4mod.encode_mp4(
-                        frames,
-                        qp=40,
-                        gop=0,
-                        pcm_every=1,
-                        faststart=(i % 2 == 0),
-                        chunk_samples=1 + i % 3,
-                        co64=(i % 5 == 0),
-                    )
-                    info = mp4mod.parse_mp4(payload)
-                    dec, (dw, dh, _) = h264mod.decode_h264(
-                        b"".join(info["frames"])
-                    )
-                    ps = sum(
-                        int(f[0].astype(np.int64).sum())
-                        + int(f[1].astype(np.int64).sum())
-                        + int(f[2].astype(np.int64).sum())
-                        for f in dec
-                    )
-                    rows.append(
-                        {
-                            "codec": "mp4",
-                            "media_id": i,
-                            "width": dw,
-                            "height": dh,
-                            "pixel_sum": ps,
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-        mp4_leg = _spread(mp4_docs).mapInPandas(
-            mp4_decode,
-            "codec string, media_id long, width int, height int, "
-            "pixel_sum long",
-        ).select("codec", "media_id", "width", "height", "pixel_sum")
-
         # FLAC leg (round-5 continuation): REAL lossless audio decode
         # under the hash gate (functions/flac.py — frame headers with
         # UTF-8 numbers + CRC-8, CONSTANT/FIXED/LPC/VERBATIM subframes,
@@ -1464,87 +1296,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "pixel_sum long",
         ).select("codec", "media_id", "width", "height", "pixel_sum")
 
-        # wiki leg: the Wikipedia-dump ingest chain on the hash gate —
-        # a 3-page MediaWiki multistream dump built per media id and
-        # compressed by the REAL bzip2 (stdlib), decompressed by the
-        # from-scratch decoder (functions/bzip2.py), XML-parsed and
-        # wikitext-cleaned (sources/wikipedia.py); the oracle rebuilds
-        # the exact cleaned text in SQL and compares an md5-prefix
-        # bigint (the pdf-leg pattern). width = n_pages, height = text
-        # length, pages joined by formfeed.
-        wiki_docs_ids = (
-            _t(spark, sf, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") < 50)
-        )
-
-        def wiki_decode(batches):
-            import hashlib  # noqa: PLC0415
-
-            import pandas as pd  # noqa: PLC0415
-
-            from markdown_lab_spark.functions.bzip2 import (  # noqa: PLC0415
-                decode_bzip2,
-            )
-            from markdown_lab_spark.sources.wikipedia import (  # noqa: PLC0415
-                encode_wikidump,
-                parse_wikidump,
-                wikitext_to_text,
-            )
-
-            for pdf in batches:
-                rows = []
-                for i in pdf["doc_id"]:
-                    i = int(i)
-                    pages = [
-                        {
-                            "title": f"Page {i} {j}",
-                            "ns": 0,
-                            "page_id": i * 10 + j,
-                            "wikitext": (
-                                f"'''Page {i} {j}''' covers "
-                                f"[[topic {i}|t {j}]] fully.\n"
-                                f"== History ==\n* item {i} {j}\n"
-                                f"{{{{box|v={i}}}}}end"
-                            ),
-                        }
-                        for j in range(3)
-                    ]
-                    payload = encode_wikidump(pages, multistream=2)
-                    xml = decode_bzip2(payload)  # owned byte path
-                    parsed = list(parse_wikidump(xml))
-                    txt = "\f".join(
-                        wikitext_to_text(p["wikitext"]) for p in parsed
-                    )
-                    rows.append(
-                        {
-                            "codec": "wiki",
-                            "media_id": i,
-                            "width": len(parsed),
-                            "height": len(txt),
-                            "pixel_sum": int(
-                                hashlib.md5(txt.encode()).hexdigest()[:15],
-                                16,
-                            ),
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-        wiki_leg = wiki_docs_ids.mapInPandas(
-            wiki_decode,
-            "codec string, media_id long, width int, height int, "
-            "pixel_sum long",
-        ).select("codec", "media_id", "width", "height", "pixel_sum")
-
         return (
             png_leg.unionByName(gif_leg)
             .unionByName(wav_leg)
             .unionByName(pdf_leg)
-            .unionByName(h264_leg)
-            .unionByName(mp4_leg)
             .unionByName(flac_leg)
             .unionByName(zstd_leg)
-            .unionByName(wiki_leg)
         )
 
     q["q47_png_decode"] = q47_png_decode
@@ -3102,28 +2859,6 @@ def oracle_sql() -> dict[str, str]:
                  AS pixel_sum
         FROM documents WHERE doc_id < 60
         UNION ALL
-        -- wiki leg: the dump-ingest chain (real-bz2 compress ->
-        -- from-scratch bz2 decode -> XML parse -> wikitext clean) is
-        -- lossless-by-construction on this template, so the cleaned
-        -- text is rebuilt exactly in SQL and pinned by md5 prefix
-        SELECT 'wiki' AS codec, w.doc_id AS media_id,
-               CAST(3 AS INT) AS width,
-               CAST(length(w.txt) AS INT) AS height,
-               CAST(('0x' || substr(md5(w.txt), 1, 15))::UBIGINT AS BIGINT)
-                 AS pixel_sum
-        FROM (
-          SELECT doc_id,
-                 (SELECT string_agg(
-                    'Page ' || CAST(doc_id AS VARCHAR) || ' '
-                     || CAST(j.g AS VARCHAR) || ' covers t '
-                     || CAST(j.g AS VARCHAR) || ' fully.' || chr(10)
-                     || 'History' || chr(10) || 'item '
-                     || CAST(doc_id AS VARCHAR) || ' '
-                     || CAST(j.g AS VARCHAR) || chr(10) || 'end',
-                    chr(12) ORDER BY j.g)
-                  FROM generate_series(0, 2) j(g)) AS txt
-          FROM documents WHERE doc_id < 50) w
-        UNION ALL
         -- pdf leg: the extractor's output text reconstructed in closed
         -- form (pages joined by formfeed, lines by newline), pinned via
         -- an md5-prefix bigint; width = n_pages, height = text length
@@ -3152,78 +2887,6 @@ def oracle_sql() -> dict[str, str]:
             ) GROUP BY i, np, p
           ) GROUP BY i, np
         )
-        UNION ALL
-        -- h264 leg: constant-color frames decode exactly on all three
-        -- paths (intra qp28 / I_PCM / P_Skip+B_Skip GOP); the oracle
-        -- replays the JFIF RGB->YCbCr rounding in closed form. 'h264p' (PCM,
-        -- lossless) sums luma+chroma; the others sum luma.
-        SELECT codec, media_id, width, height,
-               CAST(SUM(width * height * yv
-                        + CASE WHEN codec = 'h264p'
-                               THEN (width / 2) * (height / 2) * (cbv + crv)
-                               ELSE 0 END) AS BIGINT) AS pixel_sum
-        FROM (
-          SELECT codec, media_id, width, height,
-                 CAST(FLOOR(LEAST(255.0, GREATEST(0.0,
-                   0.299 * r + 0.587 * g + 0.114 * b + 0.5))) AS BIGINT) AS yv,
-                 CAST(FLOOR(LEAST(255.0, GREATEST(0.0,
-                   128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b + 0.5)))
-                   AS BIGINT) AS cbv,
-                 CAST(FLOOR(LEAST(255.0, GREATEST(0.0,
-                   128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b + 0.5)))
-                   AS BIGINT) AS crv
-          FROM (
-            SELECT CASE d.doc_id % 3 WHEN 0 THEN 'h264i'
-                                     WHEN 1 THEN 'h264p'
-                                     ELSE 'h264s' END AS codec,
-                   d.doc_id AS media_id,
-                   CAST(32 + 16 * (d.doc_id % 2) AS INT) AS width,
-                   CAST(32 AS INT) AS height,
-                   (d.doc_id * 31 + tc.tt * 17) % 256 AS r,
-                   (d.doc_id * 13 + tc.tt * 7) % 256 AS g,
-                   (d.doc_id * 29 + tc.tt * 3) % 256 AS b
-            FROM documents d,
-                 (SELECT t.g,
-                         t.g AS tt_raw
-                  FROM generate_series(0, 2) t(g)) t0,
-                 LATERAL (SELECT CASE WHEN d.doc_id % 3 = 2 THEN 0
-                                      ELSE t0.g END AS tt) tc
-            WHERE d.doc_id < 80
-          )
-        )
-        GROUP BY codec, media_id, width, height
-        UNION ALL
-        -- mp4 leg: MP4-wrapped I_PCM H.264 through the real ISO-BMFF
-        -- demux (box walk, sample tables, avcC, AVCC->Annex B). PCM is
-        -- lossless, so the closed form is the 'h264p' JFIF replay over
-        -- the leg's 2 frames.
-        SELECT 'mp4' AS codec, media_id, width, height,
-               CAST(SUM(width * height * yv
-                        + (width / 2) * (height / 2) * (cbv + crv))
-                    AS BIGINT) AS pixel_sum
-        FROM (
-          SELECT codec, media_id, width, height,
-                 CAST(FLOOR(LEAST(255.0, GREATEST(0.0,
-                   0.299 * r + 0.587 * g + 0.114 * b + 0.5))) AS BIGINT) AS yv,
-                 CAST(FLOOR(LEAST(255.0, GREATEST(0.0,
-                   128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b + 0.5)))
-                   AS BIGINT) AS cbv,
-                 CAST(FLOOR(LEAST(255.0, GREATEST(0.0,
-                   128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b + 0.5)))
-                   AS BIGINT) AS crv
-          FROM (
-            SELECT 'mp4' AS codec,
-                   d.doc_id AS media_id,
-                   CAST(32 + 16 * (d.doc_id % 2) AS INT) AS width,
-                   CAST(32 AS INT) AS height,
-                   (d.doc_id * 31 + t.g * 17) % 256 AS r,
-                   (d.doc_id * 13 + t.g * 7) % 256 AS g,
-                   (d.doc_id * 29 + t.g * 3) % 256 AS b
-            FROM documents d, generate_series(0, 1) t(g)
-            WHERE d.doc_id < 60
-          )
-        )
-        GROUP BY codec, media_id, width, height
     """
 
     # q48: baseline-JPEG decode of block-constant grayscale images — each

@@ -2,8 +2,8 @@
 
 The last archive format public text corpora actually ship in
 (HuggingFace datasets and several CC derivatives publish
-``.jsonl.xz``); with it the owned decode family covers zstd/LZ4/
-bzip2/xz. Verification posture as always: foreign bitstreams
+``.jsonl.xz``); with it the owned decode family covers
+zstd/LZ4/xz. Verification posture as always: foreign bitstreams
 from the REAL implementations — stdlib ``lzma`` at multiple presets
 (.xz with CRC32/CRC64/SHA256 checks), plus the xz CLI
 (``tests/test_compression.py``).

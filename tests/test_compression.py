@@ -477,7 +477,6 @@ import subprocess  # noqa: E402
 
 _ZSTD_CLI = shutil.which("zstd")
 _LZ4_CLI = shutil.which("lz4")
-_BZIP2_CLI = shutil.which("bzip2")
 
 
 def _cli_roundtrip(cmd: list[str], frame: bytes) -> bytes:
@@ -519,17 +518,6 @@ def test_lz4_cli_decodes_our_frames():
     frame[-2] ^= 1
     with pytest.raises(subprocess.CalledProcessError):
         _cli_roundtrip([_LZ4_CLI, "-d", "-c"], bytes(frame))
-
-
-@pytest.mark.skipif(_BZIP2_CLI is None, reason="no bzip2 CLI")
-def test_bzip2_cli_output_decodes_through_ours():
-    from markdown_lab_spark.functions.bzip2 import decode_bzip2
-
-    data = _payload("text", 150000, seed=64)
-    comp = subprocess.run(
-        [_BZIP2_CLI, "-c", "-3"], input=data, capture_output=True, check=True
-    ).stdout
-    assert decode_bzip2(comp) == data
 
 
 # ---------------------------------------------------------------------------

@@ -23,11 +23,11 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "markdown_lab_spark"
 
 
-def _package_modules() -> dict:
+def _package_modules(root: str = ROOT) -> dict:
     """Dotted module name -> file path for every module in the package."""
     mods = {}
-    for path in glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True):
-        rel = os.path.relpath(path, ROOT)[: -len(".py")].split(os.sep)
+    for path in glob.glob(os.path.join(root, PKG, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)[: -len(".py")].split(os.sep)
         if rel[-1] == "__init__":
             rel = rel[:-1]
         mods[".".join(rel)] = path
@@ -103,11 +103,14 @@ def test_every_package_module_is_reachable_from_an_entry_point():
 #
 # A function or method counts as reached when its name appears as a NAME
 # token, or inside an identifier string (``"a.b"`` yields ``a`` and ``b``),
-# in a non-test file outside its own body. Comments and docstrings are not
-# tokens of either kind. Bodies of functions found unreached stop counting,
-# and the scan repeats until nothing new drops out. Name matching is
-# deliberately loose: a same-named call anywhere keeps a function alive, so
-# the scan misses some dead code but never flags live code.
+# in a non-test file outside its own body. A module-level function's name
+# counts only in its own module or in a file that imports that module (or
+# ``module.name``), so a dead ``f`` is not kept alive by another module's
+# live ``f``; method names still match anywhere, since a method is called
+# through an object whose type the scan does not know. Comments and
+# docstrings are not tokens of either kind. Bodies of functions found
+# unreached stop counting, and the scan repeats until nothing new drops
+# out.
 
 _IDENT = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*\Z")
 
@@ -119,7 +122,6 @@ EXEMPT = {
     f"{PKG}.plans.checks": "plan-assertion helpers for the plan-shape tests",
     f"{PKG}.errors": "typed error hierarchy; to_dict is its serialised form",
     f"{PKG}.frontier.crawler:host_rules_from_dict": "test helper that builds robots rules from a dict",
-    f"{PKG}.functions.h264:encode_h264_reconstruction": "reference reconstruction the decoder is compared against",
     f"{PKG}.functions.multimodal:native_image_backend": "reference image backend the pure-Python decoders are compared against",
     f"{PKG}.functions.jpeg:encode_jpeg_progressive": "builds progressive inputs for the JPEG decoder the image pipeline runs",
     f"{PKG}.functions.jpeg:encode_jpeg_gray12": "builds 12-bit inputs for the JPEG decoder the image pipeline runs",
@@ -135,11 +137,11 @@ EXEMPT = {
 }
 
 
-def _program_files() -> list:
-    files = sorted(glob.glob(os.path.join(ROOT, PKG, "**", "*.py"), recursive=True))
-    files += [os.path.join(ROOT, f) for f in ("__spark_entry__.py", "bench.py", "bench_extra.py")]
-    files += sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
-    files += sorted(glob.glob(os.path.join(ROOT, "scripts", "*.py")))
+def _program_files(root: str = ROOT) -> list:
+    files = sorted(glob.glob(os.path.join(root, PKG, "**", "*.py"), recursive=True))
+    files += [os.path.join(root, f) for f in ("__spark_entry__.py", "bench.py", "bench_extra.py")]
+    files += sorted(glob.glob(os.path.join(root, "perfbench", "*.py")))
+    files += sorted(glob.glob(os.path.join(root, "scripts", "*.py")))
     return files
 
 
@@ -165,13 +167,15 @@ def _exempt(module: str, qualname: str) -> bool:
     )
 
 
-def _unreached_functions() -> list:
-    mods = {path: mod for mod, path in _package_modules().items()}
+def _unreached_functions(root: str = ROOT) -> list:
+    mods = {path: mod for mod, path in _package_modules(root).items()}
     uses = {}  # name -> [(path, line)]
     defs = []  # (module, qualname, name, path, first line, last line)
-    for path in _program_files():
+    imports = {}  # path -> dotted names its import statements may load
+    for path in _program_files(root):
         with open(path, encoding="utf-8") as fh:
             src = fh.read()
+        imports[path] = _imported_names(path, mods.get(path), path.endswith("__init__.py"))
         for name, line in _name_tokens(src):
             uses.setdefault(name, []).append((path, line))
         if path not in mods:
@@ -192,12 +196,20 @@ def _unreached_functions() -> list:
                 if _exempt(mods[path], qual):
                     continue
                 defs.append((mods[path], qual, fn.name, path, fn.lineno, fn.end_lineno))
+
+    def in_scope(d, p):
+        module, qual = d[0], d[1]
+        if "." in qual or p == d[3]:
+            return True
+        return not {module, f"{module}.{qual}"}.isdisjoint(imports[p])
+
     dead = []
     while True:
         dropped = [
             d for d in defs
             if d not in dead and not any(
-                not (p == d[3] and d[4] <= line <= d[5])
+                in_scope(d, p)
+                and not (p == d[3] and d[4] <= line <= d[5])
                 and not any(p == e[3] and e[4] <= line <= e[5] for e in dead)
                 for p, line in uses.get(d[2], ())
             )
@@ -224,3 +236,17 @@ def test_every_public_function_is_reachable_from_an_entry_point():
         "functions and methods no program file uses (only tests reach them); "
         "delete them or add a reasoned EXEMPT entry: " + ", ".join(unreached)
     )
+
+
+def test_same_named_function_in_another_module_does_not_keep_one_alive(tmp_path):
+    """A dead ``a.f`` is flagged although a program file calls the live
+    ``b.f``: a module-level name counts only where its module is imported."""
+    pkg = tmp_path / PKG
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "a.py").write_text("def f():\n    return 1\n")
+    (pkg / "b.py").write_text("def f():\n    return 2\n")
+    (tmp_path / "__spark_entry__.py").write_text(f"from {PKG}.b import f\n\nf()\n")
+    for name in ("bench.py", "bench_extra.py"):
+        (tmp_path / name).write_text("")
+    assert _unreached_functions(str(tmp_path)) == [f"{PKG}.a:f"]
